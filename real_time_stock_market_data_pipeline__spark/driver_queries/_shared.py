@@ -46,6 +46,7 @@ from real_time_stock_market_data_pipeline__spark.operators import (
     text,
 )
 from real_time_stock_market_data_pipeline__spark.session import ensure_engine_conf
+from real_time_stock_market_data_pipeline__spark.sinks import run_jobs_concurrently
 from real_time_stock_market_data_pipeline__spark.sources.registry import load_table
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -112,21 +113,6 @@ def _round_sql(expr: str, n: int) -> str:
     )
 
 
-def _overlap_jobs(*thunks: Callable[[], object]) -> list[object]:
-    """Run INDEPENDENT eager Spark jobs (setup writes, bounded
-    collects) as overlapping jobs from a thread pool (optimization
-    guide §2.6: actions are only sequential because the driver calls
-    them sequentially; concurrent jobs back-fill executors freed by
-    each other's stage tails). Only for thunks with no mutual data
-    dependency — results return in argument order, first failure
-    re-raised after all settle."""
-    from real_time_stock_market_data_pipeline__spark.sinks import (
-        run_jobs_concurrently,
-    )
-
-    return run_jobs_concurrently(*thunks)
-
-
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_engine_conf(spark)
     return load_table(spark, sf_dir, "events")
@@ -157,7 +143,6 @@ __all__ = [
     "_EXSTD_WIDE",
     "_NORM",
     "_events",
-    "_overlap_jobs",
     "_round_sql",
     "_table",
     "annotations",
@@ -170,6 +155,7 @@ __all__ = [
     "metrics",
     "ohlcv",
     "relational",
+    "run_jobs_concurrently",
     "sampling",
     "similarity",
     "sketches",

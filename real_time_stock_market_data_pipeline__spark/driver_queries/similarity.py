@@ -517,7 +517,7 @@ def q_ann_recall_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # seeds=None — passing the once-computed values in removes the
     # duplicate derivation jobs (one extra ivf_centroids, one extra
     # pq_seeds) without changing a single plan literal.
-    bf_rows, mu, cents, sds = _overlap_jobs(
+    bf_rows, mu, cents, sds = run_jobs_concurrently(
         bf_plan.collect,
         lambda: similarity.bq_dim_means(embs),
         lambda: similarity.ivf_centroids(embs, similarity.IVF_CENTROIDS_N),
@@ -653,7 +653,7 @@ def q_ann_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the three at-rest index writes, which target independent temp
     # dirs) overlap as concurrent Spark jobs (guide §2.6): only the
     # cents collect must precede them (two writers consume it)
-    bf_rows, (_, seeds), _, _ = _overlap_jobs(
+    bf_rows, (_, seeds), _, _ = run_jobs_concurrently(
         bf_plan.collect,
         lambda: similarity.ivfpq_write_index(
             embs, f"{tmp}/ivfpq", centroids=cents
@@ -1248,7 +1248,7 @@ def q_stream_bq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = f"{tmp}/index"
     # two independent setup writes (prefix-half signature index,
     # stream input file) overlap as concurrent jobs (guide §2.6)
-    _overlap_jobs(
+    run_jobs_concurrently(
         lambda: similarity.bq_write_index(half_a, path, means=mu),
         lambda: half_b.coalesce(1).write.parquet(f"{tmp}/in"),
     )
@@ -1362,7 +1362,7 @@ def q_stream_contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = f"{tmp}/index"
     # two independent setup writes (prefix-half index build, stream
     # input file) overlap as concurrent jobs (guide §2.6)
-    _overlap_jobs(
+    run_jobs_concurrently(
         lambda: similarity.contrastive_write_index(
             half_a, path, centroids=cents
         ),

@@ -494,7 +494,7 @@ def q_stream_semantic_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     # check then reuses the pre-built assignment instead of
     # rebuilding it
     cents = similarity.ivf_centroids(corpus, similarity.IVF_CENTROIDS_N)
-    _overlap_jobs(
+    run_jobs_concurrently(
         lambda: pipeline.materialize_corpus_assignment(
             corpus, cents, f"{tmp}/corpus_assigned"
         ),
@@ -534,7 +534,7 @@ def q_stream_neardup_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     tmp = tempfile.mkdtemp(prefix="snd_q_")
     # two independent setup writes (corpus band index, stream input
     # file) overlap as concurrent jobs (guide §2.6)
-    _overlap_jobs(
+    run_jobs_concurrently(
         lambda: dedup.write_dedup_index(docs, f"{tmp}/corpus_bands"),
         lambda: _screen_batch(docs).coalesce(1).write.parquet(f"{tmp}/in"),
     )

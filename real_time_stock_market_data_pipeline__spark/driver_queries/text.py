@@ -1739,7 +1739,7 @@ def q_stream_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = f"{tmp}/index"
     # two independent setup writes (prefix-half index build, stream
     # input file) overlap as concurrent jobs (guide §2.6)
-    _overlap_jobs(
+    run_jobs_concurrently(
         lambda: text.bm25_write_index(half_a, path),
         lambda: half_b.coalesce(1).write.parquet(f"{tmp}/in"),
     )
@@ -1773,7 +1773,7 @@ def q_stream_curation_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = f"{tmp}/state"
     # two independent setup writes (benchmark-digest state init,
     # stream input file) overlap as concurrent jobs (guide §2.6)
-    _overlap_jobs(
+    run_jobs_concurrently(
         lambda: curation.curation_write_state(
             bench, path, min_score=0.8, min_words=30
         ),
@@ -1811,7 +1811,7 @@ def q_stream_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = f"{tmp}/index"
     # two independent setup writes (prefix-half scoring state, stream
     # input file) overlap as concurrent jobs (guide §2.6)
-    _overlap_jobs(
+    run_jobs_concurrently(
         lambda: text.dsir_write_index(half_a, path),
         lambda: half_b.coalesce(1).write.parquet(f"{tmp}/in"),
     )
@@ -1842,7 +1842,7 @@ def q_rrf_hybrid_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the two leg indexes are independent builds over disjoint inputs
     # into disjoint temp dirs: overlap the write jobs (guide §2.6)
     # instead of paying both build latencies end-to-end
-    _overlap_jobs(
+    run_jobs_concurrently(
         lambda: text.bm25_write_index(docs, f"{tmp}/bm25"),
         lambda: similarity.bq_write_index(embs, f"{tmp}/bq"),
     )

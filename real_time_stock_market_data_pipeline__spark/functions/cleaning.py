@@ -135,16 +135,3 @@ def second_truncated(ts_col: str | Column) -> Column:
 def rename_bulk(df: DataFrame, mapping: Mapping[str, str]) -> DataFrame:
     """P18: bulk column rename (`batch_data_producer.py:76-83`)."""
     return df.withColumnsRenamed(dict(mapping))
-
-
-def decimal4(col: str | Column) -> Column:
-    """Exact fixed-point view of a price column.
-
-    Large-group float sums are order-dependent and will not reproduce
-    bit-identically across engines/partitionings; summing DECIMAL(18,4)
-    is exact and associative, so plans can re-partition freely at 100 TB
-    without changing results. Inputs here carry ≤2 decimals, so the cast
-    itself is lossless.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    return c.cast("decimal(18,4)")

@@ -78,8 +78,6 @@ def curation_write_state(
                 # live ID_HASH_BUCKETS constant), so raising the
                 # default later cannot desync prior-hash partition
                 # pruning from the directories already on disk
-                # (round-14 ADVICE; same sidecar discipline as
-                # bm25's dl_buckets / bq's n_buckets)
                 "hb_buckets": int(
                     ID_HASH_BUCKETS if hb_buckets is None else hb_buckets
                 ),

@@ -127,55 +127,6 @@ def shingles(text_col: str = "text", k: int = 3) -> F.Column:
     return F.array_distinct(joined)
 
 
-def shingle_hashes(shingle_col: F.Column) -> F.Column:
-    """array<long>: 32-bit base hash per shingle — first 8 hex chars of
-    md5, decoded. One md5 per shingle total; the r02 design re-hashed
-    every shingle once *per permutation* (16× the md5 calls, all in
-    interpreted higher-order-function evaluation — the dominant cost at
-    bench time)."""
-    return F.transform(
-        shingle_col,
-        lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long"),
-    )
-
-
-def minhash_signature(shingle_col: F.Column, perms: int = MINHASH_PERMS) -> F.Column:
-    """Portable MinHash signature (array<long>, length ``perms``):
-    permutation *i* = min over shingles of (a_i*h + b_i) mod P on the
-    32-bit base hash. Integer arithmetic only — replayable exactly in
-    any SQL engine (the DuckDB oracle decodes the same md5 prefix with
-    nibble arithmetic).
-
-    NB: permutation lambdas must be **single-argument** — a two-arg
-    lambda makes PySpark's ``transform`` pass the element index as the
-    second argument, silently clobbering the closure (the r02
-    implementation had exactly that bug).
-    """
-    return minhash_signature_from_hashes(shingle_hashes(shingle_col), perms)
-
-
-def minhash_signature_from_hashes(
-    hash_col: F.Column, perms: int = MINHASH_PERMS
-) -> F.Column:
-    """Signature from a *materialized* array<long> of shingle hashes.
-
-    Keep the base-hash array in its own projection before calling this:
-    the 16 permutation lambdas each reference it, and if the md5
-    transform were inlined here it would be evaluated once per
-    permutation (CollapseProject leaves multi-referenced non-cheap
-    expressions alone, which is exactly what we rely on)."""
-
-    def perm(a: int, b: int):
-        return lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(MINHASH_P)
-
-    return F.array(
-        *[
-            F.array_min(F.transform(hash_col, perm(MINHASH_A[i], MINHASH_B[i])))
-            for i in range(perms)
-        ]
-    )
-
-
 def minhash_signature_frame(
     docs: DataFrame,
     id_col: str = "doc_id",

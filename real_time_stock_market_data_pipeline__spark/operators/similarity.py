@@ -2713,10 +2713,9 @@ def bq_topk(
 
 
 def _bq_meta_path(path: str) -> str:
-    """Sidecar lives NEXT TO the index directory (not inside): the
-    streaming maintenance MERGE rewrites bucket directories under the
-    root (and historically swapped the whole flat directory), and a
-    sibling file survives every rewrite."""
+    """Sidecar lives NEXT TO the index directory (not inside), so a
+    sibling file survives every rewrite of the directory (compaction
+    swaps, rebuilds)."""
     return path.rstrip("/") + "._bq_meta.json"
 
 
@@ -2780,7 +2779,7 @@ def bq_write_index(
         .parquet(path)
     )
     with open(_bq_meta_path(path), "w") as f:
-        json.dump({"means": mu, "layout": "bp", "id_col": id_col}, f)
+        json.dump({"means": mu, "id_col": id_col}, f)
     return mu
 
 
@@ -3082,9 +3081,7 @@ def contrastive_write_index(
     # streaming ingest APPENDS each batch as fresh bp subpartitions —
     # O(batch) writes with nothing stored read back (ids are new every
     # batch), replay overwrites its own partitions. Same nested-prune
-    # -key discipline as the curation state's hb=*/bp=*; legacy
-    # cell-only indexes (sidecar without `layout`) keep the
-    # cell-scoped MERGE.
+    # -key discipline as the curation state's hb=*/bp=*.
     (
         embs.select(
             F.col(id_col),
@@ -3105,7 +3102,6 @@ def contrastive_write_index(
                 "id_col": id_col,
                 "label_col": label_col,
                 "vec_col": vec_col,
-                "layout": "cell_bp",
             },
             f,
         )

@@ -108,9 +108,10 @@ def lang_id(
     matches at all."""
     toks = _toks(text_col)
 
-    # single-arg closure, NOT `lambda t, ws=...:` — a two-parameter
-    # lambda makes transform/filter pass the element index as the
-    # second argument (see operators.dedup.minhash_signature)
+    # single-arg closure, NOT `lambda t, ws=...:` — PySpark inspects
+    # the lambda's arity, and for a two-parameter lambda
+    # transform/filter pass the element INDEX as the second argument,
+    # silently replacing the `ws` default with 0, 1, 2, ...
     def _hits(words: list[str]):
         return lambda t: t.isin(*words)
 
@@ -1677,9 +1678,7 @@ def bm25_write_index(
     # this replaces (a uniformly-hashed crawl batch touches ALL
     # buckets, so the bucketed MERGE re-read O(index) per batch). The
     # probe reads every partition either way — the scan side is
-    # unaffected. Sidecar `dl_layout`/`stat_layout` record the choice;
-    # the ingest service falls back to the legacy bucketed/flat MERGE
-    # paths on sidecars without them.
+    # unaffected.
     dls = bm25_doclens(docs, id_col, text_col)
     bp = F.lit(-1).cast("long").alias("bp")
     # corpus stats as per-batch partials (batch_id -1 = the base
@@ -1715,13 +1714,7 @@ def bm25_write_index(
     )
     with open(os.path.join(path, _BM25_META_SIDECAR), "w") as f:
         json.dump(
-            {
-                "n_buckets": n_buckets,
-                "id_col": id_col,
-                "dl_layout": "bp",
-                "stat_layout": "bp",
-            },
-            f,
+            {"n_buckets": n_buckets, "id_col": id_col}, f
         )
 
 

@@ -1,7 +1,6 @@
-"""Physical-plan inspection helpers: the properties worth asserting
-before trusting a plan at 100 TB — no cartesian blowups, dims
-broadcast, filters/partitions pushed to the scan. Used by the test
-suite and handy interactively (`explain`-driven development)."""
+"""Physical-plan inspection helpers: the property worth asserting
+before trusting a plan at 100 TB — no cartesian blowups. Used by the
+test suite and handy interactively (`explain`-driven development)."""
 
 from __future__ import annotations
 
@@ -21,27 +20,3 @@ def assert_no_cartesian(df: DataFrame) -> None:
     ]
     if bad:
         raise AssertionError(f"plan contains {bad}:\n{plan}")
-
-
-def assert_broadcast_join(df: DataFrame, at_least: int = 1) -> None:
-    plan = physical_plan(df)
-    n = plan.count("BroadcastHashJoin")
-    if n < at_least:
-        raise AssertionError(
-            f"expected >= {at_least} BroadcastHashJoin, found {n}:\n{plan}"
-        )
-
-
-def pushed_filters(df: DataFrame) -> str:
-    """The scan's PushedFilters segment ('' if none)."""
-    plan = physical_plan(df)
-    if "PushedFilters" not in plan:
-        return ""
-    return plan.split("PushedFilters")[1][:300]
-
-
-def partition_filters(df: DataFrame) -> str:
-    plan = physical_plan(df)
-    if "PartitionFilters" not in plan:
-        return ""
-    return plan.split("PartitionFilters")[1][:300]

@@ -141,11 +141,3 @@ REGISTRY: dict[str, T.StructType] = {
     "embeddings": EMBEDDINGS,
     "media": MEDIA,
 }
-
-
-def require_columns(df, required: list[str], dataset: str = "<df>") -> None:
-    """Schema assertion replacing the reference's ad-hoc set-difference
-    check (`realtime_load_to_snowflake.py:165-174`)."""
-    missing = [c for c in required if c not in df.columns]
-    if missing:
-        raise ValueError(f"{dataset}: missing required columns {missing}; has {df.columns}")

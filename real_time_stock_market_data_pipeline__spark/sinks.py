@@ -176,27 +176,6 @@ def input_ready(spark: SparkSession, path: str) -> bool:
         return False
 
 
-def stored_columns(spark: SparkSession, path: str) -> list[str] | None:
-    """Columns of the parquet table at ``path``, or ``None`` when the
-    table is genuinely ABSENT (no directory, or no parquet file under
-    it). Any OTHER read failure re-raises — the layout-resolution call
-    sites (streaming/pipeline.py) default ``None`` to the new bp
-    layout, and treating a transient error on an existing LEGACY
-    table as "absent" would write ``bp=`` subdirectories into a
-    flat/cell/pfx layout, mixing partition depths and breaking every
-    subsequent whole-table read (round-15 ADVICE)."""
-    if not os.path.isdir(path):
-        return None
-    has_parquet = any(
-        f.endswith(".parquet")
-        for _, _, files in os.walk(path)
-        for f in files
-    )
-    if not has_parquet:
-        return None
-    return spark.read.parquet(path).columns
-
-
 def with_row_observation(df: DataFrame, name: str = "metrics") -> DataFrame:
     """A6: row-count/valid-count probe via ``df.observe`` — the
     plan-embedded replacement for the reference's double ``count()``
@@ -474,34 +453,47 @@ def committed_batch_watermark(checkpoint_dir: str) -> int | None:
 
 
 def check_bp_checkpoint_coherent(path: str, checkpoint_dir: str) -> None:
-    """Fail fast on the bp-append layout's one operational trap
-    (round-15 ADVICE): a batch-partition table and its stream's
-    checkpoint are A UNIT. Pointing a FRESH checkpoint at an existing
-    bp table restarts batch ids at 0, and dynamic partition overwrite
-    then silently clobbers the prior run's ``bp=0..N`` partitions —
-    the MERGE layouts this replaced tolerated checkpoint recreation;
-    this layout must refuse it.
+    """Wiring-time refusal of the two table states a streaming ingest
+    service cannot write into (called once per side table):
 
-    Called at service wiring: raises when the checkpoint has no
-    committed batches but the table (flat or nested one level, e.g.
-    ``cell=*/bp=*``) already holds ``bp>=0`` partitions. The fix is to
-    fold history into the base partition first —
-    ``compact_batch_partitions(..., upto_bp=<old checkpoint's
-    committed_batch_watermark>)`` — after which ``bp=-1`` can never
-    collide with a new run's ids.
+    - a table that holds parquet data but no ``bp=`` partition, flat
+      or nested one level (e.g. ``cell=*/bp=*``): the ``bp=<batch_id>``
+      append is the only side-table layout, and appending ``bp``
+      directories to a flat or prune-key-only table would mix
+      partition depths. Rebuild such a table with the service's
+      ``*_write_index`` builder (or drain into a fresh path).
+    - a batch-partition table paired with a FRESH checkpoint: the
+      table and its stream's checkpoint are A UNIT. A fresh checkpoint
+      restarts batch ids at 0, and dynamic partition overwrite would
+      then silently clobber the prior run's ``bp=0..N`` partitions.
+      The fix is to fold history into the base partition first —
+      ``compact_batch_partitions(..., upto_bp=<old checkpoint's
+      committed_batch_watermark>)`` — after which ``bp=-1`` can never
+      collide with a new run's ids.
     """
     import glob
 
-    if committed_batch_watermark(checkpoint_dir) is not None:
-        return
     if not os.path.isdir(path):
         return
-    live = [
+    bp_dirs = [
         d
         for pat in ("bp=*", "*/bp=*")
         for d in glob.glob(os.path.join(path, pat))
-        if os.path.isdir(d) and not d.endswith("bp=-1")
+        if os.path.isdir(d)
     ]
+    if not bp_dirs and any(
+        f.endswith(".parquet") for _, _, files in os.walk(path) for f in files
+    ):
+        raise ValueError(
+            f"side table {path} holds data but no bp=<batch_id> "
+            "partition: it predates the batch-partition layout, the only "
+            "one the streaming ingest services write. Rebuild it with "
+            "the service's *_write_index builder (or drain into a fresh "
+            "path)."
+        )
+    if committed_batch_watermark(checkpoint_dir) is not None:
+        return
+    live = [d for d in bp_dirs if not d.endswith("bp=-1")]
     if live:
         raise ValueError(
             f"batch-partition table {path} holds {len(live)} bp>=0 "

@@ -39,8 +39,15 @@ from real_time_stock_market_data_pipeline__spark.operators.metrics import (
     realtime_metrics,
 )
 from real_time_stock_market_data_pipeline__spark.sinks import (
+    append_batch_partition,
+    check_bp_checkpoint_coherent,
+    committed_batch_watermark,
+    compact_batch_partitions,
+    id_hash_bucket,
+    input_ready,
     merge_upsert_parquet,
     merge_upsert_parquet_partitioned,
+    run_jobs_concurrently,
 )
 
 #: Reference constants (`spark_stream_processor.py:162,249`)
@@ -119,19 +126,19 @@ def _start_foreach_batch(
     return writer.start()
 
 
-def _check_bp_tables(checkpoint_path: str, paths: list[str]) -> None:
-    """Wiring-time guard shared by the bp-append services: each listed
-    table and the stream's checkpoint are a unit (round-15 ADVICE) —
-    a FRESH checkpoint restarts batch ids at 0 and dynamic overwrite
-    would clobber an existing table's ``bp=0..N`` partitions, so
-    refuse that wiring up front (see
-    :func:`sinks.check_bp_checkpoint_coherent`)."""
-    from real_time_stock_market_data_pipeline__spark.sinks import (
-        check_bp_checkpoint_coherent,
-    )
-
-    for p in paths:
-        check_bp_checkpoint_coherent(p, checkpoint_path)
+def _check_bp_tables(
+    checkpoint_path: str, tables: list[tuple[str, str | None]]
+) -> None:
+    """Wiring-time guard shared by the ingest services, over the same
+    ``[(path, prune_col)]`` list :func:`_maybe_compact_bp` folds. The
+    ``bp=<batch_id>`` append is the only side-table layout, so a table
+    that holds data without ``bp`` partitions is refused; and each
+    table and the stream's checkpoint are a unit — a FRESH checkpoint
+    restarts batch ids at 0 and dynamic overwrite would clobber an
+    existing table's ``bp=0..N`` partitions. Both checks live in
+    :func:`sinks.check_bp_checkpoint_coherent`."""
+    for path, _ in tables:
+        check_bp_checkpoint_coherent(path, checkpoint_path)
 
 
 def _maybe_compact_bp(
@@ -154,38 +161,11 @@ def _maybe_compact_bp(
     flat ``bp=*`` layouts."""
     if not compact_every or (int(batch_id) + 1) % int(compact_every) != 0:
         return
-    from real_time_stock_market_data_pipeline__spark.sinks import (
-        committed_batch_watermark,
-        compact_batch_partitions,
-    )
-
     wm = committed_batch_watermark(checkpoint_path)
     if wm is None:
         return
     for path, prune in tables:
         compact_batch_partitions(spark, path, upto_bp=wm, prune_col=prune)
-
-
-def _run_sinks_concurrently(*thunks) -> list:
-    """Run a micro-batch's INDEPENDENT eager actions (table writes,
-    bounded collects, localCheckpoints) as overlapping Spark jobs
-    (guide §2.6: actions are only sequential because the driver calls
-    them sequentially; concurrent jobs back-fill executors freed by
-    each other's stage tails — the multi-sink services previously
-    paid each sink's full commit latency end-to-end). Safe for writes
-    because every sink here targets its OWN table and is
-    replay-idempotent (bp layout: a replayed batch overwrites its own
-    partitions; MERGE layouts: keyed upsert), so a crash leaving an
-    arbitrary SUBSET of sinks written converges on replay exactly
-    like the sequential crash-between-sinks case the recovery tests
-    pin. Results return in argument order; the first failure
-    propagates after all submitted jobs settle (no orphaned in-flight
-    job keeps writing while the batch errors out)."""
-    from real_time_stock_market_data_pipeline__spark.sinks import (
-        run_jobs_concurrently,
-    )
-
-    return run_jobs_concurrently(*thunks)
 
 
 def read_file_stream(
@@ -458,7 +438,6 @@ def stream_semantic_screen(
     trigger_seconds: int = DEFAULT_TRIGGER_SECONDS,
     corpus_assigned_path: str | None = None,
     compact_every: int | None = None,
-    compact_min_files: int = 8,
 ) -> StreamingQuery:
     """Streaming semantic-dedup ingestion — the crawl-time twin of
     :func:`operators.similarity.semantic_dedup_incremental`: each
@@ -473,9 +452,7 @@ def stream_semantic_screen(
     so a replayed batch would otherwise self-kill against its first
     attempt's rows; with the exclusion it sees exactly what the
     original attempt saw and overwrites its partition bit-identically
-    (the T10 contract, realized as layout). A pre-existing cell-only
-    index keeps the round-9 cell-scoped MERGE, detected from the
-    stored schema.
+    (the T10 contract, realized as layout).
 
     The index stores the full :func:`_semantic_assign` shape
     ``(id, _v, _n, cell, centroid_sim)`` so later batches screen
@@ -507,29 +484,22 @@ def stream_semantic_screen(
     drain per file) the order is deterministic and the result equals
     the batch operator on the same split — the oracle contract.
 
-    ``compact_every=N`` runs index compaction after every N-th
-    micro-batch. On the bp layout that is
-    :func:`sinks.compact_batch_partitions`: the append sink accretes
-    one ``bp`` subpartition per batch per touched cell, and the
-    compactor folds the checkpoint-COMMITTED prefix (batches
-    ``<= batch_id - 1`` — committed by the time this batch runs) into
-    the base partition, so long-run directory counts stay bounded
-    without breaking replay (this batch's own partition is never
-    folded). On a legacy cell-only index it is the round-11
-    :func:`sinks.compact_partitioned_cells` with ``compact_min_files``
-    as before (that MERGE sink self-bounds per write, so compaction
-    there only guards multi-task writes). Either way rows are
-    verified unchanged and results/restart idempotence are unaffected
+    ``compact_every=N`` runs :func:`sinks.compact_batch_partitions`
+    after every N-th micro-batch: the append sink accretes one ``bp``
+    subpartition per batch per touched cell, and the compactor folds
+    the checkpoint-COMMITTED prefix (batches ``<= batch_id - 1`` —
+    committed by the time this batch runs) into the base partition,
+    so long-run directory counts stay bounded without breaking replay
+    (this batch's own partition is never folded). Rows are verified
+    unchanged and results/restart idempotence are unaffected
     (test-asserted).
     """
     from real_time_stock_market_data_pipeline__spark.operators import (
         similarity,
     )
-    from real_time_stock_market_data_pipeline__spark.sinks import (
-        append_batch_partition,
-        input_ready,
-    )
 
+    tables = [(index_path, "cell")]
+    _check_bp_tables(checkpoint_path, tables)
     spark = source.sparkSession
     cents = similarity._resolve_centroids(
         centroids,
@@ -558,25 +528,6 @@ def stream_semantic_screen(
         if corpus_assigned_path is not None
         else similarity._semantic_assign(corpus, cents, vec_col, id_col)
     )
-
-    # index layout, fixed at wiring time from the stored schema: NEW
-    # indexes nest bp=<batch_id> inside the cell partitions (round-15:
-    # kept ids are new every batch, so the write APPENDS a fresh
-    # subpartition — O(batch), nothing stored rewritten — while the
-    # cell stays the screen's prune key); a pre-existing cell-only
-    # index keeps the round-9 cell-scoped MERGE (partition depth
-    # cannot change mid-table). stored_columns (not a bare
-    # try/except) so a transient read failure on an existing legacy
-    # index re-raises instead of silently selecting the bp layout
-    # (round-15 ADVICE).
-    from real_time_stock_market_data_pipeline__spark.sinks import (
-        stored_columns,
-    )
-
-    icols = stored_columns(spark, index_path)
-    index_layout = "cell_bp" if icols is None or "bp" in icols else "cell"
-    if index_layout == "cell_bp":
-        _check_bp_tables(checkpoint_path, [index_path])
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
         # materialize the batch's assignment ONCE (round 17, guide
@@ -608,19 +559,16 @@ def stream_semantic_screen(
         else:
             base = corpus_assigned.filter(F.col("cell").isin(touched))
         if input_ready(spark, index_path):
+            # exclude THIS batch's own partition: the screen has no
+            # owner-id guard, so on a checkpoint replay the first
+            # attempt's kept rows (already at bp=batch_id) would
+            # self-kill their re-arrivals and the overwrite would
+            # shrink the index. Filtering it out makes the replay see
+            # what the original attempt saw and rewrite its partition
+            # bit-identically.
             idx = spark.read.parquet(index_path).filter(
-                F.col("cell").isin(touched)
+                F.col("cell").isin(touched) & (F.col("bp") != int(batch_id))
             )
-            if index_layout == "cell_bp":
-                # exclude THIS batch's own partition: the screen has
-                # no owner-id guard, so on a checkpoint replay the
-                # first attempt's kept rows (already at bp=batch_id)
-                # would self-kill their re-arrivals and the overwrite
-                # would shrink the index. The bp column is exactly the
-                # provenance the MERGE layout lacked — filtering it
-                # out makes the replay see what the original attempt
-                # saw and rewrite its partition bit-identically.
-                idx = idx.filter(F.col("bp") != int(batch_id))
             base = base.unionByName(idx.select(*an.columns))
         # materialize the stage-1 corpus-screen survivors before the
         # intra-batch dominance prune (round 17): _dominance_prune
@@ -637,45 +585,23 @@ def stream_semantic_screen(
         ).localCheckpoint(eager=True)
         kept = similarity._dominance_prune(surv, threshold, id_col)
         kept_full = an.join(kept.select(id_col), id_col, "left_semi")
-        if index_layout == "cell_bp":
-            # batch-partition append nested under the prune key: only
-            # this batch's rows are written, nothing stored is read
-            # back — O(batch) ingest (the DSIR-sink discipline)
-            append_batch_partition(
-                kept_full.withColumn(
-                    "bp", F.lit(int(batch_id)).cast("long")
-                ),
-                index_path,
-                ["cell", "bp"],
-                coherence_col="cell",
-                coherence_width=len(touched),
-            )
-        else:
-            # legacy cell-partitioned upsert: only the cells this
-            # batch touches are read and rewritten (round-9 ADVICE; on
-            # Delta/Iceberg this is a MERGE INTO on the same layout)
-            merge_upsert_parquet_partitioned(
-                spark, kept_full, index_path, keys=[id_col],
-                partition_col="cell",
-            )
-        if index_layout == "cell_bp":
-            # upto_bp comes from the checkpoint's own commits log
-            # (committed_batch_watermark = batch_id-1 here), so only
-            # committed batches fold and this batch's own bp partition
-            # is never touched — the replay contract holds.
-            _maybe_compact_bp(
-                spark, batch_id, compact_every, checkpoint_path,
-                [(index_path, "cell")],
-            )
-        elif compact_every and (batch_id + 1) % compact_every == 0:
-            from real_time_stock_market_data_pipeline__spark.sinks import (
-                compact_partitioned_cells,
-            )
-
-            compact_partitioned_cells(
-                spark, index_path, partition_col="cell",
-                min_files=compact_min_files,
-            )
+        # batch-partition append nested under the prune key: only
+        # this batch's rows are written, nothing stored is read back —
+        # O(batch) ingest (the DSIR-sink discipline)
+        append_batch_partition(
+            kept_full.withColumn("bp", F.lit(int(batch_id)).cast("long")),
+            index_path,
+            ["cell", "bp"],
+            coherence_col="cell",
+            coherence_width=len(touched),
+        )
+        # upto_bp comes from the checkpoint's own commits log
+        # (committed_batch_watermark = batch_id-1 here), so only
+        # committed batches fold and this batch's own bp partition is
+        # never touched — the replay contract holds.
+        _maybe_compact_bp(
+            spark, batch_id, compact_every, checkpoint_path, tables
+        )
 
     return _start_foreach_batch(
         source, process_batch, checkpoint_path, available_now, trigger_seconds
@@ -748,9 +674,7 @@ def stream_substring_ingest(
     digests — unseen by construction, hence NEW keys — APPENDED to the
     index under ``pfx=<2-hex digest prefix>/bp=<batch_id>`` (the
     ``write_block_index(partitioned=True)`` layout — REQUIRED here),
-    so the next batch screens against everything before it. Legacy
-    pfx-only indexes and flat doc tables keep their round-13 MERGE
-    paths, detected from the stored schemas at wiring time.
+    so the next batch screens against everything before it.
 
     Invariant (tested): after draining batches B1..Bn over an index
     built from corpus C, the index holds exactly the distinct block
@@ -767,8 +691,8 @@ def stream_substring_ingest(
     — the stored corpus text is never re-read, and nothing stored is
     read back for the writes.
 
-    Table + checkpoint are a unit on the bp layout (fail-fast at
-    wiring; see :func:`sinks.check_bp_checkpoint_coherent`), and
+    Tables + checkpoint are a unit (fail-fast at wiring; see
+    :func:`sinks.check_bp_checkpoint_coherent`), and
     ``compact_every=N`` folds both tables' checkpoint-committed ``bp``
     partitions into their base every N batches
     (:func:`_maybe_compact_bp`) so long-run directory counts stay
@@ -776,40 +700,17 @@ def stream_substring_ingest(
     from real_time_stock_market_data_pipeline__spark.operators import (
         dedup as dedup_ops,
     )
-    from real_time_stock_market_data_pipeline__spark.sinks import (
-        append_batch_partition,
-        merge_upsert_parquet,
-        merge_upsert_parquet_partitioned,
-    )
 
-    # layout resolution, fixed at wiring time from the stored schemas
-    # (round-15): a batch's KEPT digests are unseen by construction
-    # (the screen keeps only index-absent blocks) and the rewritten
-    # docs carry new ids, so BOTH sinks qualify for the bp=<batch_id>
-    # append — O(batch) writes with nothing stored read back for the
-    # write, where the pfx-scoped MERGE rewrote every touched prefix
-    # directory (a uniform batch touches all 256). Replay stays
-    # idempotent WITHOUT excluding the batch's own partition: the
-    # provenance rule in dedup._substring_screen re-qualifies
-    # self-stored digests, so a replay recomputes the identical
-    # flagged frame and overwrites both bp partitions bit-identically.
-    # Pre-existing pfx-only indexes / flat doc tables keep their
-    # MERGE paths.
-    spark0 = source.sparkSession
-
-    from real_time_stock_market_data_pipeline__spark.sinks import (
-        stored_columns,
-    )
-
-    icols = stored_columns(spark0, index_path)
-    index_layout = "bp" if icols is None or "bp" in icols else "pfx"
-    dcols = stored_columns(spark0, out_path)
-    docs_layout = "bp" if dcols is None or "bp" in dcols else "flat"
-    _check_bp_tables(
-        checkpoint_path,
-        ([index_path] if index_layout == "bp" else [])
-        + ([out_path] if docs_layout == "bp" else []),
-    )
+    # a batch's KEPT digests are unseen by construction (the screen
+    # keeps only index-absent blocks) and the rewritten docs carry new
+    # ids, so BOTH sinks are bp=<batch_id> appends — O(batch) writes
+    # with nothing stored read back. Replay stays idempotent WITHOUT
+    # excluding the batch's own partition: the provenance rule in
+    # dedup._substring_screen re-qualifies self-stored digests, so a
+    # replay recomputes the identical flagged frame and overwrites
+    # both bp partitions bit-identically.
+    tables = [(index_path, "pfx"), (out_path, None)]
+    _check_bp_tables(checkpoint_path, tables)
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
@@ -818,14 +719,11 @@ def stream_substring_ingest(
             batch, idx, id_col, text_col, n_words
         ).localCheckpoint(eager=True)  # two consumers below
         rebuilt = dedup_ops._rebuild_docs(flagged, id_col, emit_text=True)
-        if docs_layout == "bp":
-            append_batch_partition(
-                rebuilt.withColumn("bp", F.lit(int(batch_id)).cast("long")),
-                out_path,
-                ["bp"],
-            )
-        else:
-            merge_upsert_parquet(spark, rebuilt, out_path, keys=[id_col])
+        append_batch_partition(
+            rebuilt.withColumn("bp", F.lit(int(batch_id)).cast("long")),
+            out_path,
+            ["bp"],
+        )
         # kept rows are unique per digest (rn=1), so this carries each
         # new digest ONCE with its provenance — the (id, pos) that a
         # replay must recognize as "stored by me" (see
@@ -840,25 +738,15 @@ def stream_substring_ingest(
                 "pfx"
             ),
         )
-        if index_layout == "bp":
-            append_batch_partition(
-                new_digests.withColumn(
-                    "bp", F.lit(int(batch_id)).cast("long")
-                ),
-                index_path,
-                ["pfx", "bp"],
-                coherence_col="pfx",
-                coherence_width=256,  # 2-hex pfx domain
-            )
-        else:
-            merge_upsert_parquet_partitioned(
-                spark, new_digests, index_path, keys=["block_md5"],
-                partition_col="pfx",
-            )
+        append_batch_partition(
+            new_digests.withColumn("bp", F.lit(int(batch_id)).cast("long")),
+            index_path,
+            ["pfx", "bp"],
+            coherence_col="pfx",
+            coherence_width=256,  # 2-hex pfx domain
+        )
         _maybe_compact_bp(
-            spark, batch_id, compact_every, checkpoint_path,
-            ([(index_path, "pfx")] if index_layout == "bp" else [])
-            + ([(out_path, None)] if docs_layout == "bp" else []),
+            spark, batch_id, compact_every, checkpoint_path, tables
         )
 
     return _start_foreach_batch(
@@ -890,10 +778,7 @@ def stream_neardup_ingest(
     ``pfx=<2-hex band-hash prefix>/bp=<batch_id>`` (the prefix stays
     the prune key for the prior-band read; the batch partition makes
     the write O(batch) — nothing stored is ever read back, the
-    measured DSIR-sink discipline). Pre-existing tables keep the
-    layout they were created with — legacy flat or ``vb``-bucketed
-    verdict logs and ``pfx``-only band indexes fall back to their
-    MERGE paths, detected from the stored schema at wiring time.
+    measured DSIR-sink discipline).
 
     Every arrival's bands enter history — kept or not — so draining
     B1..Bn equals one :func:`operators.dedup.neardup_screen` of their
@@ -901,17 +786,16 @@ def stream_neardup_ingest(
     the screen makes checkpoint replay self-provenance-safe: a
     replayed batch finds its own bands already stored but cannot be
     killed by them, and both sinks re-land idempotently — the bp
-    partitions overwrite themselves, the legacy MERGEs re-upsert
-    (the T10 contract).
+    partitions overwrite themselves (the T10 contract).
 
     Requires the single-file-per-drain / monotone-id arrival contract
     shared by the other ingest services: ids must not decrease across
     batches, or "earlier arrival" and "lower id" diverge.
 
-    Table + checkpoint are a unit on the bp layouts (fail-fast at
-    wiring; see :func:`sinks.check_bp_checkpoint_coherent`);
-    ``compact_every=N`` folds the committed ``bp`` partitions of both
-    growing tables every N batches (:func:`_maybe_compact_bp`).
+    Tables + checkpoint are a unit (fail-fast at wiring; see
+    :func:`sinks.check_bp_checkpoint_coherent`); ``compact_every=N``
+    folds the committed ``bp`` partitions of both growing tables
+    every N batches (:func:`_maybe_compact_bp`).
 
     Scale per batch: band(new) + two band-key equi-joins against
     partition-scoped parquet + two batch-partition appends — the
@@ -920,41 +804,14 @@ def stream_neardup_ingest(
     from real_time_stock_market_data_pipeline__spark.operators import (
         dedup as dedup_ops,
     )
-    from real_time_stock_market_data_pipeline__spark.sinks import (
-        append_batch_partition,
-        id_hash_bucket,
-        input_ready,
-        merge_upsert_parquet,
-        merge_upsert_parquet_partitioned,
-    )
 
-    # layout resolution, fixed at wiring time from the STORED schema
-    # (this table has no sidecar): NEW verdict/band tables use the
-    # bp=<batch_id> batch-partition append (both tables' keys — doc
-    # ids, (id, band_idx) — are new every batch under the monotone-id
-    # crawl contract, so nothing stored is ever read back for the
-    # write; measured 8.6x over bucketed MERGE at crawl-sized batches
-    # on the DSIR service). Pre-existing tables keep the layout they
-    # were created with — partition depth cannot change mid-table, and
-    # a legacy flat verdict log would otherwise crash on the missing
-    # partition column at the first merge (round-14 ADVICE).
-    from real_time_stock_market_data_pipeline__spark.sinks import (
-        stored_columns,
-    )
-
-    vcols = stored_columns(source.sparkSession, out_path)
-    verdict_layout = (
-        "bp"
-        if vcols is None or "bp" in vcols
-        else ("vb" if "vb" in vcols else "flat")
-    )
-    bcols = stored_columns(source.sparkSession, stream_bands_path)
-    bands_layout = "bp" if bcols is None or "bp" in bcols else "pfx"
-    _check_bp_tables(
-        checkpoint_path,
-        ([out_path] if verdict_layout == "bp" else [])
-        + ([stream_bands_path] if bands_layout == "bp" else []),
-    )
+    # both tables' keys — doc ids, (id, band_idx) — are new every
+    # batch under the monotone-id crawl contract, so both sinks are
+    # bp=<batch_id> appends and nothing stored is ever read back for
+    # the write (measured 8.6x over bucketed MERGE at crawl-sized
+    # batches on the DSIR service)
+    tables = [(out_path, None), (stream_bands_path, "pfx")]
+    _check_bp_tables(checkpoint_path, tables)
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
@@ -981,26 +838,25 @@ def stream_neardup_ingest(
         )
         prior = None
         if input_ready(spark, stream_bands_path):
-            prior = spark.read.parquet(stream_bands_path).filter(
-                F.col("pfx").isin(pfxs)
+            # replay/overlap guard: a checkpoint replay's file-index
+            # snapshot would otherwise include the failed attempt's own
+            # pfx=*/bp=<batch_id> files, which the concurrent band
+            # append delete-and-replaces mid-scan (FileNotFoundException
+            # on the verdict job). bp is a partition column so this
+            # prunes the replay target out of the scan entirely; on a
+            # normal run it is a no-op (stored bp < batch_id always,
+            # and the compaction fold bp=-1 passes). Result-preserving
+            # on replay too: prior hits require owner id strictly below
+            # the document's own, and the failed attempt's band owners
+            # are exactly this batch's ids — every self/batch-mate hit
+            # they could add is already counted via the in-batch band
+            # union.
+            prior = (
+                spark.read.parquet(stream_bands_path)
+                .filter(F.col("pfx").isin(pfxs))
+                .filter(F.col("bp") < F.lit(int(batch_id)))
+                .select(id_col, "band_idx", "band_hash")
             )
-            if bands_layout == "bp":
-                # replay/overlap guard (round-16 ADVICE): a checkpoint
-                # replay's file-index snapshot would otherwise include
-                # the failed attempt's own pfx=*/bp=<batch_id> files,
-                # which the concurrent band append delete-and-replaces
-                # mid-scan (FileNotFoundException on the verdict job).
-                # bp is a partition column so this prunes the replay
-                # target out of the scan entirely; on a normal run it
-                # is a no-op (stored bp < batch_id always, and the
-                # compaction fold bp=-1 passes). Result-preserving on
-                # replay too: prior hits require owner id strictly
-                # below the document's own, and the failed attempt's
-                # band owners are exactly this batch's ids — every
-                # self/batch-mate hit they could add is already
-                # counted via the in-batch band union.
-                prior = prior.filter(F.col("bp") < F.lit(int(batch_id)))
-            prior = prior.select(id_col, "band_idx", "band_hash")
         # new_bands already materialized above for the index append —
         # pass it through so the screen's three uses of the batch
         # bands don't re-run the MinHash pipeline (shingle explode +
@@ -1008,76 +864,32 @@ def stream_neardup_ingest(
         verdict = dedup_ops.neardup_screen_bands(
             batch, cb, prior, id_col, text_col, new_bands=new_bands
         )
-        def write_verdict() -> None:
-            if verdict_layout == "bp":
-                append_batch_partition(
-                    verdict.withColumn(
-                        "bp", F.lit(int(batch_id)).cast("long")
-                    ),
-                    out_path,
-                    ["bp"],
-                )
-            elif verdict_layout == "vb":
-                merge_upsert_parquet_partitioned(
-                    spark,
-                    verdict.withColumn(
-                        "vb", id_hash_bucket(F.col(id_col), salt="ndv:")
-                    ),
-                    out_path,
-                    keys=[id_col],
-                    partition_col="vb",
-                )
-            else:
-                merge_upsert_parquet(
-                    spark, verdict, out_path, keys=[id_col]
-                )
-
-        # letter-prefixed: see write_block_index — keeps hive
-        # partition-type inference on STRING for hex prefixes
-        banded = new_bands.withColumn(
-            "pfx", F.concat(F.lit("p"), F.substring("band_hash", 1, 2))
-        )
-
-        def write_bands() -> None:
-            if bands_layout == "bp":
-                append_batch_partition(
-                    banded.withColumn(
-                        "bp", F.lit(int(batch_id)).cast("long")
-                    ),
-                    stream_bands_path,
-                    ["pfx", "bp"],
-                    coherence_col="pfx",
-                    coherence_width=len(pfxs),
-                )
-            else:
-                merge_upsert_parquet_partitioned(
-                    spark, banded, stream_bands_path,
-                    keys=[id_col, "band_idx"], partition_col="pfx",
-                )
-
+        bp = F.lit(int(batch_id)).cast("long")
         # independent tables, replay-idempotent sinks: overlap the two
-        # write jobs (round 16, guide §2.6); crash with any subset
-        # written converges on replay exactly like the sequential
-        # crash-between-sinks case (test-pinned). EXCEPT on the legacy
-        # pfx MERGE band layout with stored history (round-16 ADVICE):
-        # there write_bands dynamic-overwrites exactly the pfx= dirs
-        # the verdict plan's prior scan is pruned to, EVERY batch —
-        # files deleted mid-scan fail the concurrent verdict job. The
-        # bp layout is overlap-safe (appends new bp dirs; the replay
-        # overwrite target is pruned out of the prior scan above).
-        if prior is not None and bands_layout != "bp":
-            write_verdict()
-            write_bands()
-        else:
-            _run_sinks_concurrently(write_verdict, write_bands)
-        _maybe_compact_bp(
-            spark, batch_id, compact_every, checkpoint_path,
-            ([(out_path, None)] if verdict_layout == "bp" else [])
-            + (
-                [(stream_bands_path, "pfx")]
-                if bands_layout == "bp"
-                else []
+        # write jobs; crash with any subset written converges on
+        # replay exactly like the sequential crash-between-sinks case
+        # (test-pinned). Overlap-safe because the band append only adds
+        # new bp dirs and the replay overwrite target is pruned out of
+        # the prior scan above.
+        run_jobs_concurrently(
+            lambda: append_batch_partition(
+                verdict.withColumn("bp", bp), out_path, ["bp"]
             ),
+            lambda: append_batch_partition(
+                # letter-prefixed: see write_block_index — keeps hive
+                # partition-type inference on STRING for hex prefixes
+                new_bands.withColumn(
+                    "pfx",
+                    F.concat(F.lit("p"), F.substring("band_hash", 1, 2)),
+                ).withColumn("bp", bp),
+                stream_bands_path,
+                ["pfx", "bp"],
+                coherence_col="pfx",
+                coherence_width=len(pfxs),
+            ),
+        )
+        _maybe_compact_bp(
+            spark, batch_id, compact_every, checkpoint_path, tables
         )
 
     return _start_foreach_batch(
@@ -1107,9 +919,7 @@ def stream_bm25_ingest(
     the same way — so corpus N/avgdl stay exact without ever
     re-scanning doclens, and a checkpoint replay overwrites its own
     bp partitions instead of double-counting (the register-merge
-    discipline of the sketch family, realized as layout). Legacy
-    bucketed/flat doclens+stats layouts keep their MERGE paths,
-    resolved from the sidecar.
+    discipline of the sketch family, realized as layout).
 
     After draining batches B1..Bn over an index built from corpus C,
     ``bm25_topk_indexed`` answers exactly like ``bm25_topk`` over
@@ -1120,21 +930,15 @@ def stream_bm25_ingest(
     dropped terms; revision is a table-format DELETE, out of scope
     for the parquet stand-in).
 
-    Table + checkpoint are a unit on the bp layouts (fail-fast at
-    wiring; see :func:`sinks.check_bp_checkpoint_coherent`);
-    ``compact_every=N`` folds doclens'/stats' committed ``bp``
-    partitions every N batches (:func:`_maybe_compact_bp`; the
-    postings MERGE sink self-bounds and needs none)."""
+    Tables + checkpoint are a unit (fail-fast at wiring; see
+    :func:`sinks.check_bp_checkpoint_coherent`); ``compact_every=N``
+    folds doclens'/stats' committed ``bp`` partitions every N batches
+    (:func:`_maybe_compact_bp`; the postings MERGE sink self-bounds
+    and needs none)."""
     import os
 
     from real_time_stock_market_data_pipeline__spark.operators import (
         text as text_ops,
-    )
-    from real_time_stock_market_data_pipeline__spark.sinks import (
-        append_batch_partition,
-        id_hash_bucket,
-        merge_upsert_parquet,
-        merge_upsert_parquet_partitioned,
     )
 
     # fail fast at wiring time if there is no index/sidecar to extend.
@@ -1147,29 +951,15 @@ def stream_bm25_ingest(
         meta = json.load(f)
     n_buckets = int(meta["n_buckets"])
     id_col = meta.get("id_col", id_col)
-    # doclens/stats layout resolves from the sidecar the index was
-    # BUILT with: new builds use the bp=<batch_id> batch-partition
-    # APPEND (document ids are new every batch, so nothing stored is
-    # ever read or rewritten — O(batch) per drain, measured 8.6x over
-    # the bucketed MERGE at crawl-sized batches on the DSIR service,
-    # whose uniformly-hashed batches touch ALL buckets); legacy
-    # round-14 bucketed indexes (`dl_buckets`/`stat_buckets`) keep
-    # their cell-scoped MERGEs, pre-round-13 flat indexes keep the
-    # whole-table swap — partition depth cannot change mid-table.
-    dl_layout = meta.get("dl_layout")
-    stat_layout = meta.get("stat_layout")
-    dl_buckets = meta.get("dl_buckets")
-    stat_buckets = meta.get("stat_buckets")
-    bp_tables: list[tuple[str, str | None]] = (
-        [(os.path.join(index_path, "doclens"), None)]
-        if dl_layout == "bp"
-        else []
-    ) + (
-        [(os.path.join(index_path, "stats"), None)]
-        if stat_layout == "bp"
-        else []
-    )
-    _check_bp_tables(checkpoint_path, [p for p, _ in bp_tables])
+    # doclens/stats are bp=<batch_id> APPENDs (document ids are new
+    # every batch, so nothing stored is ever read or rewritten —
+    # O(batch) per drain, measured 8.6x over the bucketed MERGE at
+    # crawl-sized batches on the DSIR service, whose uniformly-hashed
+    # batches touch ALL buckets)
+    doclens_path = os.path.join(index_path, "doclens")
+    stats_path = os.path.join(index_path, "stats")
+    tables = [(doclens_path, None), (stats_path, None)]
+    _check_bp_tables(checkpoint_path, tables)
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
@@ -1181,78 +971,30 @@ def stream_bm25_ingest(
         )
         dls = text_ops.bm25_doclens(batch, id_col, text_col)
         bp = F.lit(int(batch_id)).cast("long").alias("bp")
-
-        def write_postings() -> None:
-            merge_upsert_parquet_partitioned(
-                spark, postings, os.path.join(index_path, "postings"),
-                keys=["term", id_col], partition_col="term_bucket",
-                partition_width=n_buckets,
-            )
-
-        def write_doclens() -> None:
-            if dl_layout == "bp":
-                append_batch_partition(
-                    dls.select(F.col(id_col), "dl", bp),
-                    os.path.join(index_path, "doclens"),
-                    ["bp"],
-                )
-            elif dl_buckets is None:
-                merge_upsert_parquet(
-                    spark, dls, os.path.join(index_path, "doclens"),
-                    keys=[id_col],
-                )
-            else:
-                merge_upsert_parquet_partitioned(
-                    spark,
-                    dls.withColumn(
-                        "dl_bucket",
-                        id_hash_bucket(
-                            F.col(id_col), int(dl_buckets), salt="bm25dl:"
-                        ),
-                    ),
-                    os.path.join(index_path, "doclens"),
-                    keys=[id_col],
-                    partition_col="dl_bucket",
-                )
-
         partial = dls.agg(
             F.lit(int(batch_id)).cast("long").alias("batch_id"),
             F.count(F.lit(1)).alias("n_docs"),
             F.coalesce(F.sum("dl"), F.lit(0).cast("long")).alias("sum_dl"),
         )
-
-        def write_stats() -> None:
-            if stat_layout == "bp":
-                append_batch_partition(
-                    partial.select("batch_id", "n_docs", "sum_dl", bp),
-                    os.path.join(index_path, "stats"),
-                    ["bp"],
-                )
-            elif stat_buckets is None:
-                merge_upsert_parquet(
-                    spark, partial, os.path.join(index_path, "stats"),
-                    keys=["batch_id"],
-                )
-            else:
-                merge_upsert_parquet_partitioned(
-                    spark,
-                    partial.withColumn(
-                        "stat_bucket",
-                        F.pmod(
-                            F.col("batch_id"), F.lit(int(stat_buckets))
-                        ).cast("int"),
-                    ),
-                    os.path.join(index_path, "stats"),
-                    keys=["batch_id"],
-                    partition_col="stat_bucket",
-                )
-
-        # three independent tables, idempotent sinks (keyed MERGEs /
-        # bp self-overwrite): overlap the write jobs (round 16,
-        # guide §2.6)
-        _run_sinks_concurrently(write_postings, write_doclens, write_stats)
+        # three independent tables, idempotent sinks (keyed postings
+        # MERGE / bp self-overwrite): overlap the write jobs
+        run_jobs_concurrently(
+            lambda: merge_upsert_parquet_partitioned(
+                spark, postings, os.path.join(index_path, "postings"),
+                keys=["term", id_col], partition_col="term_bucket",
+                partition_width=n_buckets,
+            ),
+            lambda: append_batch_partition(
+                dls.select(F.col(id_col), "dl", bp), doclens_path, ["bp"]
+            ),
+            lambda: append_batch_partition(
+                partial.select("batch_id", "n_docs", "sum_dl", bp),
+                stats_path,
+                ["bp"],
+            ),
+        )
         _maybe_compact_bp(
-            spark, batch_id, compact_every, checkpoint_path, bp_tables
+            spark, batch_id, compact_every, checkpoint_path, tables
         )
 
     return _start_foreach_batch(
@@ -1280,13 +1022,10 @@ def stream_bq_ingest(
     O(batch) per drain with nothing stored ever read or rewritten,
     replay-idempotent by layout (the ids-are-new crawl contract; a
     replayed checkpoint batch overwrites its own partition). ``id_col``
-    and the layout resolve from the sidecar the index was BUILT with
-    (never from this signature), so a non-default build cannot
-    silently mismatch; legacy indexes keep the layout they were built
-    with — round-14 ``n_buckets`` sidecars the id-hash-bucketed MERGE,
-    pre-round-13 flat sidecars the whole-table swap. The index and
-    sidecar must already exist (fail-fast at wiring). Table +
-    checkpoint are a unit on the bp layout (fail-fast at wiring);
+    resolves from the sidecar the index was BUILT with (never from
+    this signature), so a non-default build cannot silently mismatch.
+    The index and sidecar must already exist (fail-fast at wiring).
+    Table + checkpoint are a unit (fail-fast at wiring);
     ``compact_every=N`` folds committed ``bp`` partitions every N
     batches (:func:`_maybe_compact_bp`)."""
     import json
@@ -1294,27 +1033,13 @@ def stream_bq_ingest(
     from real_time_stock_market_data_pipeline__spark.operators import (
         similarity,
     )
-    from real_time_stock_market_data_pipeline__spark.sinks import (
-        append_batch_partition,
-        id_hash_bucket,
-        merge_upsert_parquet,
-        merge_upsert_parquet_partitioned,
-    )
 
     with open(similarity._bq_meta_path(index_path)) as f:
         meta = json.load(f)
     mu = [float(x) for x in meta["means"]]
     id_col = meta.get("id_col", id_col)
-    # layout resolves from the sidecar the index was BUILT with: new
-    # builds use bp=<batch_id> batch-partition APPENDs (ids are new
-    # every batch — O(batch) per drain, nothing stored read or
-    # rewritten, replay overwrites its own partition); legacy round-14
-    # `n_buckets` sidecars keep the id-hash-bucketed MERGE, pre-13
-    # flat sidecars the whole-table swap.
-    layout = meta.get("layout")
-    n_buckets = meta.get("n_buckets")
-    if layout == "bp":
-        _check_bp_tables(checkpoint_path, [index_path])
+    tables = [(index_path, None)]
+    _check_bp_tables(checkpoint_path, tables)
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
         lanes = similarity._bq_lane_cols(vec_col, mu, len(mu))
@@ -1322,34 +1047,15 @@ def stream_bq_ingest(
             F.col(id_col),
             *[ln.alias(f"sig{i}") for i, ln in enumerate(lanes)],
         )
-        if layout == "bp":
-            append_batch_partition(
-                sig.withColumn("bp", F.lit(int(batch_id)).cast("long")),
-                index_path,
-                ["bp"],
-            )
-        elif n_buckets is None:
-            merge_upsert_parquet(
-                batch.sparkSession, sig, index_path, keys=[id_col]
-            )
-        else:
-            merge_upsert_parquet_partitioned(
-                batch.sparkSession,
-                sig.withColumn(
-                    "sig_bucket",
-                    id_hash_bucket(
-                        F.col(id_col), int(n_buckets), salt="bq:"
-                    ),
-                ),
-                index_path,
-                keys=[id_col],
-                partition_col="sig_bucket",
-            )
-        if layout == "bp":
-            _maybe_compact_bp(
-                batch.sparkSession, batch_id, compact_every,
-                checkpoint_path, [(index_path, None)],
-            )
+        append_batch_partition(
+            sig.withColumn("bp", F.lit(int(batch_id)).cast("long")),
+            index_path,
+            ["bp"],
+        )
+        _maybe_compact_bp(
+            batch.sparkSession, batch_id, compact_every,
+            checkpoint_path, tables,
+        )
 
     return _start_foreach_batch(
         source, process_batch, checkpoint_path, available_now, trigger_seconds
@@ -1374,26 +1080,20 @@ def stream_contrastive_ingest(
     nested inside the cell partitions (round-15: ids are new every
     batch under the crawl contract, so nothing stored is read back —
     O(batch) writes, the cell stays the probe's prune key, and a
-    checkpoint replay overwrites its own partitions; legacy cell-only
-    indexes keep the cell-scoped MERGE, resolved from the sidecar).
+    checkpoint replay overwrites its own partitions).
     Cell assignment is a pure function
     of (vector, frozen centroids), so draining batches B1..Bn then
     probing equals one batch ``contrastive_pairs`` over the
     concatenated corpus (law-tested: N-drain ≡ batch). Schema
     (id/label/vec column names) resolves from the sidecar the index
     was BUILT with; index and sidecar must exist (fail-fast at
-    wiring). Table + checkpoint are a unit on the bp layout
-    (fail-fast at wiring); ``compact_every=N`` folds committed ``bp``
-    subpartitions under each cell every N batches
-    (:func:`_maybe_compact_bp`)."""
+    wiring). Table + checkpoint are a unit (fail-fast at wiring);
+    ``compact_every=N`` folds committed ``bp`` subpartitions under
+    each cell every N batches (:func:`_maybe_compact_bp`)."""
     import json
 
     from real_time_stock_market_data_pipeline__spark.operators import (
         similarity,
-    )
-    from real_time_stock_market_data_pipeline__spark.sinks import (
-        append_batch_partition,
-        merge_upsert_parquet_partitioned,
     )
 
     with open(similarity._contrastive_meta_path(index_path)) as f:
@@ -1401,9 +1101,8 @@ def stream_contrastive_ingest(
     cents = [[float(x) for x in c] for c in meta["centroids"]]
     id_col, label_col = meta["id_col"], meta["label_col"]
     vec_col = meta["vec_col"]
-    layout = meta.get("layout")
-    if layout == "cell_bp":
-        _check_bp_tables(checkpoint_path, [index_path])
+    tables = [(index_path, "cell")]
+    _check_bp_tables(checkpoint_path, tables)
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
         assigned = batch.select(
@@ -1412,29 +1111,17 @@ def stream_contrastive_ingest(
             F.col(vec_col),
             similarity.ivf_assign(vec_col, cents).alias("cell"),
         )
-        if layout == "cell_bp":
-            append_batch_partition(
-                assigned.withColumn(
-                    "bp", F.lit(int(batch_id)).cast("long")
-                ),
-                index_path,
-                ["cell", "bp"],
-                coherence_col="cell",
-                coherence_width=len(cents),
-            )
-        else:
-            merge_upsert_parquet_partitioned(
-                batch.sparkSession,
-                assigned,
-                index_path,
-                keys=[id_col],
-                partition_col="cell",
-            )
-        if layout == "cell_bp":
-            _maybe_compact_bp(
-                batch.sparkSession, batch_id, compact_every,
-                checkpoint_path, [(index_path, "cell")],
-            )
+        append_batch_partition(
+            assigned.withColumn("bp", F.lit(int(batch_id)).cast("long")),
+            index_path,
+            ["cell", "bp"],
+            coherence_col="cell",
+            coherence_width=len(cents),
+        )
+        _maybe_compact_bp(
+            batch.sparkSession, batch_id, compact_every,
+            checkpoint_path, tables,
+        )
 
     return _start_foreach_batch(
         source, process_batch, checkpoint_path, available_now, trigger_seconds
@@ -1491,12 +1178,11 @@ def stream_curation_ingest(
     bucket, and a uniformly-hashed batch touches all of them). The
     digest index stores each batch's own per-hash min id; the reader
     resolves the global min, which under monotone ids is the true
-    first arrival. State tables + checkpoint are a unit on the bp
-    layout (fail-fast at wiring; see
-    :func:`sinks.check_bp_checkpoint_coherent`); ``compact_every=N``
-    folds the three growing tables' committed ``bp`` partitions every
-    N batches (:func:`_maybe_compact_bp`) so long-run directory
-    counts stay bounded."""
+    first arrival. State tables + checkpoint are a unit (fail-fast at
+    wiring; see :func:`sinks.check_bp_checkpoint_coherent`);
+    ``compact_every=N`` folds the three growing tables' committed
+    ``bp`` partitions every N batches (:func:`_maybe_compact_bp`) so
+    long-run directory counts stay bounded."""
     import json
     import os
 
@@ -1509,11 +1195,6 @@ def stream_curation_ingest(
     from real_time_stock_market_data_pipeline__spark.operators import (
         text as text_ops,
     )
-    from real_time_stock_market_data_pipeline__spark.sinks import (
-        append_batch_partition,
-        id_hash_bucket,
-        input_ready,
-    )
 
     with open(os.path.join(state_path, cur_ops._CURATION_META_SIDECAR)) as f:
         meta = json.load(f)
@@ -1525,17 +1206,14 @@ def stream_curation_ingest(
     # ADVICE: recomputing from ID_HASH_BUCKETS means raising the
     # constant — the documented scaling path — would prune new-bucket
     # values against old-bucket directories and silently miss stored
-    # digests, letting exact duplicates through). Legacy sidecars
-    # without the field predate configurability and were always
-    # written at the then-constant default of 32.
-    hb_buckets = int(meta.get("hb_buckets", 32))
+    # digests, letting exact duplicates through).
+    hb_buckets = int(meta["hb_buckets"])
     hashes_path = os.path.join(state_path, "hashes")
     bands_path = os.path.join(state_path, "bands")
     verdicts_path = os.path.join(state_path, "verdicts")
     bench_path = os.path.join(state_path, "bench_grams")
-    _check_bp_tables(
-        checkpoint_path, [verdicts_path, hashes_path, bands_path]
-    )
+    tables = [(verdicts_path, None), (hashes_path, "hb"), (bands_path, "pfx")]
+    _check_bp_tables(checkpoint_path, tables)
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
@@ -1552,7 +1230,7 @@ def stream_curation_ingest(
         # fetch (≤ hb_buckets ints → PartitionFilters) and the batch
         # band materialization the near lane + band sink both consume —
         # overlap as concurrent jobs (round 16, guide §2.6)
-        bks_rows, new_bands = _run_sinks_concurrently(
+        bks_rows, new_bands = run_jobs_concurrently(
             lambda: bh.select("hb").distinct().collect(),
             lambda: dedup_ops.minhash_bands(
                 batch, id_col, text_col
@@ -1708,7 +1386,7 @@ def stream_curation_ingest(
         # replay-idempotent by layout, so they run as overlapping
         # jobs (round 16, guide §2.6) instead of paying three full
         # sequential commit latencies per batch.
-        _run_sinks_concurrently(
+        run_jobs_concurrently(
             lambda: append_batch_partition(
                 verdict, verdicts_path, ["bp"]
             ),
@@ -1733,12 +1411,7 @@ def stream_curation_ingest(
             ),
         )
         _maybe_compact_bp(
-            spark, batch_id, compact_every, checkpoint_path,
-            [
-                (verdicts_path, None),
-                (hashes_path, "hb"),
-                (bands_path, "pfx"),
-            ],
+            spark, batch_id, compact_every, checkpoint_path, tables
         )
 
     return _start_foreach_batch(
@@ -1782,8 +1455,8 @@ def stream_dsir_ingest(
     ``dsir_weights_indexed`` answers exactly like ``dsir_logweights``
     over C ∪ B1..Bn (law-tested; N-drain ≡ batch). Schema resolves
     from the sidecar the index was BUILT with; fail-fast at wiring if
-    index or sidecar is missing. Tables + checkpoint are a unit on
-    the bp layout (fail-fast at wiring; see
+    index or sidecar is missing. Tables + checkpoint are a unit
+    (fail-fast at wiring; see
     :func:`sinks.check_bp_checkpoint_coherent`); ``compact_every=N``
     folds the three tables' committed ``bp`` partitions every N
     batches (:func:`_maybe_compact_bp`)."""
@@ -1793,21 +1466,18 @@ def stream_dsir_ingest(
     from real_time_stock_market_data_pipeline__spark.operators import (
         text as text_ops,
     )
-    from real_time_stock_market_data_pipeline__spark.sinks import (
-        append_batch_partition,
-    )
 
     with open(os.path.join(index_path, text_ops._DSIR_META_SIDECAR)) as f:
         meta = json.load(f)
     n_buckets = int(meta["n_buckets"])
     id_col, text_col = meta["id_col"], meta["text_col"]
     lang_col, target_lang = meta["lang_col"], meta["target_lang"]
-    dsir_tables: list[tuple[str, str | None]] = [
+    tables = [
         (os.path.join(index_path, "buckets"), None),
         (os.path.join(index_path, "docs"), None),
         (os.path.join(index_path, "stats"), None),
     ]
-    _check_bp_tables(checkpoint_path, [p for p, _ in dsir_tables])
+    _check_bp_tables(checkpoint_path, tables)
 
     def write_bp(df: DataFrame, path: str) -> None:
         # parallel bounded writers, not coalesce(1) — round-14 verdict:
@@ -1823,7 +1493,7 @@ def stream_dsir_ingest(
         bp = F.lit(int(batch_id)).cast("long").alias("bp")
         # three independent bp tables, replay-idempotent by layout:
         # overlap the write jobs (round 16, guide §2.6)
-        _run_sinks_concurrently(
+        run_jobs_concurrently(
             lambda: write_bp(
                 exploded.groupBy(F.col(id_col), "bucket")
                 .agg(F.count(F.lit(1)).alias("n"))
@@ -1856,7 +1526,7 @@ def stream_dsir_ingest(
         )
         _maybe_compact_bp(
             batch.sparkSession, batch_id, compact_every,
-            checkpoint_path, dsir_tables,
+            checkpoint_path, tables,
         )
 
     return _start_foreach_batch(

@@ -7,9 +7,6 @@
 - ``sinks.check_bp_checkpoint_coherent`` fails fast on the layout's one
   operational trap: a fresh checkpoint pointed at an existing bp table
   (batch ids restart at 0 and dynamic overwrite would clobber history).
-- ``sinks.stored_columns`` distinguishes table-absent (→ new layout)
-  from a transient read error (→ re-raise), so a flaky read can never
-  misclassify an existing legacy table as absent.
 - ``compact_every`` is wired through EVERY bp-append service (round-15
   wired only the semantic screen): per family, draining N batches with
   compaction enabled yields the same queryable state as the batch
@@ -186,31 +183,6 @@ def test_check_bp_checkpoint_coherent(spark, tmp_path):
         pipeline.stream_dsir_ingest(
             src, dsir, str(tmp_path / "ckpt_new_run")
         )
-
-
-# ---------------------------------------------------------------------------
-# stored_columns — absent vs transient-error
-# ---------------------------------------------------------------------------
-
-
-def test_stored_columns_absent_vs_error(spark, tmp_path):
-    p = str(tmp_path / "tbl")
-    assert sinks.stored_columns(spark, p) is None  # no directory
-    os.makedirs(p)
-    assert sinks.stored_columns(spark, p) is None  # no parquet files
-    spark.createDataFrame([(1, "a")], "id: long, s: string").write.mode(
-        "overwrite"
-    ).parquet(p)
-    assert set(sinks.stored_columns(spark, p)) == {"id", "s"}
-    # a CORRUPT parquet file is a read error, not "absent": re-raise
-    # (defaulting to the bp layout here is exactly the round-15
-    # ADVICE bug — mixed partition depths on a legacy table)
-    bad = str(tmp_path / "bad")
-    os.makedirs(bad)
-    with open(os.path.join(bad, "part-0.parquet"), "wb") as f:
-        f.write(b"not a parquet file")
-    with pytest.raises(Exception):
-        sinks.stored_columns(spark, bad)
 
 
 # ---------------------------------------------------------------------------

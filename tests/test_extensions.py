@@ -2028,7 +2028,7 @@ def test_stream_semantic_screen_compaction_bounds_files(spark):
             q = pipeline.stream_semantic_screen(
                 src, corpus, idx, ckpt, threshold=0.9999, n_centroids=2,
                 corpus_assigned_path=f"{tmp}/corpus_assigned",
-                compact_every=compact_every, compact_min_files=0,
+                compact_every=compact_every,
             )
             q.awaitTermination()
 

@@ -5,11 +5,11 @@ round-trip."""
 
 from __future__ import annotations
 
-import pytest
-
 import os
+import re
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from real_time_stock_market_data_pipeline__spark import sinks
@@ -442,274 +442,6 @@ def test_merge_upsert_parquet_partitioned_touches_only_batch_cells(
     assert spark.read.parquet(path).count() == 5
 
 
-# ---------------------------------------------------------------------------
-# Round-15 layout migration: NEW side tables use bp=<batch_id> appends;
-# PRE-EXISTING tables must keep the layout they were created with
-# (partition depth cannot change mid-table, and a legacy flat log must
-# not crash on a missing partition column — round-14 ADVICE).
-# ---------------------------------------------------------------------------
-
-
-def _rewrite_json(path, obj):
-    import json
-
-    with open(path, "w") as f:
-        json.dump(obj, f)
-
-
-@pytest.mark.slow
-def test_stream_neardup_legacy_layouts_merge(spark, tmp_path):
-    """A pre-bp verdict log (flat, and round-14 vb-bucketed) plus a
-    pfx-only band index keep MERGing under the migrated service: the
-    layout is detected from the stored schema at wiring time and the
-    final verdicts equal the batch screen either way."""
-    from real_time_stock_market_data_pipeline__spark.operators import dedup
-
-    schema = "doc_id: long, text: string"
-    corpus = spark.createDataFrame([(0, "c1 c2 c3 c4 c5")], schema)
-    b1 = spark.createDataFrame(
-        [(10, "c1 c2 c3 c4 c5"), (11, "n1 n2 n3 n4 n5")], schema
-    )
-    b2 = spark.createDataFrame([(20, "n1 n2 n3 n4 n5")], schema)
-    cbp = str(tmp_path / "corpus_bands")
-    dedup.write_dedup_index(corpus, cbp)
-    want = {
-        r["doc_id"]: (r["n_corpus_dups"], r["n_prior_dups"], r["dup"])
-        for r in dedup.neardup_screen(b1.unionByName(b2), corpus).collect()
-    }
-
-    for layout in ("flat", "vb"):
-        base = tmp_path / f"legacy_{layout}"
-        out, sbp = str(base / "verdicts"), str(base / "stream_bands")
-        in_dir, ckpt = str(base / "in"), str(base / "ckpt")
-        # fabricate the pre-migration state after batch 1: verdict log
-        # without a bp column (optionally vb-bucketed), band index
-        # partitioned on pfx only
-        v1 = dedup.neardup_screen(b1, corpus)
-        if layout == "vb":
-            (
-                v1.withColumn(
-                    "vb", sinks.id_hash_bucket(F.col("doc_id"), salt="ndv:")
-                )
-                .repartition(F.col("vb"))
-                .write.partitionBy("vb")
-                .parquet(out)
-            )
-        else:
-            v1.write.parquet(out)
-        (
-            dedup.minhash_bands(b1)
-            .withColumn(
-                "pfx", F.concat(F.lit("p"), F.substring("band_hash", 1, 2))
-            )
-            .repartition(F.col("pfx"))
-            .write.partitionBy("pfx")
-            .parquet(sbp)
-        )
-        b2.coalesce(1).write.parquet(in_dir)
-        src = pipeline.read_file_stream(spark, in_dir, schema=b2.schema)
-        q = pipeline.stream_neardup_ingest(src, cbp, sbp, out, ckpt)
-        q.awaitTermination()
-        got = {
-            r["doc_id"]: (r["n_corpus_dups"], r["n_prior_dups"], r["dup"])
-            for r in spark.read.parquet(out).collect()
-        }
-        assert got == want, layout
-        # the legacy band table grew IN PLACE (no bp column appeared)
-        bcols = spark.read.parquet(sbp).columns
-        assert "bp" not in bcols
-        assert {
-            (r["doc_id"], r["band_idx"], r["band_hash"])
-            for r in spark.read.parquet(sbp)
-            .select("doc_id", "band_idx", "band_hash")
-            .collect()
-        } == {
-            tuple(r) for r in dedup.minhash_bands(b1.unionByName(b2)).collect()
-        }
-
-
-@pytest.mark.slow
-def test_stream_bm25_legacy_layouts_merge(spark, tmp_path):
-    """Round-14 bucketed (dl_buckets/stat_buckets) and pre-13 flat
-    doclens/stats sidecars keep their MERGE paths under the migrated
-    ingest; the probe equals the one-pass scorer over the union."""
-    from real_time_stock_market_data_pipeline__spark.operators import text as t
-
-    schema = "doc_id: long, text: string"
-    corpus = spark.createDataFrame(
-        [(0, "apple pie with extra apple"), (1, "pear tart no fruit")], schema
-    )
-    batch = spark.createDataFrame([(10, "apple and pear salad")], schema)
-    terms = ["apple", "pear"]
-    want = [
-        tuple(r)
-        for r in t.bm25_topk(corpus.unionByName(batch), terms, k=10).collect()
-    ]
-
-    for layout in ("bucketed", "flat"):
-        idx = str(tmp_path / f"bm25_{layout}")
-        in_dir = str(tmp_path / f"in_{layout}")
-        ckpt = str(tmp_path / f"ckpt_{layout}")
-        t.bm25_write_index(corpus, idx)
-        # rewrite doclens/stats + sidecar into the legacy layout
-        dls = t.bm25_doclens(corpus, "doc_id", "text")
-        stats = dls.agg(
-            F.lit(-1).cast("long").alias("batch_id"),
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("dl").alias("sum_dl"),
-        )
-        import shutil as _sh
-
-        _sh.rmtree(os.path.join(idx, "doclens"))
-        _sh.rmtree(os.path.join(idx, "stats"))
-        meta = {"n_buckets": t.BM25_TERM_BUCKETS, "id_col": "doc_id"}
-        if layout == "bucketed":
-            (
-                dls.withColumn(
-                    "dl_bucket",
-                    sinks.id_hash_bucket(F.col("doc_id"), 8, salt="bm25dl:"),
-                )
-                .write.partitionBy("dl_bucket")
-                .parquet(os.path.join(idx, "doclens"))
-            )
-            (
-                stats.withColumn(
-                    "stat_bucket",
-                    F.pmod(F.col("batch_id"), F.lit(8)).cast("int"),
-                )
-                .write.partitionBy("stat_bucket")
-                .parquet(os.path.join(idx, "stats"))
-            )
-            meta.update({"dl_buckets": 8, "stat_buckets": 8})
-        else:
-            dls.write.parquet(os.path.join(idx, "doclens"))
-            stats.write.parquet(os.path.join(idx, "stats"))
-        _rewrite_json(os.path.join(idx, t._BM25_META_SIDECAR), meta)
-
-        batch.coalesce(1).write.parquet(in_dir)
-        src = pipeline.read_file_stream(spark, in_dir, schema=batch.schema)
-        q = pipeline.stream_bm25_ingest(src, idx, ckpt)
-        q.awaitTermination()
-        got = [
-            tuple(r)
-            for r in t.bm25_topk_indexed(spark, idx, terms, k=10).collect()
-        ]
-        assert got == want, layout
-        assert "bp" not in spark.read.parquet(
-            os.path.join(idx, "doclens")
-        ).columns
-
-
-@pytest.mark.slow
-def test_stream_bq_legacy_layouts_merge(spark, sf_dir, tmp_path):
-    """Round-14 sig_bucket-MERGE and pre-13 flat signature tables keep
-    working under the migrated bq ingest (sidecar without `layout`);
-    the probe equals bq_topk over the union with the frozen means."""
-    from real_time_stock_market_data_pipeline__spark.operators import similarity
-
-    embs = load_table(spark, sf_dir, "embeddings")
-    q_vec = [
-        float(x) for x in embs.filter(F.col("vec_id") == 0).first()["embedding"]
-    ]
-    mu = similarity.bq_dim_means(embs)
-    n = embs.count()
-    half_a = embs.filter(F.col("vec_id") < n // 2)
-    half_b = embs.filter(F.col("vec_id") >= n // 2)
-    want = [
-        tuple(r) for r in similarity.bq_topk(embs, q_vec, k=10, means=mu).collect()
-    ]
-
-    for layout in ("bucketed", "flat"):
-        path = str(tmp_path / f"bq_{layout}" / "index")
-        in_dir = str(tmp_path / f"in_{layout}")
-        ckpt = str(tmp_path / f"ckpt_{layout}")
-        lanes = similarity._bq_lane_cols("embedding", mu, len(mu))
-        sig = half_a.select(
-            F.col("vec_id"),
-            *[ln.alias(f"sig{i}") for i, ln in enumerate(lanes)],
-        )
-        meta = {"means": mu, "id_col": "vec_id"}
-        if layout == "bucketed":
-            (
-                sig.withColumn(
-                    "sig_bucket",
-                    sinks.id_hash_bucket(F.col("vec_id"), 8, salt="bq:"),
-                )
-                .repartition(F.col("sig_bucket"))
-                .write.partitionBy("sig_bucket")
-                .parquet(path)
-            )
-            meta["n_buckets"] = 8
-        else:
-            sig.write.parquet(path)
-        _rewrite_json(similarity._bq_meta_path(path), meta)
-
-        half_b.coalesce(1).write.parquet(in_dir)
-        src = pipeline.read_file_stream(spark, in_dir)
-        q = pipeline.stream_bq_ingest(src, path, ckpt)
-        q.awaitTermination()
-        got = [
-            tuple(r)
-            for r in similarity.bq_topk_indexed(
-                spark, embs, path, q_vec, k=10
-            ).collect()
-        ]
-        assert got == want, layout
-        assert "bp" not in spark.read.parquet(path).columns
-
-
-def test_stream_contrastive_legacy_cell_merge(spark, sf_dir, tmp_path):
-    """A round-14 cell-only contrastive index (sidecar without
-    `layout`) keeps the cell-scoped MERGE under the migrated ingest;
-    the probe equals the batch miner over the union."""
-    import json
-
-    from real_time_stock_market_data_pipeline__spark.operators import similarity
-
-    embs = load_table(spark, sf_dir, "embeddings").withColumn(
-        "label", (F.col("vec_id") % 3).cast("int")
-    )
-    n = embs.count()
-    half_a = embs.filter(F.col("vec_id") < n // 2)
-    half_b = embs.filter(F.col("vec_id") >= n // 2)
-    cents = similarity.ivf_centroids(embs, 8)
-    path = str(tmp_path / "contrastive_legacy")
-    # fabricate the round-14 layout: cell partitions only, no bp
-    (
-        half_a.select(
-            "vec_id",
-            "label",
-            "embedding",
-            similarity.ivf_assign(F.col("embedding"), cents).alias("cell"),
-        )
-        .repartition(F.col("cell"))
-        .write.partitionBy("cell")
-        .parquet(path)
-    )
-    with open(similarity._contrastive_meta_path(path), "w") as f:
-        json.dump(
-            {
-                "centroids": cents,
-                "id_col": "vec_id",
-                "label_col": "label",
-                "vec_col": "embedding",
-            },
-            f,
-        )
-    in_dir, ckpt = str(tmp_path / "in"), str(tmp_path / "ckpt")
-    half_b.coalesce(1).write.parquet(in_dir)
-    src = pipeline.read_file_stream(spark, in_dir)
-    q = pipeline.stream_contrastive_ingest(src, path, ckpt)
-    q.awaitTermination()
-    assert "bp" not in spark.read.parquet(path).columns
-    anchors = embs.filter(F.col("vec_id") < 4)
-    got = similarity.contrastive_pairs_indexed(spark, anchors, path, k=3)
-    want = similarity.contrastive_pairs(embs, anchors, k=3, centroids=cents)
-    assert sorted(map(tuple, got.collect())) == sorted(
-        map(tuple, want.collect())
-    )
-
-
 def test_compact_batch_partitions_flat_and_replay_safety(spark, tmp_path):
     """Flat bp table: folding the committed prefix consolidates into
     bp=-1, keeps newer partitions byte-identical, preserves rows, and
@@ -802,113 +534,161 @@ def test_compact_batch_partitions_nested_and_heal(spark, tmp_path):
     ) == before
 
 
-@pytest.mark.slow
-def test_stream_semantic_screen_legacy_cell_merge(spark, tmp_path):
-    """A pre-bp semantic index (cell partitions only) keeps the
-    round-9 cell-scoped MERGE under the migrated screen: layout is
-    detected from the stored schema at wiring, sequential-ingest
-    results are unchanged, and no bp column appears."""
-    schema = "vec_id: long, embedding: array<float>"
-    corpus = spark.createDataFrame(
-        [(10, [1.0, 0.0, 0.0, 0.0]), (11, [0.0, 1.0, 0.0, 0.0])], schema
-    )
-    idx = str(tmp_path / "index")
-    in_dir, ckpt = str(tmp_path / "in"), str(tmp_path / "ckpt")
-    # fabricate the legacy state after a first drain that kept row 3:
-    # the index is the _semantic_assign shape partitioned on cell only
-    from real_time_stock_market_data_pipeline__spark.operators import similarity
+# ---------------------------------------------------------------------------
+# Every streaming side table is a bp=<batch_id> append: wiring refuses a
+# table that holds data without bp partitions, before any micro-batch.
+# ---------------------------------------------------------------------------
 
-    cents = [[1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0]]
-    kept1 = spark.createDataFrame([(3, [0.0, 0.1, 0.9, 0.0])], schema)
-    (
-        similarity._semantic_assign(kept1, cents, "embedding", "vec_id")
-        .repartition(F.col("cell"))
-        .write.partitionBy("cell")
-        .parquet(idx)
+_DOCS = "doc_id: long, text: string"
+_VECS = "vec_id: long, embedding: array<float>"
+#: two orthogonal 64-dim unit vectors (the embeddings table's width)
+_E0, _E1 = [1.0] + [0.0] * 63, [0.0, 1.0] + [0.0] * 62
+
+
+def _rewrite_flat(spark, path):
+    """Strip ``bp`` from a freshly built table: the pre-bp flat layout."""
+    import shutil
+
+    spark.read.parquet(path).drop("bp").write.parquet(path + "_flat")
+    shutil.rmtree(path)
+    os.rename(path + "_flat", path)
+
+
+def _first_batch(spark, path, schema, row, partition_cols):
+    """``path`` as the service's first micro-batch leaves it."""
+    sinks.append_batch_partition(
+        spark.createDataFrame([row], schema).withColumn(
+            "bp", F.lit(0).cast("long")
+        ),
+        path,
+        partition_cols,
     )
-    # drain 2: row 5 duplicates KEPT row 3 (killed by the index), row
-    # 6 is novel (kept)
-    spark.createDataFrame(
-        [(5, [0.0, 0.12, 0.89, 0.0]), (6, [0.0, 0.0, 0.0, 1.0])], schema
-    ).coalesce(1).write.parquet(in_dir)
+
+
+def _docs(spark):
+    return spark.createDataFrame(
+        [(0, "alpha beta gamma delta epsilon zeta eta theta iota")], _DOCS
+    )
+
+
+def _vecs(spark):
+    return spark.createDataFrame(
+        [(0, _E0), (1, _E1)], _VECS
+    ).withColumn("label", F.lit(0))
+
+
+def _semantic(spark, d):
+    _first_batch(spark, f"{d}/idx", "vec_id: long, cell: int", (5, 0),
+                 ["cell", "bp"])
+
+    def wire(src, ckpt):
+        return pipeline.stream_semantic_screen(
+            src, _vecs(spark).drop("label"), f"{d}/idx", ckpt,
+            centroids=[_E0],
+        )
+
+    return f"{d}/idx", _VECS, wire
+
+
+def _substring(spark, d):
+    from real_time_stock_market_data_pipeline__spark.operators import dedup
+
+    dedup.write_block_index(_docs(spark), f"{d}/idx", partitioned=True)
+
+    def wire(src, ckpt):
+        return pipeline.stream_substring_ingest(
+            src, f"{d}/idx", f"{d}/out", ckpt
+        )
+
+    return f"{d}/idx", _DOCS, wire
+
+
+def _neardup(spark, d):
+    from real_time_stock_market_data_pipeline__spark.operators import dedup
+
+    dedup.write_dedup_index(_docs(spark), f"{d}/corpus_bands")
+    _first_batch(spark, f"{d}/out", "doc_id: long, dup: boolean", (5, False),
+                 ["bp"])
+
+    def wire(src, ckpt):
+        return pipeline.stream_neardup_ingest(
+            src, f"{d}/corpus_bands", f"{d}/bands", f"{d}/out", ckpt
+        )
+
+    return f"{d}/out", _DOCS, wire
+
+
+def _bm25(spark, d):
+    from real_time_stock_market_data_pipeline__spark.operators import text
+
+    text.bm25_write_index(_docs(spark), d)
+    return f"{d}/doclens", _DOCS, (
+        lambda src, ckpt: pipeline.stream_bm25_ingest(src, d, ckpt)
+    )
+
+
+def _bq(spark, d):
+    from real_time_stock_market_data_pipeline__spark.operators import (
+        similarity,
+    )
+
+    similarity.bq_write_index(_vecs(spark), d)
+    return d, _VECS, (
+        lambda src, ckpt: pipeline.stream_bq_ingest(src, d, ckpt)
+    )
+
+
+def _contrastive(spark, d):
+    from real_time_stock_market_data_pipeline__spark.operators import (
+        similarity,
+    )
+
+    similarity.contrastive_write_index(_vecs(spark), d, centroids=[_E0, _E1])
+    return d, _VECS + ", label: int", (
+        lambda src, ckpt: pipeline.stream_contrastive_ingest(src, d, ckpt)
+    )
+
+
+def _curation(spark, d):
+    from real_time_stock_market_data_pipeline__spark.operators import (
+        curation,
+    )
+
+    curation.curation_write_state(_docs(spark), d)
+    _first_batch(spark, f"{d}/verdicts", "doc_id: long, kept: boolean",
+                 (5, True), ["bp"])
+    return f"{d}/verdicts", _DOCS, (
+        lambda src, ckpt: pipeline.stream_curation_ingest(src, d, ckpt)
+    )
+
+
+def _dsir(spark, d):
+    from real_time_stock_market_data_pipeline__spark.operators import text
+
+    text.dsir_write_index(_docs(spark).withColumn("lang", F.lit("en")), d)
+    return f"{d}/docs", _DOCS + ", lang: string", (
+        lambda src, ckpt: pipeline.stream_dsir_ingest(src, d, ckpt)
+    )
+
+
+@pytest.mark.parametrize(
+    "build",
+    [_semantic, _substring, _neardup, _bm25, _bq, _contrastive, _curation,
+     _dsir],
+    ids=lambda f: f.__name__.strip("_"),
+)
+def test_ingest_wiring_refuses_pre_bp_table(spark, tmp_path, build):
+    """A side table rewritten without its bp partitions (the pre-bp
+    flat layout) is refused with a ValueError naming the table when the
+    service is wired — the stream never starts, so no micro-batch runs
+    and no checkpoint is written."""
+    table, schema, wire = build(spark, str(tmp_path / "state"))
+    _rewrite_flat(spark, table)
+    in_dir, ckpt = str(tmp_path / "in"), str(tmp_path / "ckpt")
+    os.makedirs(in_dir)
     src = pipeline.read_file_stream(
         spark, in_dir, schema=spark.createDataFrame([], schema).schema
     )
-    q = pipeline.stream_semantic_screen(
-        src, corpus, idx, ckpt, threshold=0.9, centroids=cents,
-    )
-    q.awaitTermination()
-    assert "bp" not in spark.read.parquet(idx).columns
-    assert sorted(
-        r["vec_id"] for r in spark.read.parquet(idx).collect()
-    ) == [3, 6]
-
-
-@pytest.mark.slow
-def test_stream_substring_legacy_layouts_merge(spark, tmp_path):
-    """A pre-bp ExactSubstr state — pfx-only block index, flat
-    rewritten-docs table — keeps MERGing under the migrated service:
-    layouts are detected from the stored schemas at wiring and the
-    final state equals the bp-layout run on the same drains."""
-    from real_time_stock_market_data_pipeline__spark.operators import dedup
-
-    schema = "doc_id: long, text: string"
-    corpus = spark.createDataFrame(
-        [(0, "c1 c2 c3 c4 c5 c6 c7 c8")], schema
-    )
-    b1 = spark.createDataFrame(
-        [(10, "n1 n2 n3 n4 n5 n6 n7 n8")], schema
-    )
-    b2 = spark.createDataFrame(
-        [(20, "n1 n2 n3 n4 n5 n6 n7 n8 m1 m2 m3 m4 m5 m6 m7 m8")], schema
-    )
-    idx = str(tmp_path / "blockidx")
-    out = str(tmp_path / "rewritten")
-    in_dir, ckpt = str(tmp_path / "in"), str(tmp_path / "ckpt")
-    # fabricate the legacy post-b1 state: strip bp from a fresh build
-    # of corpus ∪ b1 digests (pfx-only), docs table flat
-    dedup.write_block_index(corpus.unionByName(b1), idx + "_new",
-                            partitioned=True)
-    (
-        spark.read.parquet(idx + "_new")
-        .select("block_md5", "first_id", "first_pos", "pfx")
-        .repartition(F.col("pfx"))
-        .write.partitionBy("pfx")
-        .parquet(idx)
-    )
-    # b1's rewritten row as the pre-existing flat docs table: screen
-    # b1 against the corpus-only digest slice (first_id 0 = corpus)
-    flagged1 = dedup._substring_screen(
-        b1,
-        spark.read.parquet(idx).filter(F.col("first_id") == 0),
-        "doc_id", "text", 8,
-    )
-    dedup._rebuild_docs(flagged1, "doc_id", emit_text=True).write.parquet(out)
-    b2.coalesce(1).write.parquet(in_dir)
-    src = pipeline.read_file_stream(spark, in_dir, schema=b1.schema)
-    q = pipeline.stream_substring_ingest(src, idx, out, ckpt)
-    q.awaitTermination()
-    assert "bp" not in spark.read.parquet(out).columns
-    assert "bp" not in spark.read.parquet(idx).columns
-    docs = {
-        r["doc_id"]: (r["n_blocks"], r["n_kept"])
-        for r in spark.read.parquet(out).collect()
-    }
-    # doc 20's first 8-word block duplicates stored doc 10; its second
-    # is novel — 9 positions total, the duplicated prefix dropped
-    assert set(docs) == {10, 20}
-    assert docs[20][0] > docs[20][1] >= 1
-    digs = sorted(
-        r["block_md5"] for r in spark.read.parquet(idx).collect()
-    )
-    want = sorted(
-        r["block_md5"]
-        for r in spark.read.parquet(idx + "_new").select("block_md5")
-        .union(
-            dedup._doc_blocks(b2, "doc_id", "text", 8)
-            .select(F.md5("block").alias("block_md5"))
-        )
-        .distinct()
-        .collect()
-    )
-    assert digs == want
+    with pytest.raises(ValueError, match=re.escape(f"{table} holds data")):
+        wire(src, ckpt)
+    assert not os.path.exists(ckpt)
