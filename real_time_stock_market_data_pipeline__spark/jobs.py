@@ -386,6 +386,72 @@ def _require_input(spark: SparkSession, path: str) -> bool:
     return True
 
 
+def market_pipeline(
+    spark: SparkSession,
+    events_path: str,
+    out_dir: str,
+) -> PipelineRun:
+    """The market-analytics batch end-to-end as one composable run —
+    the reference's historical flow (`spark_batch_processor.py`)
+    extended through the indicator/risk layer this engine adds:
+
+    gate → tick ingest → daily OHLCV bars → indicator features +
+    leakage-free label matrix → risk metrics (Sharpe/Sortino,
+    VaR/CVaR) → partitioned parquet per dataset.
+
+    Each stage reports its row count; every stage is an operator
+    already oracle-checked individually, so the composition adds
+    orchestration (retry, fail-fast, gating), not new semantics.
+    """
+    from real_time_stock_market_data_pipeline__spark.operators import (
+        indicators as ind,
+    )
+
+    state: dict[str, object] = {}
+
+    def _ingest():
+        df = spark.read.parquet(events_path)
+        state["ticks"] = df
+        return df.count()
+
+    def _daily():
+        daily = ohlcv.daily_metrics(
+            state["ticks"],
+            symbol_col="event_type",
+            ts_col="ts",
+            price_col="value",
+            id_col="event_id",
+        ).localCheckpoint()
+        state["daily"] = daily
+        return daily.count()
+
+    def _features():
+        feats = ind.feature_matrix(state["daily"])
+        feats.write.mode("overwrite").parquet(f"{out_dir}/features")
+        state["features"] = feats
+        return spark.read.parquet(f"{out_dir}/features").count()
+
+    def _risk():
+        daily = state["daily"]
+        risk = ind.sharpe_sortino(daily).join(
+            ind.var_cvar(daily).select(
+                "symbol", "var_5pct", "cvar_5pct"
+            ),
+            "symbol",
+        )
+        risk.write.mode("overwrite").parquet(f"{out_dir}/risk")
+        return spark.read.parquet(f"{out_dir}/risk").count()
+
+    steps = [
+        Step("gate", lambda: _require_input(spark, events_path), retries=0),
+        Step("ingest", _ingest),
+        Step("daily_bars", _daily),
+        Step("features", _features),
+        Step("risk", _risk),
+    ]
+    return run_pipeline(steps, fail_fast=True)
+
+
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(prog="rtsmdp-jobs")
     sub = ap.add_subparsers(dest="cmd", required=True)
@@ -461,79 +527,3 @@ def main(argv: list[str] | None = None) -> int:
 
 if __name__ == "__main__":
     raise SystemExit(main())
-
-
-def market_pipeline(
-    spark: SparkSession,
-    events_path: str,
-    out_dir: str,
-) -> PipelineRun:
-    """The market-analytics batch end-to-end as one composable run —
-    the reference's historical flow (`spark_batch_processor.py`)
-    extended through the indicator/risk layer this engine adds:
-
-    gate → tick ingest → daily OHLCV bars → indicator features +
-    leakage-free label matrix → risk metrics (Sharpe/Sortino,
-    VaR/CVaR) → partitioned parquet per dataset.
-
-    Each stage reports its row count; every stage is an operator
-    already oracle-checked individually, so the composition adds
-    orchestration (retry, fail-fast, gating), not new semantics.
-    """
-    from real_time_stock_market_data_pipeline__spark import sinks
-    from real_time_stock_market_data_pipeline__spark.operators import (
-        indicators as ind,
-        ohlcv as ohlcv_ops,
-    )
-    from real_time_stock_market_data_pipeline__spark.sources.registry import (
-        load_table,
-    )
-
-    state: dict[str, object] = {}
-
-    def _gate():
-        if not sinks.input_ready(spark, events_path):
-            raise RuntimeError(f"input not ready: {events_path}")
-        return 1
-
-    def _ingest():
-        df = spark.read.parquet(events_path)
-        state["ticks"] = df
-        return df.count()
-
-    def _daily():
-        daily = ohlcv_ops.daily_metrics(
-            state["ticks"],
-            symbol_col="event_type",
-            ts_col="ts",
-            price_col="value",
-            id_col="event_id",
-        ).localCheckpoint()
-        state["daily"] = daily
-        return daily.count()
-
-    def _features():
-        feats = ind.feature_matrix(state["daily"])
-        feats.write.mode("overwrite").parquet(f"{out_dir}/features")
-        state["features"] = feats
-        return spark.read.parquet(f"{out_dir}/features").count()
-
-    def _risk():
-        daily = state["daily"]
-        risk = ind.sharpe_sortino(daily).join(
-            ind.var_cvar(daily).select(
-                "symbol", "var_5pct", "cvar_5pct"
-            ),
-            "symbol",
-        )
-        risk.write.mode("overwrite").parquet(f"{out_dir}/risk")
-        return spark.read.parquet(f"{out_dir}/risk").count()
-
-    steps = [
-        Step("gate", _gate, retries=0),
-        Step("ingest", _ingest),
-        Step("daily_bars", _daily),
-        Step("features", _features),
-        Step("risk", _risk),
-    ]
-    return run_pipeline(steps, fail_fast=True)

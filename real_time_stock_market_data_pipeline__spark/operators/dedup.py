@@ -1205,6 +1205,16 @@ def _rebuild_docs(
     )
 
 
+def hex_prefix(hex_col: str) -> F.Column:
+    """Prune key of the hex-digest side tables (block digests, LSH
+    bands): ``"p"`` + the digest's first two hex chars, 256 values.
+    The letter keeps hive partition-type inference on STRING — an
+    all-digit directory set would otherwise infer INT and make a later
+    hex value like 'f9' fail the ANSI isin cast (found by the two-sink
+    crash test)."""
+    return F.concat(F.lit("p"), F.substring(hex_col, 1, 2))
+
+
 def write_block_index(
     corpus: DataFrame,
     path: str,
@@ -1222,11 +1232,7 @@ def write_block_index(
     One corpus scan + one distinct shuffle.
 
     ``partitioned=True`` lays the digests out
-    ``partitionBy(pfx)`` (letter-prefixed first two hex chars, 256
-    cells; the letter keeps hive partition-type inference on STRING —
-    an all-digit directory set would otherwise infer INT and make a
-    later hex value like 'f9' fail the ANSI isin cast, found by the
-    two-sink crash test) and adds PROVENANCE columns
+    ``partitionBy(pfx)`` (:func:`hex_prefix`) and adds PROVENANCE columns
     ``(first_id, first_pos)`` — the (id, pos) of the digest's first
     occurrence. Provenance is what makes the streaming ingest's
     checkpoint replay idempotent: a replayed batch sees its OWN kept
@@ -1245,6 +1251,11 @@ def write_block_index(
     present)."""
     blocks = _doc_blocks(corpus, id_col, text_col, n_words)
     if partitioned:
+        from real_time_stock_market_data_pipeline__spark.sinks import (
+            BASE_BP,
+            append_batch_partition,
+        )
+
         w = Window.partitionBy("block_md5").orderBy(id_col, "pos")
         digests = (
             blocks.withColumn("block_md5", F.md5("block"))
@@ -1254,18 +1265,10 @@ def write_block_index(
                 "block_md5",
                 F.col(id_col).alias("first_id"),
                 F.col("pos").alias("first_pos"),
-                F.concat(
-                    F.lit("p"), F.substring(F.md5("block"), 1, 2)
-                ).alias("pfx"),
-                F.lit(-1).cast("long").alias("bp"),
+                hex_prefix("block_md5").alias("pfx"),
             )
         )
-        (
-            digests.repartition(F.col("pfx"))
-            .write.mode("overwrite")
-            .partitionBy("pfx", "bp")
-            .parquet(path)
-        )
+        append_batch_partition(digests, path, BASE_BP, "pfx")
     else:
         blocks.select(F.md5("block").alias("block_md5")).distinct(
         ).write.mode("overwrite").parquet(path)

@@ -2719,13 +2719,40 @@ def _bq_meta_path(path: str) -> str:
     return path.rstrip("/") + "._bq_meta.json"
 
 
+def _bq_write_batch(
+    embs: DataFrame,
+    path: str,
+    batch_id: int,
+    mu: list[float],
+    vec_col: str,
+    id_col: str,
+) -> None:
+    """Write ``embs``' ``(id, sig0, sig1)`` signature rows, packed
+    map-side under the threshold means ``mu``, as the ``bp=<batch_id>``
+    partition — the one row definition shared by the base build
+    (:func:`bq_write_index`) and the streaming ingest
+    (:func:`streaming.pipeline.stream_bq_ingest`)."""
+    from real_time_stock_market_data_pipeline__spark.sinks import (
+        append_batch_partition,
+    )
+
+    lanes = _bq_lane_cols(vec_col, mu, len(mu))
+    append_batch_partition(
+        embs.select(
+            F.col(id_col),
+            *[ln.alias(f"sig{i}") for i, ln in enumerate(lanes)],
+        ),
+        path,
+        batch_id,
+    )
+
+
 def bq_write_index(
     embs: DataFrame,
     path: str,
     means: list[float] | None = None,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    n_buckets: int | None = None,
 ) -> list[float]:
     """Materialize the binary sign-signature table at rest: one
     (id, sig0, sig1) row per vector — 8 signature bytes instead of the
@@ -2747,37 +2774,14 @@ def bq_write_index(
     -bucketed MERGE this replaces (a uniformly-hashed crawl batch
     touches ALL buckets, re-introducing an O(index) read per batch).
     The scan side is unaffected: the probe reads every partition
-    either way — signatures have no pruning axis. ``n_buckets`` is
-    DEPRECATED: it tuned the retired round-14 id-hash-bucketed MERGE
-    layout and has no effect on the bp layout, so passing it warns
-    (round-15 ADVICE — a caller explicitly tuning bucket count must
-    not get a silently different layout); it will be removed once the
-    last legacy caller is gone.
+    either way — signatures have no pruning axis.
     """
     import json
 
-    if n_buckets is not None:
-        import warnings
+    from real_time_stock_market_data_pipeline__spark.sinks import BASE_BP
 
-        warnings.warn(
-            "bq_write_index(n_buckets=...) is deprecated and has no "
-            "effect: the index uses the bp=<batch_id> batch-partition "
-            "layout, which has no bucket count",
-            DeprecationWarning,
-            stacklevel=2,
-        )
     mu = means if means is not None else bq_dim_means(embs, vec_col)
-    lanes = _bq_lane_cols(vec_col, mu, len(mu))
-    (
-        embs.select(
-            F.col(id_col),
-            *[ln.alias(f"sig{i}") for i, ln in enumerate(lanes)],
-            F.lit(-1).cast("long").alias("bp"),
-        )
-        .write.mode("overwrite")
-        .partitionBy("bp")
-        .parquet(path)
-    )
+    _bq_write_batch(embs, path, BASE_BP, mu, vec_col, id_col)
     with open(_bq_meta_path(path), "w") as f:
         json.dump({"means": mu, "id_col": id_col}, f)
     return mu
@@ -3049,6 +3053,41 @@ def _contrastive_meta_path(path: str) -> str:
     return path.rstrip("/") + "._contrastive_meta.json"
 
 
+def _contrastive_write_batch(
+    embs: DataFrame,
+    path: str,
+    batch_id: int,
+    cents: list[list[float]],
+    id_col: str,
+    label_col: str,
+    vec_col: str,
+) -> None:
+    """Write ``embs``' ``(id, label, vector)`` rows under their frozen
+    IVF cell as ``cell=*/bp=<batch_id>`` partitions — the one row
+    definition shared by the base build
+    (:func:`contrastive_write_index`) and the streaming ingest
+    (:func:`streaming.pipeline.stream_contrastive_ingest`). The cell
+    stays the probe's prune key; the batch partition makes an ingest
+    O(batch), with nothing stored read back (ids are new every
+    batch)."""
+    from real_time_stock_market_data_pipeline__spark.sinks import (
+        append_batch_partition,
+    )
+
+    append_batch_partition(
+        embs.select(
+            F.col(id_col),
+            F.col(label_col),
+            F.col(vec_col),
+            ivf_assign(vec_col, cents).alias("cell"),
+        ),
+        path,
+        batch_id,
+        "cell",
+        len(cents),
+    )
+
+
 def contrastive_write_index(
     embs: DataFrame,
     path: str,
@@ -3064,36 +3103,23 @@ def contrastive_write_index(
     of :func:`contrastive_pairs`, stored once so every later anchor
     batch probes it with partition pruning instead of re-assigning the
     corpus, and so the streaming leg
-    (:func:`streaming.pipeline.stream_contrastive_ingest`) can MERGE
-    arrivals cell-scoped. Same frozen-quantizer policy as the IVF-PQ /
-    BQ / semantic services: assignments are a pure function of
+    (:func:`streaming.pipeline.stream_contrastive_ingest`) can append
+    arrivals as ``cell=*/bp=<batch_id>`` partitions. Same
+    frozen-quantizer policy as the IVF-PQ / BQ / semantic services:
+    assignments are a pure function of
     (vector, centroids), so batch and streamed rows land in identical
     cells and mining results are arrival-order independent."""
     import json
+
+    from real_time_stock_market_data_pipeline__spark.sinks import BASE_BP
 
     cents = (
         centroids
         if centroids is not None
         else ivf_centroids(embs, n_centroids, id_col, vec_col)
     )
-    # bp=<batch_id> nested INSIDE the cell partitions (bp=-1 is the
-    # base build): the cell stays the probe's prune key, while the
-    # streaming ingest APPENDS each batch as fresh bp subpartitions —
-    # O(batch) writes with nothing stored read back (ids are new every
-    # batch), replay overwrites its own partitions. Same nested-prune
-    # -key discipline as the curation state's hb=*/bp=*.
-    (
-        embs.select(
-            F.col(id_col),
-            F.col(label_col),
-            F.col(vec_col),
-            ivf_assign(vec_col, cents).alias("cell"),
-            F.lit(-1).cast("long").alias("bp"),
-        )
-        .repartition(F.col("cell"))
-        .write.mode("overwrite")
-        .partitionBy("cell", "bp")
-        .parquet(path)
+    _contrastive_write_batch(
+        embs, path, BASE_BP, cents, id_col, label_col, vec_col
     )
     with open(_contrastive_meta_path(path), "w") as f:
         json.dump(

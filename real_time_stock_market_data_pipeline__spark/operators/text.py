@@ -1375,6 +1375,61 @@ def _dsir_assemble(
 _DSIR_META_SIDECAR = "_dsir_meta.json"
 
 
+def _dsir_write_batch(
+    docs: DataFrame,
+    path: str,
+    batch_id: int,
+    target_lang: str,
+    id_col: str,
+    text_col: str,
+    lang_col: str,
+    n_buckets: int,
+) -> None:
+    """Write ``docs``' rows of the three DSIR tables as their
+    ``bp=<batch_id>`` partitions — the one row definition shared by the
+    base build (:func:`dsir_write_index`) and the streaming ingest
+    (:func:`streaming.pipeline.stream_dsir_ingest`): per-doc bucket
+    counts, per-doc (id, lang) meta, and ONE ≤ n_buckets-row
+    ``(batch_id, bucket, cr, ct)`` stats partial."""
+    import os
+
+    from real_time_stock_market_data_pipeline__spark.sinks import (
+        append_batch_partition,
+        run_jobs_concurrently,
+    )
+
+    exploded = _dsir_exploded(
+        docs, F.col(lang_col) == target_lang, id_col, text_col, n_buckets
+    )
+    tables = {
+        "buckets": exploded.groupBy(F.col(id_col), "bucket").agg(
+            F.count(F.lit(1)).alias("n")
+        ),
+        "docs": docs.select(F.col(id_col), F.col(lang_col).alias("lang")),
+        "stats": exploded.groupBy("bucket")
+        .agg(
+            F.count(F.lit(1)).alias("cr"),
+            F.sum(F.when(F.col("__is_t"), 1).otherwise(0)).alias("ct"),
+        )
+        .select(
+            F.lit(int(batch_id)).cast("long").alias("batch_id"),
+            "bucket",
+            "cr",
+            "ct",
+        ),
+    }
+    # three independent tables into disjoint subdirectories: overlap
+    # the write jobs (round 16, guide §2.6)
+    run_jobs_concurrently(
+        *[
+            lambda name=name, df=df: append_batch_partition(
+                df, os.path.join(path, name), batch_id
+            )
+            for name, df in tables.items()
+        ]
+    )
+
+
 def dsir_write_index(
     docs: DataFrame,
     path: str,
@@ -1404,49 +1459,11 @@ def dsir_write_index(
     import json
     import os
 
-    from real_time_stock_market_data_pipeline__spark.sinks import (
-        run_jobs_concurrently,
-    )
+    from real_time_stock_market_data_pipeline__spark.sinks import BASE_BP
 
-    target = F.col(lang_col) == target_lang
-    exploded = _dsir_exploded(docs, target, id_col, text_col, n_buckets)
-    bp = F.lit(-1).cast("long").alias("bp")
-    # three independent tables into disjoint subdirectories: overlap
-    # the write jobs (round 16, guide §2.6) instead of paying three
-    # sequential build latencies
-    run_jobs_concurrently(
-        lambda: (
-            exploded.groupBy(F.col(id_col), "bucket")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .select(F.col(id_col), "bucket", "n", bp)
-            .write.mode("overwrite")
-            .partitionBy("bp")
-            .parquet(os.path.join(path, "buckets"))
-        ),
-        lambda: (
-            docs.select(F.col(id_col), F.col(lang_col).alias("lang"), bp)
-            .write.mode("overwrite")
-            .partitionBy("bp")
-            .parquet(os.path.join(path, "docs"))
-        ),
-        lambda: (
-            exploded.groupBy("bucket")
-            .agg(
-                F.count(F.lit(1)).alias("cr"),
-                F.sum(F.when(F.col("__is_t"), 1).otherwise(0)).alias("ct"),
-            )
-            .select(
-                F.lit(-1).cast("long").alias("batch_id"),
-                "bucket",
-                "cr",
-                "ct",
-                bp,
-            )
-            .repartition(1)
-            .write.mode("overwrite")
-            .partitionBy("bp")
-            .parquet(os.path.join(path, "stats"))
-        ),
+    _dsir_write_batch(
+        docs, path, BASE_BP, target_lang, id_col, text_col, lang_col,
+        n_buckets,
     )
     with open(os.path.join(path, _DSIR_META_SIDECAR), "w") as f:
         json.dump(
@@ -1637,6 +1654,40 @@ def bm25_topk(
     )
 
 
+def _bm25_side_writes(
+    docs: DataFrame, path: str, batch_id: int, id_col: str, text_col: str
+) -> list:
+    """The doclens and stats writes of ``docs`` as ``bp=<batch_id>``
+    partitions, as two thunks the caller overlaps with its postings
+    write — the one row definition shared by the base build
+    (:func:`bm25_write_index`) and the streaming ingest
+    (:func:`streaming.pipeline.stream_bm25_ingest`). Stats are one
+    ``(batch_id, n_docs, Σdl)`` partial row per batch: N and avgdl
+    derive from exact integer sums, so an ingest never re-scans
+    doclens and a replay overwrites its own row (the sketch-register
+    shape)."""
+    import os
+
+    from real_time_stock_market_data_pipeline__spark.sinks import (
+        append_batch_partition,
+    )
+
+    dls = bm25_doclens(docs, id_col, text_col)
+    stats = dls.agg(
+        F.lit(int(batch_id)).cast("long").alias("batch_id"),
+        F.count(F.lit(1)).alias("n_docs"),
+        F.coalesce(F.sum("dl"), F.lit(0).cast("long")).alias("sum_dl"),
+    )
+    return [
+        lambda: append_batch_partition(
+            dls, os.path.join(path, "doclens"), batch_id
+        ),
+        lambda: append_batch_partition(
+            stats, os.path.join(path, "stats"), batch_id
+        ),
+    ]
+
+
 def bm25_write_index(
     docs: DataFrame,
     path: str,
@@ -1660,6 +1711,7 @@ def bm25_write_index(
     import os
 
     from real_time_stock_market_data_pipeline__spark.sinks import (
+        BASE_BP,
         run_jobs_concurrently,
     )
 
@@ -1670,47 +1722,18 @@ def bm25_write_index(
     # (bp=-1 is the base build): document ids are NEW every ingest
     # batch (the crawl contract — a revised doc is a table-format
     # DELETE, out of scope), so the streaming service just APPENDS a
-    # fresh bp partition per batch via dynamic partition overwrite —
-    # O(batch) per drain with nothing stored ever read or rewritten,
-    # and a checkpoint replay overwrites its own partition (idempotent
-    # by layout). Measured on the DSIR service: flat per-drain cost
-    # across a 16x corpus decade, 8.6x over the id-hash-bucketed MERGE
-    # this replaces (a uniformly-hashed crawl batch touches ALL
-    # buckets, so the bucketed MERGE re-read O(index) per batch). The
-    # probe reads every partition either way — the scan side is
-    # unaffected.
-    dls = bm25_doclens(docs, id_col, text_col)
-    bp = F.lit(-1).cast("long").alias("bp")
-    # corpus stats as per-batch partials (batch_id -1 = the base
-    # build): N and avgdl derive from exact integer sums, so a
-    # streaming ingest adds one idempotent (batch_id, n, Σdl) row per
-    # batch instead of re-scanning doclens — the sketch-register shape.
-    # The three tables land in disjoint subdirectories: overlap the
-    # write jobs (round 16, guide §2.6) instead of paying the corpus-
-    # sized posting build plus two sidecar writes end-to-end.
+    # fresh bp partition per batch. The probe reads every partition
+    # either way — the scan side is unaffected. The three tables land
+    # in disjoint subdirectories: overlap the write jobs (round 16,
+    # guide §2.6) instead of paying the corpus-sized posting build
+    # plus two sidecar writes end-to-end.
     run_jobs_concurrently(
         lambda: (
             postings.write.mode("overwrite")
             .partitionBy("term_bucket")
             .parquet(os.path.join(path, "postings"))
         ),
-        lambda: (
-            dls.select(F.col(id_col), "dl", bp)
-            .write.mode("overwrite")
-            .partitionBy("bp")
-            .parquet(os.path.join(path, "doclens"))
-        ),
-        lambda: (
-            dls.agg(
-                F.lit(-1).cast("long").alias("batch_id"),
-                F.count(F.lit(1)).alias("n_docs"),
-                F.sum("dl").alias("sum_dl"),
-            )
-            .select("batch_id", "n_docs", "sum_dl", bp)
-            .write.mode("overwrite")
-            .partitionBy("bp")
-            .parquet(os.path.join(path, "stats"))
-        ),
+        *_bm25_side_writes(docs, path, BASE_BP, id_col, text_col),
     )
     with open(os.path.join(path, _BM25_META_SIDECAR), "w") as f:
         json.dump(

@@ -357,70 +357,92 @@ def merge_upsert_parquet_partitioned(
     )
 
 
+#: ``bp`` of an index builder's base build and of folded history: real
+#: batch ids are >= 0, so no stream's batch can ever collide with it
+BASE_BP = -1
+
+#: row cap per file of the batch-partition writer: splits an oversized
+#: task output of a narrow no-shuffle frame without a shuffle
+BP_MAX_RECORDS_PER_FILE = 1_000_000
+
+
 def append_batch_partition(
     df: DataFrame,
     path: str,
-    partition_cols: list[str],
-    coherence_col: str | None = None,
-    max_records_per_file: int = 1_000_000,
-    coherence_width: int | None = None,
+    batch_id: int,
+    prune_col: str | None = None,
+    width: int | None = None,
 ) -> None:
-    """Batch-partition APPEND: land a micro-batch's rows in their own
-    ``bp=<batch_id>`` partition directories via dynamic partition
-    overwrite — the strongest streaming-sink layout in the package for
-    tables whose keys are NEW every batch (measured on the DSIR
-    service: flat per-drain cost across a 16× corpus decade, 8.6× over
-    the bucketed MERGE, because nothing stored is ever read or
-    rewritten; a replayed checkpoint batch overwrites ITS OWN
-    partitions, so idempotence comes from the layout itself).
+    """Batch-partition APPEND — the one writer of the streaming side
+    tables: land ``df`` under ``bp=<batch_id>`` (nested inside
+    ``prune_col=*`` when the table has a prune key). Nothing stored is
+    read or rewritten, so an ingest costs O(batch) (measured on the
+    DSIR service: flat per-drain cost across a 16× corpus decade, 8.6×
+    over the bucketed MERGE), and a replayed checkpoint batch
+    overwrites ITS OWN partitions (dynamic partition overwrite), so
+    idempotence comes from the layout itself.
 
-    Writer parallelism (round-14 verdict: the first cut ``coalesce(1)``d
-    each table — one task per batch, serializing a crawl-sized batch's
-    exploded rows through a single writer):
+    ``batch_id == BASE_BP`` is an index builder's base build: it
+    replaces the whole table (static overwrite), including any
+    partitions an earlier stream appended.
 
-    - post-shuffle frames (groupBy/join outputs) keep their AQE-coalesced
-      partitioning — tiny batches collapse to ~1 file, crawl-sized
-      batches keep ~advisory-sized parallel writers;
-    - ``coherence_col`` (the table's prune key, e.g. ``hb``/``pfx``)
-      repartitions on that key first so each prune directory receives
-      coherent files from parallel writers instead of one sliver per
-      task per directory;
-    - ``maxRecordsPerFile`` bounds the worst case for narrow no-shuffle
-      frames, splitting any oversized task output without a shuffle.
+    Writer parallelism (round-14 verdict: a ``coalesce(1)`` per table
+    serialized crawl-sized batches through one writer): post-shuffle
+    frames keep their AQE-coalesced partitioning; a ``prune_col``
+    table repartitions on its key so each prune directory receives
+    coherent files instead of one sliver per task per directory; and
+    ``BP_MAX_RECORDS_PER_FILE`` bounds the worst case for narrow
+    frames. ``width`` (round 16) pins one writer task per prune
+    directory: a keyless ``repartition(col)`` is AQE-coalesced on
+    small batches down to ~1 task that opens every touched
+    directory's parquet writer SEQUENTIALLY — measured 2.6x slower on
+    a 256-dir band append at sf0.1 (5.8 -> 2.3 s) — while at crawl
+    scale the key's value count caps parallelism at the same bound.
+    Callers pass the touched-value count they already collect, or the
+    key's domain size.
 
     **Table + checkpoint are a unit** (round-15 ADVICE): batch ids come
     from the stream's checkpoint, so a FRESH checkpoint pointed at an
     existing bp table restarts at ``bp=0`` and dynamic overwrite
     silently clobbers the prior run's partitions. Never recreate the
     checkpoint without first folding history into the base partition
-    (``compact_batch_partitions`` → ``bp=-1``, which no new run can
-    collide with); service wirings enforce this via
-    :func:`check_bp_checkpoint_coherent`.
+    (``compact_batch_partitions`` → ``bp=-1``); service wirings enforce
+    this via :func:`check_bp_checkpoint_coherent`.
     """
-    if coherence_col is not None:
-        # coherence_width (round 16): pin one writer task per prune
-        # directory. A keyless repartition(col) is AQE-coalesced on
-        # small batches down to ~1 task, which then opens every
-        # touched directory's parquet writer SEQUENTIALLY — measured
-        # 2.6x slower on a 256-dir band append at sf0.1 (5.8 -> 2.3 s)
-        # — while at crawl scale the coherence key's value count caps
-        # effective parallelism at the same bound, so the explicit
-        # width costs nothing there (callers pass the touched-value
-        # count they already collect for pruning, or the key's domain
-        # size). Empty hash partitions schedule as no-op tasks.
-        if coherence_width is not None:
-            df = df.repartition(
-                max(1, int(coherence_width)), F.col(coherence_col)
-            )
-        else:
-            df = df.repartition(F.col(coherence_col))
+    df = df.withColumn("bp", F.lit(int(batch_id)).cast("long"))
+    cols = ["bp"]
+    if prune_col is not None:
+        cols = [prune_col, "bp"]
+        df = (
+            df.repartition(max(1, int(width)), F.col(prune_col))
+            if width is not None
+            else df.repartition(F.col(prune_col))
+        )
     (
         df.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .option("maxRecordsPerFile", str(int(max_records_per_file)))
-        .partitionBy(*partition_cols)
+        .option(
+            "partitionOverwriteMode",
+            "static" if batch_id == BASE_BP else "dynamic",
+        )
+        .option("maxRecordsPerFile", str(BP_MAX_RECORDS_PER_FILE))
+        .partitionBy(*cols)
         .parquet(path)
     )
+
+
+def read_prior_batches(
+    spark: SparkSession, path: str, batch_id: int
+) -> DataFrame | None:
+    """The rows of a batch-partition table that batches before
+    ``batch_id`` wrote (the base build and folded history included),
+    or ``None`` while the table has no readable rows. ``bp`` is a
+    partition column, so the filter prunes the batch's own partition
+    out of the scan: on a checkpoint replay the first attempt's files
+    are neither read back (the replay sees what the original attempt
+    saw) nor listed while the replay's append replaces them."""
+    if not input_ready(spark, path):
+        return None
+    return spark.read.parquet(path).filter(F.col("bp") < int(batch_id))
 
 
 def committed_batch_watermark(checkpoint_dir: str) -> int | None:
@@ -493,7 +515,7 @@ def check_bp_checkpoint_coherent(path: str, checkpoint_dir: str) -> None:
         )
     if committed_batch_watermark(checkpoint_dir) is not None:
         return
-    live = [d for d in bp_dirs if not d.endswith("bp=-1")]
+    live = [d for d in bp_dirs if not d.endswith(f"bp={BASE_BP}")]
     if live:
         raise ValueError(
             f"batch-partition table {path} holds {len(live)} bp>=0 "
@@ -692,10 +714,9 @@ def compact_batch_partitions(
         # original, cutting off group/other readers (round-15 ADVICE)
         os.chmod(tmp, os.stat(parent).st_mode & 0o7777)
         try:
-            df.coalesce(n_target).write.mode("overwrite").parquet(
-                os.path.join(tmp, "bp=-1")
-            )
-            check = spark.read.parquet(os.path.join(tmp, "bp=-1")).count()
+            base = os.path.join(tmp, f"bp={BASE_BP}")
+            df.coalesce(n_target).write.mode("overwrite").parquet(base)
+            check = spark.read.parquet(base).count()
             if check != n_rows:
                 raise RuntimeError(
                     f"bp compaction row mismatch in {parent}: "
@@ -770,9 +791,20 @@ def compact_parquet(
     not pay a shuffle, it only concatenates row groups (losing any
     within-file ordering is acceptable for parquet scan workloads;
     re-sort explicitly if a zorder_key layout must be preserved).
+
+    A crash between the two swap renames leaves only
+    ``path.compact_old``; one after the swap leaves it superseded next
+    to the new ``path``. The next call heals both on entry, by the
+    rule of :func:`merge_upsert_parquet`: restore a lone
+    ``.compact_old``, delete a superseded one.
     """
     import glob
 
+    old = path + ".compact_old"
+    if not os.path.exists(path) and os.path.exists(old):
+        os.rename(old, path)
+    elif os.path.exists(old):
+        shutil.rmtree(old)
     before = [
         f
         for f in glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
@@ -790,7 +822,6 @@ def compact_parquet(
             raise RuntimeError(
                 f"compaction row mismatch: {n_rows} -> {check}; source left intact"
             )
-        old = path + ".compact_old"
         os.rename(path, old)
         os.rename(tmp, path)
         shutil.rmtree(old, ignore_errors=True)

@@ -41,12 +41,12 @@ from real_time_stock_market_data_pipeline__spark.operators.metrics import (
 from real_time_stock_market_data_pipeline__spark.sinks import (
     append_batch_partition,
     check_bp_checkpoint_coherent,
-    committed_batch_watermark,
-    compact_batch_partitions,
+    compact_streaming_state,
     id_hash_bucket,
     input_ready,
     merge_upsert_parquet,
     merge_upsert_parquet_partitioned,
+    read_prior_batches,
     run_jobs_concurrently,
 )
 
@@ -130,7 +130,7 @@ def _check_bp_tables(
     checkpoint_path: str, tables: list[tuple[str, str | None]]
 ) -> None:
     """Wiring-time guard shared by the ingest services, over the same
-    ``[(path, prune_col)]`` list :func:`_maybe_compact_bp` folds. The
+    ``[(path, prune_col)]`` list :func:`_start_bp_service` folds. The
     ``bp=<batch_id>`` append is the only side-table layout, so a table
     that holds data without ``bp`` partitions is refused; and each
     table and the stream's checkpoint are a unit — a FRESH checkpoint
@@ -141,31 +141,37 @@ def _check_bp_tables(
         check_bp_checkpoint_coherent(path, checkpoint_path)
 
 
-def _maybe_compact_bp(
-    spark: SparkSession,
-    batch_id: int,
-    compact_every: int | None,
+def _start_bp_service(
+    source: DataFrame,
+    write_batch,
     checkpoint_path: str,
     tables: list[tuple[str, str | None]],
-) -> None:
-    """Shared compaction leg of the bp-append services: after every
-    ``compact_every``-th micro-batch, fold each table's
-    checkpoint-COMMITTED ``bp`` partitions into its base partition.
-    ``upto_bp`` is read from the checkpoint's own ``commits/`` log
-    (:func:`sinks.committed_batch_watermark` — round-15 verdict ask:
-    the semantic wiring hardcoded ``batch_id - 1``, which is the same
-    watermark but left every other caller to rederive the contract),
-    so an uncommitted batch — including the one being processed — is
-    never folded and replay idempotence is preserved.
-    ``tables`` is ``[(path, prune_col)]`` with ``prune_col=None`` for
-    flat ``bp=*`` layouts."""
-    if not compact_every or (int(batch_id) + 1) % int(compact_every) != 0:
-        return
-    wm = committed_batch_watermark(checkpoint_path)
-    if wm is None:
-        return
-    for path, prune in tables:
-        compact_batch_partitions(spark, path, upto_bp=wm, prune_col=prune)
+    compact_every: int | None,
+    available_now: bool,
+    trigger_seconds: int,
+) -> StreamingQuery:
+    """The one skeleton of the ``bp`` ingest services: each micro-batch
+    runs ``write_batch(batch, batch_id)``, then after every
+    ``compact_every``-th batch folds each table's checkpoint-COMMITTED
+    ``bp`` partitions into its base partition
+    (:func:`sinks.compact_streaming_state`, which reads ``upto_bp`` from
+    the checkpoint's own ``commits/`` log), so an uncommitted batch —
+    including the one being processed — is never folded and replay
+    idempotence is preserved. ``tables`` is ``[(path, prune_col)]``
+    with ``prune_col=None`` for flat ``bp=*`` layouts.
+    ``_start_foreach_batch`` is looked up when the service starts, so a
+    wrapper installed on this module sees every service."""
+
+    def process_batch(batch: DataFrame, batch_id: int) -> None:
+        write_batch(batch, batch_id)
+        if compact_every and (int(batch_id) + 1) % int(compact_every) == 0:
+            compact_streaming_state(
+                batch.sparkSession, checkpoint_path, tables
+            )
+
+    return _start_foreach_batch(
+        source, process_batch, checkpoint_path, available_now, trigger_seconds
+    )
 
 
 def read_file_stream(
@@ -484,15 +490,7 @@ def stream_semantic_screen(
     drain per file) the order is deterministic and the result equals
     the batch operator on the same split — the oracle contract.
 
-    ``compact_every=N`` runs :func:`sinks.compact_batch_partitions`
-    after every N-th micro-batch: the append sink accretes one ``bp``
-    subpartition per batch per touched cell, and the compactor folds
-    the checkpoint-COMMITTED prefix (batches ``<= batch_id - 1`` —
-    committed by the time this batch runs) into the base partition,
-    so long-run directory counts stay bounded without breaking replay
-    (this batch's own partition is never folded). Rows are verified
-    unchanged and results/restart idempotence are unaffected
-    (test-asserted).
+    Wiring checks and ``compact_every``: :func:`_start_bp_service`.
     """
     from real_time_stock_market_data_pipeline__spark.operators import (
         similarity,
@@ -558,17 +556,15 @@ def stream_semantic_screen(
             )
         else:
             base = corpus_assigned.filter(F.col("cell").isin(touched))
-        if input_ready(spark, index_path):
-            # exclude THIS batch's own partition: the screen has no
-            # owner-id guard, so on a checkpoint replay the first
-            # attempt's kept rows (already at bp=batch_id) would
-            # self-kill their re-arrivals and the overwrite would
-            # shrink the index. Filtering it out makes the replay see
-            # what the original attempt saw and rewrite its partition
-            # bit-identically.
-            idx = spark.read.parquet(index_path).filter(
-                F.col("cell").isin(touched) & (F.col("bp") != int(batch_id))
-            )
+        # only batches before this one: the screen has no owner-id
+        # guard, so on a checkpoint replay the first attempt's kept
+        # rows (already at bp=batch_id) would self-kill their
+        # re-arrivals and the overwrite would shrink the index.
+        # Excluding them makes the replay see what the original attempt
+        # saw and rewrite its partition bit-identically.
+        idx = read_prior_batches(spark, index_path, batch_id)
+        if idx is not None:
+            idx = idx.filter(F.col("cell").isin(touched))
             base = base.unionByName(idx.select(*an.columns))
         # materialize the stage-1 corpus-screen survivors before the
         # intra-batch dominance prune (round 17): _dominance_prune
@@ -589,22 +585,12 @@ def stream_semantic_screen(
         # this batch's rows are written, nothing stored is read back —
         # O(batch) ingest (the DSIR-sink discipline)
         append_batch_partition(
-            kept_full.withColumn("bp", F.lit(int(batch_id)).cast("long")),
-            index_path,
-            ["cell", "bp"],
-            coherence_col="cell",
-            coherence_width=len(touched),
-        )
-        # upto_bp comes from the checkpoint's own commits log
-        # (committed_batch_watermark = batch_id-1 here), so only
-        # committed batches fold and this batch's own bp partition is
-        # never touched — the replay contract holds.
-        _maybe_compact_bp(
-            spark, batch_id, compact_every, checkpoint_path, tables
+            kept_full, index_path, batch_id, "cell", len(touched)
         )
 
-    return _start_foreach_batch(
-        source, process_batch, checkpoint_path, available_now, trigger_seconds
+    return _start_bp_service(
+        source, process_batch, checkpoint_path, tables, compact_every,
+        available_now, trigger_seconds,
     )
 
 
@@ -691,39 +677,21 @@ def stream_substring_ingest(
     — the stored corpus text is never re-read, and nothing stored is
     read back for the writes.
 
-    Tables + checkpoint are a unit (fail-fast at wiring; see
-    :func:`sinks.check_bp_checkpoint_coherent`), and
-    ``compact_every=N`` folds both tables' checkpoint-committed ``bp``
-    partitions into their base every N batches
-    (:func:`_maybe_compact_bp`) so long-run directory counts stay
-    bounded."""
+    Wiring checks and ``compact_every``: :func:`_start_bp_service`."""
     from real_time_stock_market_data_pipeline__spark.operators import (
         dedup as dedup_ops,
     )
 
-    # a batch's KEPT digests are unseen by construction (the screen
-    # keeps only index-absent blocks) and the rewritten docs carry new
-    # ids, so BOTH sinks are bp=<batch_id> appends — O(batch) writes
-    # with nothing stored read back. Replay stays idempotent WITHOUT
-    # excluding the batch's own partition: the provenance rule in
-    # dedup._substring_screen re-qualifies self-stored digests, so a
-    # replay recomputes the identical flagged frame and overwrites
-    # both bp partitions bit-identically.
     tables = [(index_path, "pfx"), (out_path, None)]
     _check_bp_tables(checkpoint_path, tables)
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        idx = spark.read.parquet(index_path)
+        idx = batch.sparkSession.read.parquet(index_path)
         flagged = dedup_ops._substring_screen(
             batch, idx, id_col, text_col, n_words
         ).localCheckpoint(eager=True)  # two consumers below
         rebuilt = dedup_ops._rebuild_docs(flagged, id_col, emit_text=True)
-        append_batch_partition(
-            rebuilt.withColumn("bp", F.lit(int(batch_id)).cast("long")),
-            out_path,
-            ["bp"],
-        )
+        append_batch_partition(rebuilt, out_path, batch_id)
         # kept rows are unique per digest (rn=1), so this carries each
         # new digest ONCE with its provenance — the (id, pos) that a
         # replay must recognize as "stored by me" (see
@@ -732,25 +700,67 @@ def stream_substring_ingest(
             "block_md5",
             F.col(id_col).alias("first_id"),
             F.col("pos").alias("first_pos"),
-            # letter-prefixed: see write_block_index — keeps hive
-            # partition-type inference on STRING for hex prefixes
-            F.concat(F.lit("p"), F.substring("block_md5", 1, 2)).alias(
-                "pfx"
-            ),
+            dedup_ops.hex_prefix("block_md5").alias("pfx"),
         )
-        append_batch_partition(
-            new_digests.withColumn("bp", F.lit(int(batch_id)).cast("long")),
-            index_path,
-            ["pfx", "bp"],
-            coherence_col="pfx",
-            coherence_width=256,  # 2-hex pfx domain
-        )
-        _maybe_compact_bp(
-            spark, batch_id, compact_every, checkpoint_path, tables
-        )
+        # width: the 2-hex pfx domain
+        append_batch_partition(new_digests, index_path, batch_id, "pfx", 256)
 
-    return _start_foreach_batch(
-        source, process_batch, checkpoint_path, available_now, trigger_seconds
+    return _start_bp_service(
+        source, process_batch, checkpoint_path, tables, compact_every,
+        available_now, trigger_seconds,
+    )
+
+
+def _neardup_lane(
+    batch: DataFrame,
+    batch_id: int,
+    corpus_bands: DataFrame,
+    new_bands: DataFrame,
+    bands_path: str,
+    id_col: str,
+    text_col: str,
+):
+    """The near-dup lane shared by :func:`stream_neardup_ingest` and
+    :func:`stream_curation_ingest`: screen the batch's materialized
+    ``new_bands`` against ``corpus_bands`` plus the growing band table
+    at ``bands_path``, and return ``(verdict, append_bands)`` — the
+    :func:`operators.dedup.neardup_screen_bands` verdict and a thunk
+    that appends the batch's bands under ``pfx=*/bp=<batch_id>``.
+
+    Only stored bands sharing a 2-hex band-hash prefix with the batch
+    can collide (band equality implies prefix equality); the batch's
+    prefix set is a bounded driver fetch (≤ 256 values) that lands in
+    the scan's PartitionFilters, so the prior-band read is O(touched
+    prefix dirs), not O(index) (round 14). The read keeps only
+    batches before this one (round-16 ADVICE): a checkpoint replay's
+    file-index snapshot would otherwise include the failed attempt's
+    own ``pfx=*/bp=<batch_id>`` files, which the concurrent band
+    append delete-and-replaces mid-scan. Result-preserving on replay:
+    prior hits require an owner id strictly below the document's own,
+    and the failed attempt's band owners are this batch's ids, whose
+    hits the in-batch band union already counts."""
+    from real_time_stock_market_data_pipeline__spark.operators import (
+        dedup as dedup_ops,
+    )
+
+    pfx = dedup_ops.hex_prefix("band_hash")
+    pfxs = sorted(
+        r[0] for r in new_bands.select(pfx).distinct().collect()
+    )
+    prior = read_prior_batches(batch.sparkSession, bands_path, batch_id)
+    if prior is not None:
+        prior = prior.filter(F.col("pfx").isin(pfxs)).select(
+            id_col, "band_idx", "band_hash"
+        )
+    # new_bands is passed through so the screen's three uses of the
+    # batch bands don't re-run the MinHash pipeline (round 16, guide
+    # §2.4)
+    verdict = dedup_ops.neardup_screen_bands(
+        batch, corpus_bands, prior, id_col, text_col, new_bands=new_bands
+    )
+    return verdict, lambda: append_batch_partition(
+        new_bands.withColumn("pfx", pfx), bands_path, batch_id, "pfx",
+        len(pfxs),
     )
 
 
@@ -792,10 +802,7 @@ def stream_neardup_ingest(
     shared by the other ingest services: ids must not decrease across
     batches, or "earlier arrival" and "lower id" diverge.
 
-    Tables + checkpoint are a unit (fail-fast at wiring; see
-    :func:`sinks.check_bp_checkpoint_coherent`); ``compact_every=N``
-    folds the committed ``bp`` partitions of both growing tables
-    every N batches (:func:`_maybe_compact_bp`).
+    Wiring checks and ``compact_every``: :func:`_start_bp_service`.
 
     Scale per batch: band(new) + two band-key equi-joins against
     partition-scoped parquet + two batch-partition appends — the
@@ -805,95 +812,32 @@ def stream_neardup_ingest(
         dedup as dedup_ops,
     )
 
-    # both tables' keys — doc ids, (id, band_idx) — are new every
-    # batch under the monotone-id crawl contract, so both sinks are
-    # bp=<batch_id> appends and nothing stored is ever read back for
-    # the write (measured 8.6x over bucketed MERGE at crawl-sized
-    # batches on the DSIR service)
     tables = [(out_path, None), (stream_bands_path, "pfx")]
     _check_bp_tables(checkpoint_path, tables)
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        cb = spark.read.parquet(corpus_bands_path)
-        # only stored bands sharing a 2-hex band-hash prefix with this
-        # batch can collide (band equality implies prefix equality);
-        # the batch's prefix set is a bounded driver fetch (≤ 256
-        # values) and lands in the scan's PartitionFilters, so the
-        # prior-band read is O(touched prefix dirs), not O(index) —
-        # round-14: the last O(index)-bytes-per-batch term in this
-        # service
+        cb = batch.sparkSession.read.parquet(corpus_bands_path)
         new_bands = dedup_ops.minhash_bands(
             batch, id_col, text_col
         ).localCheckpoint(eager=True)
-        pfxs = sorted(
-            r["pfx"]
-            for r in new_bands.select(
-                F.concat(
-                    F.lit("p"), F.substring("band_hash", 1, 2)
-                ).alias("pfx")
-            )
-            .distinct()
-            .collect()
+        verdict, append_bands = _neardup_lane(
+            batch, batch_id, cb, new_bands, stream_bands_path, id_col,
+            text_col,
         )
-        prior = None
-        if input_ready(spark, stream_bands_path):
-            # replay/overlap guard: a checkpoint replay's file-index
-            # snapshot would otherwise include the failed attempt's own
-            # pfx=*/bp=<batch_id> files, which the concurrent band
-            # append delete-and-replaces mid-scan (FileNotFoundException
-            # on the verdict job). bp is a partition column so this
-            # prunes the replay target out of the scan entirely; on a
-            # normal run it is a no-op (stored bp < batch_id always,
-            # and the compaction fold bp=-1 passes). Result-preserving
-            # on replay too: prior hits require owner id strictly below
-            # the document's own, and the failed attempt's band owners
-            # are exactly this batch's ids — every self/batch-mate hit
-            # they could add is already counted via the in-batch band
-            # union.
-            prior = (
-                spark.read.parquet(stream_bands_path)
-                .filter(F.col("pfx").isin(pfxs))
-                .filter(F.col("bp") < F.lit(int(batch_id)))
-                .select(id_col, "band_idx", "band_hash")
-            )
-        # new_bands already materialized above for the index append —
-        # pass it through so the screen's three uses of the batch
-        # bands don't re-run the MinHash pipeline (shingle explode +
-        # per-perm min-aggs) from scratch (round 16, guide §2.4)
-        verdict = dedup_ops.neardup_screen_bands(
-            batch, cb, prior, id_col, text_col, new_bands=new_bands
-        )
-        bp = F.lit(int(batch_id)).cast("long")
         # independent tables, replay-idempotent sinks: overlap the two
         # write jobs; crash with any subset written converges on
         # replay exactly like the sequential crash-between-sinks case
         # (test-pinned). Overlap-safe because the band append only adds
         # new bp dirs and the replay overwrite target is pruned out of
-        # the prior scan above.
+        # the prior scan.
         run_jobs_concurrently(
-            lambda: append_batch_partition(
-                verdict.withColumn("bp", bp), out_path, ["bp"]
-            ),
-            lambda: append_batch_partition(
-                # letter-prefixed: see write_block_index — keeps hive
-                # partition-type inference on STRING for hex prefixes
-                new_bands.withColumn(
-                    "pfx",
-                    F.concat(F.lit("p"), F.substring("band_hash", 1, 2)),
-                ).withColumn("bp", bp),
-                stream_bands_path,
-                ["pfx", "bp"],
-                coherence_col="pfx",
-                coherence_width=len(pfxs),
-            ),
-        )
-        _maybe_compact_bp(
-            spark, batch_id, compact_every, checkpoint_path, tables
+            lambda: append_batch_partition(verdict, out_path, batch_id),
+            append_bands,
         )
 
-    return _start_foreach_batch(
-        source, process_batch, checkpoint_path, available_now, trigger_seconds
+    return _start_bp_service(
+        source, process_batch, checkpoint_path, tables, compact_every,
+        available_now, trigger_seconds,
     )
 
 
@@ -930,75 +874,55 @@ def stream_bm25_ingest(
     dropped terms; revision is a table-format DELETE, out of scope
     for the parquet stand-in).
 
-    Tables + checkpoint are a unit (fail-fast at wiring; see
-    :func:`sinks.check_bp_checkpoint_coherent`); ``compact_every=N``
-    folds doclens'/stats' committed ``bp`` partitions every N batches
-    (:func:`_maybe_compact_bp`; the postings MERGE sink self-bounds
-    and needs none)."""
+    Wiring checks and ``compact_every``: :func:`_start_bp_service`
+    (the postings MERGE sink self-bounds and needs no compaction)."""
+    import json
     import os
 
     from real_time_stock_market_data_pipeline__spark.operators import (
         text as text_ops,
     )
 
+    # doclens/stats are bp=<batch_id> appends (document ids are new
+    # every batch); the postings MERGE is not a bp table
+    tables = [
+        (os.path.join(index_path, "doclens"), None),
+        (os.path.join(index_path, "stats"), None),
+    ]
+    _check_bp_tables(checkpoint_path, tables)
     # fail fast at wiring time if there is no index/sidecar to extend.
     # id_col resolves from the sidecar the index was BUILT with — a
     # parameter that disagreed with the build would pass wiring and
     # die mid-stream at the first postings merge (round-13 ADVICE)
-    import json
-
     with open(os.path.join(index_path, text_ops._BM25_META_SIDECAR)) as f:
         meta = json.load(f)
     n_buckets = int(meta["n_buckets"])
     id_col = meta.get("id_col", id_col)
-    # doclens/stats are bp=<batch_id> APPENDs (document ids are new
-    # every batch, so nothing stored is ever read or rewritten —
-    # O(batch) per drain, measured 8.6x over the bucketed MERGE at
-    # crawl-sized batches on the DSIR service, whose uniformly-hashed
-    # batches touch ALL buckets)
-    doclens_path = os.path.join(index_path, "doclens")
-    stats_path = os.path.join(index_path, "stats")
-    tables = [(doclens_path, None), (stats_path, None)]
-    _check_bp_tables(checkpoint_path, tables)
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
         postings = text_ops.bm25_postings(
             batch, id_col, text_col
         ).withColumn(
             "term_bucket",
             text_ops.bm25_term_bucket(F.col("term"), n_buckets),
         )
-        dls = text_ops.bm25_doclens(batch, id_col, text_col)
-        bp = F.lit(int(batch_id)).cast("long").alias("bp")
-        partial = dls.agg(
-            F.lit(int(batch_id)).cast("long").alias("batch_id"),
-            F.count(F.lit(1)).alias("n_docs"),
-            F.coalesce(F.sum("dl"), F.lit(0).cast("long")).alias("sum_dl"),
-        )
         # three independent tables, idempotent sinks (keyed postings
         # MERGE / bp self-overwrite): overlap the write jobs
         run_jobs_concurrently(
             lambda: merge_upsert_parquet_partitioned(
-                spark, postings, os.path.join(index_path, "postings"),
+                batch.sparkSession, postings,
+                os.path.join(index_path, "postings"),
                 keys=["term", id_col], partition_col="term_bucket",
                 partition_width=n_buckets,
             ),
-            lambda: append_batch_partition(
-                dls.select(F.col(id_col), "dl", bp), doclens_path, ["bp"]
+            *text_ops._bm25_side_writes(
+                batch, index_path, batch_id, id_col, text_col
             ),
-            lambda: append_batch_partition(
-                partial.select("batch_id", "n_docs", "sum_dl", bp),
-                stats_path,
-                ["bp"],
-            ),
-        )
-        _maybe_compact_bp(
-            spark, batch_id, compact_every, checkpoint_path, tables
         )
 
-    return _start_foreach_batch(
-        source, process_batch, checkpoint_path, available_now, trigger_seconds
+    return _start_bp_service(
+        source, process_batch, checkpoint_path, tables, compact_every,
+        available_now, trigger_seconds,
     )
 
 
@@ -1025,40 +949,28 @@ def stream_bq_ingest(
     resolves from the sidecar the index was BUILT with (never from
     this signature), so a non-default build cannot silently mismatch.
     The index and sidecar must already exist (fail-fast at wiring).
-    Table + checkpoint are a unit (fail-fast at wiring);
-    ``compact_every=N`` folds committed ``bp`` partitions every N
-    batches (:func:`_maybe_compact_bp`)."""
+    Wiring checks and ``compact_every``: :func:`_start_bp_service`."""
     import json
 
     from real_time_stock_market_data_pipeline__spark.operators import (
         similarity,
     )
 
+    tables = [(index_path, None)]
+    _check_bp_tables(checkpoint_path, tables)
     with open(similarity._bq_meta_path(index_path)) as f:
         meta = json.load(f)
     mu = [float(x) for x in meta["means"]]
     id_col = meta.get("id_col", id_col)
-    tables = [(index_path, None)]
-    _check_bp_tables(checkpoint_path, tables)
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
-        lanes = similarity._bq_lane_cols(vec_col, mu, len(mu))
-        sig = batch.select(
-            F.col(id_col),
-            *[ln.alias(f"sig{i}") for i, ln in enumerate(lanes)],
-        )
-        append_batch_partition(
-            sig.withColumn("bp", F.lit(int(batch_id)).cast("long")),
-            index_path,
-            ["bp"],
-        )
-        _maybe_compact_bp(
-            batch.sparkSession, batch_id, compact_every,
-            checkpoint_path, tables,
+        similarity._bq_write_batch(
+            batch, index_path, batch_id, mu, vec_col, id_col
         )
 
-    return _start_foreach_batch(
-        source, process_batch, checkpoint_path, available_now, trigger_seconds
+    return _start_bp_service(
+        source, process_batch, checkpoint_path, tables, compact_every,
+        available_now, trigger_seconds,
     )
 
 
@@ -1087,44 +999,30 @@ def stream_contrastive_ingest(
     concatenated corpus (law-tested: N-drain ≡ batch). Schema
     (id/label/vec column names) resolves from the sidecar the index
     was BUILT with; index and sidecar must exist (fail-fast at
-    wiring). Table + checkpoint are a unit (fail-fast at wiring);
-    ``compact_every=N`` folds committed ``bp`` subpartitions under
-    each cell every N batches (:func:`_maybe_compact_bp`)."""
+    wiring).
+    Wiring checks and ``compact_every``: :func:`_start_bp_service`."""
     import json
 
     from real_time_stock_market_data_pipeline__spark.operators import (
         similarity,
     )
 
+    tables = [(index_path, "cell")]
+    _check_bp_tables(checkpoint_path, tables)
     with open(similarity._contrastive_meta_path(index_path)) as f:
         meta = json.load(f)
     cents = [[float(x) for x in c] for c in meta["centroids"]]
     id_col, label_col = meta["id_col"], meta["label_col"]
     vec_col = meta["vec_col"]
-    tables = [(index_path, "cell")]
-    _check_bp_tables(checkpoint_path, tables)
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
-        assigned = batch.select(
-            F.col(id_col),
-            F.col(label_col),
-            F.col(vec_col),
-            similarity.ivf_assign(vec_col, cents).alias("cell"),
-        )
-        append_batch_partition(
-            assigned.withColumn("bp", F.lit(int(batch_id)).cast("long")),
-            index_path,
-            ["cell", "bp"],
-            coherence_col="cell",
-            coherence_width=len(cents),
-        )
-        _maybe_compact_bp(
-            batch.sparkSession, batch_id, compact_every,
-            checkpoint_path, tables,
+        similarity._contrastive_write_batch(
+            batch, index_path, batch_id, cents, id_col, label_col, vec_col
         )
 
-    return _start_foreach_batch(
-        source, process_batch, checkpoint_path, available_now, trigger_seconds
+    return _start_bp_service(
+        source, process_batch, checkpoint_path, tables, compact_every,
+        available_now, trigger_seconds,
     )
 
 
@@ -1178,11 +1076,8 @@ def stream_curation_ingest(
     bucket, and a uniformly-hashed batch touches all of them). The
     digest index stores each batch's own per-hash min id; the reader
     resolves the global min, which under monotone ids is the true
-    first arrival. State tables + checkpoint are a unit (fail-fast at
-    wiring; see :func:`sinks.check_bp_checkpoint_coherent`);
-    ``compact_every=N`` folds the three growing tables' committed
-    ``bp`` partitions every N batches (:func:`_maybe_compact_bp`) so
-    long-run directory counts stay bounded."""
+    first arrival.
+    Wiring checks and ``compact_every``: :func:`_start_bp_service`."""
     import json
     import os
 
@@ -1196,6 +1091,11 @@ def stream_curation_ingest(
         text as text_ops,
     )
 
+    hashes_path = os.path.join(state_path, "hashes")
+    bands_path = os.path.join(state_path, "bands")
+    verdicts_path = os.path.join(state_path, "verdicts")
+    tables = [(verdicts_path, None), (hashes_path, "hb"), (bands_path, "pfx")]
+    _check_bp_tables(checkpoint_path, tables)
     with open(os.path.join(state_path, cur_ops._CURATION_META_SIDECAR)) as f:
         meta = json.load(f)
     min_score, min_words = meta["min_score"], meta["min_words"]
@@ -1208,12 +1108,7 @@ def stream_curation_ingest(
     # values against old-bucket directories and silently miss stored
     # digests, letting exact duplicates through).
     hb_buckets = int(meta["hb_buckets"])
-    hashes_path = os.path.join(state_path, "hashes")
-    bands_path = os.path.join(state_path, "bands")
-    verdicts_path = os.path.join(state_path, "verdicts")
     bench_path = os.path.join(state_path, "bench_grams")
-    tables = [(verdicts_path, None), (hashes_path, "hb"), (bands_path, "pfx")]
-    _check_bp_tables(checkpoint_path, tables)
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
@@ -1237,46 +1132,38 @@ def stream_curation_ingest(
             ).localCheckpoint(eager=True),
         )
         bks = sorted(r["hb"] for r in bks_rows)
-        # bp < batch_id on both prior reads (round-16 ADVICE): on a
-        # checkpoint replay the failed attempt's hb=*/bp=<batch_id> and
-        # pfx=*/bp=<batch_id> files are in the scans' file-index
-        # snapshots while the concurrent hash/band appends
-        # delete-and-replace those directories at commit — the filter
-        # (a partition prune; real batch ids ≥ 0 so the compaction
-        # fold bp=-1 always passes) keeps the overwrite target out of
-        # the snapshot. Result-preserving: on a normal run stored bp
-        # is always < batch_id; on replay the excluded rows are this
-        # batch's own first-attempt rows, whose per-hash min first_id
-        # equals the in-batch window min already folded in via
-        # least(__pf, __bm), and whose band owners are this batch's
-        # own ids, already counted by the in-batch band union under
-        # the strict owner-id < rule.
-        prior_h = (
-            spark.read.parquet(hashes_path)
-            .filter(
-                (F.col("hb").isin(bks))
-                & (F.col("bp") < F.lit(int(batch_id)))
+        # only batches before this one on both prior reads (round-16
+        # ADVICE): on a checkpoint replay the failed attempt's
+        # hb=*/bp=<batch_id> files are in the scan's file-index
+        # snapshot while the concurrent hash append delete-and-replaces
+        # those directories at commit. Result-preserving: on replay the
+        # excluded rows are this batch's own first-attempt rows, whose
+        # per-hash min first_id equals the in-batch window min already
+        # folded in via least(__pf, __bm). The band read's twin of
+        # this argument is in _neardup_lane.
+        prior_h = read_prior_batches(spark, hashes_path, batch_id)
+        if prior_h is not None:
+            prior_h = (
+                prior_h.filter(F.col("hb").isin(bks))
+                # bound the slice to the batch's OWN digest set before
+                # grouping: the touched-bucket slice grows with the
+                # corpus (a uniformly-hashed batch touches every
+                # bucket), so broadcasting it directly was a
+                # corpus-sized build side (round-14 verdict/ADVICE —
+                # the neardup_screen broadcast_batch class). Exchange
+                # shape: the BATCH digest set is the broadcast build
+                # side of this semi-join — bounded by the micro-batch
+                # contract — and the prior rows stream past it, so what
+                # survives is ≤ the batch's collision volume and safely
+                # broadcastable below.
+                .join(
+                    F.broadcast(bh.select("text_hash").distinct()),
+                    "text_hash",
+                    "left_semi",
+                )
+                .groupBy("text_hash")
+                .agg(F.min("first_id").alias("__pf"))
             )
-            # bound the slice to the batch's OWN digest set before
-            # grouping: the touched-bucket slice grows with the corpus
-            # (a uniformly-hashed batch touches every bucket), so
-            # broadcasting it directly was a corpus-sized build side
-            # (round-14 verdict/ADVICE — the neardup_screen
-            # broadcast_batch class). Exchange shape: the BATCH digest
-            # set is the broadcast build side of this semi-join —
-            # bounded by the micro-batch contract — and the prior rows
-            # stream past it, so what survives is ≤ the batch's
-            # collision volume and safely broadcastable below.
-            .join(
-                F.broadcast(bh.select("text_hash").distinct()),
-                "text_hash",
-                "left_semi",
-            )
-            .groupBy("text_hash")
-            .agg(F.min("first_id").alias("__pf"))
-            if input_ready(spark, hashes_path)
-            else None
-        )
         wmin = Window.partitionBy("text_hash")
         flagged = bh.withColumn("__bm", F.min(id_col).over(wmin))
         if prior_h is not None:
@@ -1298,40 +1185,14 @@ def stream_curation_ingest(
         hash_rows = flagged.groupBy("text_hash", "hb").agg(
             F.min("__bm").alias("first_id")
         )
-        # prior-band read pruned to the batch's 2-hex band-hash
-        # prefixes (bounded ≤ 256-value collect → PartitionFilters;
-        # band equality implies prefix equality) — O(touched prefix
-        # dirs) per batch, not O(index), same as stream_neardup_ingest
-        pfxs = sorted(
-            r["pfx"]
-            for r in new_bands.select(
-                F.concat(
-                    F.lit("p"), F.substring("band_hash", 1, 2)
-                ).alias("pfx")
-            )
-            .distinct()
-            .collect()
-        )
-        prior_b = (
-            spark.read.parquet(bands_path)
-            .filter(
-                (F.col("pfx").isin(pfxs))
-                & (F.col("bp") < F.lit(int(batch_id)))
-            )
-            .select(id_col, "band_idx", "band_hash")
-            if input_ready(spark, bands_path)
-            else None
-        )
         empty_corpus = dedup_ops.minhash_bands(
             batch.limit(0), id_col, text_col
         )
-        # new_bands already materialized above for the index append —
-        # reuse it in the screen instead of re-banding the batch
-        # (round 16, guide §2.4)
-        near = dedup_ops.neardup_screen_bands(
-            batch, empty_corpus, prior_b, id_col, text_col,
-            new_bands=new_bands,
-        ).select(id_col, F.col("dup").alias("near_dup"))
+        near, append_bands = _neardup_lane(
+            batch, batch_id, empty_corpus, new_bands, bands_path, id_col,
+            text_col,
+        )
+        near = near.select(id_col, F.col("dup").alias("near_dup"))
         bench = spark.read.parquet(bench_path)
         doc_grams = text_ops.word_ngram_hashes(
             batch, id_col, text_col, ngram_n
@@ -1375,47 +1236,25 @@ def stream_curation_ingest(
                     & ~F.col("contaminated")
                 ).alias("kept"),
             )
-            .withColumn("bp", F.lit(int(batch_id)).cast("long"))
         )
 
-        # append_batch_partition (not coalesce(1) — round-14 verdict:
-        # one writer task per table serialized crawl-sized batches);
-        # the prune-keyed tables pass their key as coherence_col so
-        # each hb=/pfx= directory gets coherent parallel-written
-        # files. The three sinks target independent tables and are
+        # the prune-keyed tables repartition on their key so each
+        # hb=/pfx= directory gets coherent parallel-written files. The
+        # three sinks target independent tables and are
         # replay-idempotent by layout, so they run as overlapping
         # jobs (round 16, guide §2.6) instead of paying three full
         # sequential commit latencies per batch.
         run_jobs_concurrently(
+            lambda: append_batch_partition(verdict, verdicts_path, batch_id),
             lambda: append_batch_partition(
-                verdict, verdicts_path, ["bp"]
+                hash_rows, hashes_path, batch_id, "hb", len(bks)
             ),
-            lambda: append_batch_partition(
-                hash_rows.withColumn(
-                    "bp", F.lit(int(batch_id)).cast("long")
-                ),
-                hashes_path,
-                ["hb", "bp"],
-                coherence_col="hb",
-                coherence_width=len(bks),
-            ),
-            lambda: append_batch_partition(
-                new_bands.withColumn(
-                    "pfx",
-                    F.concat(F.lit("p"), F.substring("band_hash", 1, 2)),
-                ).withColumn("bp", F.lit(int(batch_id)).cast("long")),
-                bands_path,
-                ["pfx", "bp"],
-                coherence_col="pfx",
-                coherence_width=len(pfxs),
-            ),
-        )
-        _maybe_compact_bp(
-            spark, batch_id, compact_every, checkpoint_path, tables
+            append_bands,
         )
 
-    return _start_foreach_batch(
-        source, process_batch, checkpoint_path, available_now, trigger_seconds
+    return _start_bp_service(
+        source, process_batch, checkpoint_path, tables, compact_every,
+        available_now, trigger_seconds,
     )
 
 
@@ -1448,18 +1287,14 @@ def stream_dsir_ingest(
     partition instead of double-writing (the same self-overwrite
     guarantee the batch-id-keyed stats partial gives — the
     `stream_bm25_ingest` register-merge discipline, realized as
-    layout). Long-run partition counts are the compaction family's
-    job, as with the other at-rest services.
+    layout).
 
     After draining B1..Bn over an index built from corpus C,
     ``dsir_weights_indexed`` answers exactly like ``dsir_logweights``
     over C ∪ B1..Bn (law-tested; N-drain ≡ batch). Schema resolves
     from the sidecar the index was BUILT with; fail-fast at wiring if
-    index or sidecar is missing. Tables + checkpoint are a unit
-    (fail-fast at wiring; see
-    :func:`sinks.check_bp_checkpoint_coherent`); ``compact_every=N``
-    folds the three tables' committed ``bp`` partitions every N
-    batches (:func:`_maybe_compact_bp`)."""
+    index or sidecar is missing.
+    Wiring checks and ``compact_every``: :func:`_start_bp_service`."""
     import json
     import os
 
@@ -1467,70 +1302,26 @@ def stream_dsir_ingest(
         text as text_ops,
     )
 
+    tables = [
+        (os.path.join(index_path, t), None)
+        for t in ("buckets", "docs", "stats")
+    ]
+    _check_bp_tables(checkpoint_path, tables)
     with open(os.path.join(index_path, text_ops._DSIR_META_SIDECAR)) as f:
         meta = json.load(f)
     n_buckets = int(meta["n_buckets"])
     id_col, text_col = meta["id_col"], meta["text_col"]
     lang_col, target_lang = meta["lang_col"], meta["target_lang"]
-    tables = [
-        (os.path.join(index_path, "buckets"), None),
-        (os.path.join(index_path, "docs"), None),
-        (os.path.join(index_path, "stats"), None),
-    ]
-    _check_bp_tables(checkpoint_path, tables)
-
-    def write_bp(df: DataFrame, path: str) -> None:
-        # parallel bounded writers, not coalesce(1) — round-14 verdict:
-        # a crawl-sized batch's exploded bigram counts serialized
-        # through one task; AQE keeps tiny batches at ~1 file
-        append_batch_partition(df, path, ["bp"])
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
-        target = F.col(lang_col) == target_lang
-        exploded = text_ops._dsir_exploded(
-            batch, target, id_col, text_col, n_buckets
-        )
-        bp = F.lit(int(batch_id)).cast("long").alias("bp")
-        # three independent bp tables, replay-idempotent by layout:
-        # overlap the write jobs (round 16, guide §2.6)
-        run_jobs_concurrently(
-            lambda: write_bp(
-                exploded.groupBy(F.col(id_col), "bucket")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .select(F.col(id_col), "bucket", "n", bp),
-                os.path.join(index_path, "buckets"),
-            ),
-            lambda: write_bp(
-                batch.select(
-                    F.col(id_col), F.col(lang_col).alias("lang"), bp
-                ),
-                os.path.join(index_path, "docs"),
-            ),
-            lambda: write_bp(
-                exploded.groupBy("bucket")
-                .agg(
-                    F.count(F.lit(1)).alias("cr"),
-                    F.sum(
-                        F.when(F.col("__is_t"), 1).otherwise(0)
-                    ).alias("ct"),
-                )
-                .select(
-                    F.lit(int(batch_id)).cast("long").alias("batch_id"),
-                    "bucket",
-                    "cr",
-                    "ct",
-                    bp,
-                ),
-                os.path.join(index_path, "stats"),
-            ),
-        )
-        _maybe_compact_bp(
-            batch.sparkSession, batch_id, compact_every,
-            checkpoint_path, tables,
+        text_ops._dsir_write_batch(
+            batch, index_path, batch_id, target_lang, id_col, text_col,
+            lang_col, n_buckets,
         )
 
-    return _start_foreach_batch(
-        source, process_batch, checkpoint_path, available_now, trigger_seconds
+    return _start_bp_service(
+        source, process_batch, checkpoint_path, tables, compact_every,
+        available_now, trigger_seconds,
     )
 
 

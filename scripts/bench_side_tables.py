@@ -129,9 +129,7 @@ def run_cell(
             .write.partitionBy(bucket_col)
             .parquet(part)
         )
-        seed.withColumn("bp", F.lit(-1).cast("long")).write.partitionBy(
-            "bp"
-        ).parquet(bp)
+        sinks.append_batch_partition(seed, bp, sinks.BASE_BP)
         for rnd in (1, 2):
             t0 = time.time()
             sinks.merge_upsert_parquet(spark, batch, flat, keys=[id_col])
@@ -146,9 +144,7 @@ def run_cell(
             )
             out[f"bucketed_sink_sec_{rnd}"] = round(time.time() - t0, 3)
             t0 = time.time()
-            sinks.append_batch_partition(
-                batch.withColumn("bp", F.lit(rnd).cast("long")), bp, ["bp"]
-            )
+            sinks.append_batch_partition(batch, bp, rnd)
             out[f"bp_sink_sec_{rnd}"] = round(time.time() - t0, 3)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)

@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Intra-batch breakdown of stream_curation_ingest's single
 availableNow drain at sf0.1: wraps the eager points (DataFrame
-.collect / .localCheckpoint, sinks.append_batch_partition,
+.collect / .localCheckpoint, the service's append_batch_partition,
 curation_write_state) with wall timers. The lazy lanes' execution
 cost lands in whichever write/collect first forces them, so the
 table below is the true sequential action timeline of one batch.
@@ -32,10 +32,10 @@ def timed(label, fn):
 def main() -> None:
     import tempfile
 
-    from pyspark.sql import DataFrame
+    # the classic DataFrame overrides the eager methods, so patch it
+    from pyspark.sql.classic.dataframe import DataFrame
     from pyspark.sql import functions as F
 
-    from real_time_stock_market_data_pipeline__spark import sinks
     from real_time_stock_market_data_pipeline__spark.driver_queries._shared import (  # noqa: E501
         ensure_engine_conf,
     )
@@ -46,9 +46,10 @@ def main() -> None:
     )
     from real_time_stock_market_data_pipeline__spark.streaming import pipeline
 
-    # instrument the eager points
-    sinks.append_batch_partition = timed(
-        "append_batch_partition", sinks.append_batch_partition
+    # instrument the eager points; the service calls the writer through
+    # the name the pipeline module bound at import, so wrap that one
+    pipeline.append_batch_partition = timed(
+        "append_batch_partition", pipeline.append_batch_partition
     )
     DataFrame.collect = timed("collect", DataFrame.collect)
     DataFrame.localCheckpoint = timed(

@@ -144,6 +144,37 @@ def test_crash_mid_swap_then_different_later_batch(spark, workdir):
     }
 
 
+# `sinks.compact_parquet` swaps with the same two renames
+# (path -> path.compact_old, staged -> path); a crash in either window
+# must heal on the next call.
+
+_INITIAL = {("AAA", "2024-01-01", 10.0), ("BBB", "2024-01-01", 20.0)}
+
+
+def test_compact_parquet_crash_mid_swap_restores_table(spark, workdir):
+    # kill between the two renames: `path` is ABSENT, the table lives
+    # only at path.compact_old
+    path = _seed(spark, workdir)
+    os.rename(path, path + ".compact_old")
+
+    report = sinks.compact_parquet(spark, path)
+    assert report["rows"] == 2
+    assert _rows(spark, path) == _INITIAL
+    assert not os.path.exists(path + ".compact_old")
+
+
+def test_compact_parquet_crash_after_swap_drops_stale_old(spark, workdir):
+    # kill between the swap and cleanup: the compacted table is live,
+    # a superseded path.compact_old lingers next to it
+    path = _seed(spark, workdir)
+    shutil.copytree(path, path + ".compact_old")
+
+    report = sinks.compact_parquet(spark, path)
+    assert report["rows"] == 2
+    assert _rows(spark, path) == _INITIAL
+    assert not os.path.exists(path + ".compact_old")
+
+
 # --------------------------------------------------------------------------
 # Round 9: T4/T10 under crash at the STREAMING layer (the round-8 tests
 # above cover the sink's swap protocol; these cover checkpoint restart)

@@ -448,19 +448,18 @@ def test_compact_batch_partitions_flat_and_replay_safety(spark, tmp_path):
     a replay of an UNfolded batch stays idempotent (overwrites its
     own partition) — the invariant upto_bp exists to protect."""
     path = str(tmp_path / "t")
-    base = spark.range(100).select(
-        F.col("id"), (F.col("id") * 2).alias("v"),
-        F.lit(-1).cast("long").alias("bp"),
+    sinks.append_batch_partition(
+        spark.range(100).select(F.col("id"), (F.col("id") * 2).alias("v")),
+        path,
+        sinks.BASE_BP,
     )
-    base.write.partitionBy("bp").parquet(path)
     for b in range(4):
         sinks.append_batch_partition(
             spark.range(100 * (b + 1) + 1000, 100 * (b + 1) + 1010).select(
-                F.col("id"), (F.col("id") * 2).alias("v"),
-                F.lit(b).cast("long").alias("bp"),
+                F.col("id"), (F.col("id") * 2).alias("v")
             ),
             path,
-            ["bp"],
+            b,
         )
     before = sorted(tuple(r) for r in spark.read.parquet(path).drop("bp").collect())
     rep = sinks.compact_batch_partitions(spark, path, upto_bp=2)
@@ -476,11 +475,10 @@ def test_compact_batch_partitions_flat_and_replay_safety(spark, tmp_path):
     # total unchanged (idempotent by layout)
     sinks.append_batch_partition(
         spark.range(1400, 1410).select(
-            F.col("id"), (F.col("id") * 2).alias("v"),
-            F.lit(3).cast("long").alias("bp"),
+            F.col("id"), (F.col("id") * 2).alias("v")
         ),
         path,
-        ["bp"],
+        3,
     )
     assert sorted(
         tuple(r) for r in spark.read.parquet(path).drop("bp").collect()
@@ -496,16 +494,14 @@ def test_compact_batch_partitions_nested_and_heal(spark, tmp_path):
     import shutil as _sh
 
     path = str(tmp_path / "t")
-    for b in (-1, 0, 1):
+    for b in (sinks.BASE_BP, 0, 1):
         sinks.append_batch_partition(
             spark.range(20).select(
-                F.col("id"),
-                (F.col("id") % 4).cast("int").alias("cell"),
-                F.lit(b).cast("long").alias("bp"),
+                F.col("id"), (F.col("id") % 4).cast("int").alias("cell")
             ),
             path,
-            ["cell", "bp"],
-            coherence_col="cell",
+            b,
+            "cell",
         )
     before = sorted(
         tuple(r) for r in spark.read.parquet(path).drop("bp").collect()
@@ -554,14 +550,10 @@ def _rewrite_flat(spark, path):
     os.rename(path + "_flat", path)
 
 
-def _first_batch(spark, path, schema, row, partition_cols):
+def _first_batch(spark, path, schema, row, prune_col=None):
     """``path`` as the service's first micro-batch leaves it."""
     sinks.append_batch_partition(
-        spark.createDataFrame([row], schema).withColumn(
-            "bp", F.lit(0).cast("long")
-        ),
-        path,
-        partition_cols,
+        spark.createDataFrame([row], schema), path, 0, prune_col
     )
 
 
@@ -579,7 +571,7 @@ def _vecs(spark):
 
 def _semantic(spark, d):
     _first_batch(spark, f"{d}/idx", "vec_id: long, cell: int", (5, 0),
-                 ["cell", "bp"])
+                 "cell")
 
     def wire(src, ckpt):
         return pipeline.stream_semantic_screen(
@@ -607,8 +599,7 @@ def _neardup(spark, d):
     from real_time_stock_market_data_pipeline__spark.operators import dedup
 
     dedup.write_dedup_index(_docs(spark), f"{d}/corpus_bands")
-    _first_batch(spark, f"{d}/out", "doc_id: long, dup: boolean", (5, False),
-                 ["bp"])
+    _first_batch(spark, f"{d}/out", "doc_id: long, dup: boolean", (5, False))
 
     def wire(src, ckpt):
         return pipeline.stream_neardup_ingest(
@@ -656,7 +647,7 @@ def _curation(spark, d):
 
     curation.curation_write_state(_docs(spark), d)
     _first_batch(spark, f"{d}/verdicts", "doc_id: long, kept: boolean",
-                 (5, True), ["bp"])
+                 (5, True))
     return f"{d}/verdicts", _DOCS, (
         lambda src, ckpt: pipeline.stream_curation_ingest(src, d, ckpt)
     )
@@ -692,3 +683,39 @@ def test_ingest_wiring_refuses_pre_bp_table(spark, tmp_path, build):
     with pytest.raises(ValueError, match=re.escape(f"{table} holds data")):
         wire(src, ckpt)
     assert not os.path.exists(ckpt)
+
+
+@pytest.mark.parametrize(
+    "build", [_bq, _contrastive], ids=lambda f: f.__name__.strip("_")
+)
+def test_base_build_replaces_streamed_table(spark, tmp_path, build):
+    """Re-running an index builder over a table a stream has appended
+    to replaces the whole table — flat (bq) and cell-nested
+    (contrastive) alike: no bp>=0 partition survives, and the rows
+    equal a fresh build's."""
+    import glob
+
+    def live_bps(path):
+        return [
+            d
+            for d in glob.glob(f"{path}/**/bp=*", recursive=True)
+            if not d.endswith(f"bp={sinks.BASE_BP}")
+        ]
+
+    def rows(path):
+        return sorted(tuple(r) for r in spark.read.parquet(path).collect())
+
+    table, schema, wire = build(spark, str(tmp_path / "state"))
+    in_dir = str(tmp_path / "in")
+    _vecs(spark).withColumn("vec_id", F.col("vec_id") + 10).select(
+        *spark.createDataFrame([], schema).columns
+    ).write.parquet(in_dir)
+    wire(
+        pipeline.read_file_stream(spark, in_dir), str(tmp_path / "ckpt")
+    ).awaitTermination()
+    assert live_bps(table)
+
+    build(spark, str(tmp_path / "state"))
+    assert live_bps(table) == []
+    fresh, _, _ = build(spark, str(tmp_path / "fresh"))
+    assert rows(table) == rows(fresh)
