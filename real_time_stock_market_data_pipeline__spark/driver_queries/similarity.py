@@ -564,16 +564,9 @@ def q_ann_recall_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return row.schema, row.collect()
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    from real_time_stock_market_data_pipeline__spark.sinks import (
-        thread_inheriting_wrapper,
+    results = run_jobs_concurrently(
+        *[lambda v=v: run_leg(v) for v in variants]
     )
-
-    with ThreadPoolExecutor(max_workers=6) as pool:
-        results = list(
-            pool.map(thread_inheriting_wrapper()(run_leg), variants)
-        )
     rows = [r for _, leg_rows in results for r in leg_rows]
     return spark.createDataFrame(rows, schema=results[0][0])
 
@@ -715,20 +708,13 @@ def q_ann_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         for name, param, values in _SWEEP_GRID
         for v in values
     ]
-    from concurrent.futures import ThreadPoolExecutor
-
-    from real_time_stock_market_data_pipeline__spark.sinks import (
-        thread_inheriting_wrapper,
-    )
-
     def run_leg(g):
         df = leg(*g)
         return df.schema, df.collect()
 
-    with ThreadPoolExecutor(max_workers=6) as pool:
-        results = list(
-            pool.map(thread_inheriting_wrapper()(run_leg), grid)
-        )
+    results = run_jobs_concurrently(
+        *[lambda g=g: run_leg(g) for g in grid], max_workers=6
+    )
     schema = results[0][0]
     rows = [r for _, leg_rows in results for r in leg_rows]
     return spark.createDataFrame(rows, schema=schema)

@@ -54,8 +54,10 @@ def batch_daily_job(
     """The reference's batch pipeline (`spark_batch_processor.main`):
     scan (partition-pruned when a run date is given) → keep-last dedup
     per (symbol, day) → daily metrics → partitioned parquet →
-    optional warehouse upsert keyed (symbol, date). Returns the output
-    row count (observed, not a second job)."""
+    optional warehouse upsert keyed (symbol, date). The daily metrics
+    are materialized once and both sinks read that copy; the returned
+    output row count is counted from it, not from a re-read of the
+    written files."""
     raw = read_partitioned(spark, input_path, fmt=fmt, year=year, month=month, day=day)
     if not raw.head(1):
         raise RuntimeError(f"input gate: no rows at {input_path} (S7)")
@@ -68,13 +70,15 @@ def batch_daily_job(
         keys=[symbol_col, "__day", ts_col],
         order_by=[id_col] if id_col else [ts_col],
     ).drop("__day")
-    daily = ohlcv.daily_metrics(
-        deduped,
-        symbol_col=symbol_col,
-        ts_col=ts_col,
-        price_col=price_col,
-        id_col=id_col,
-        volume_col=volume_col,
+    daily = sinks.materialize(
+        ohlcv.daily_metrics(
+            deduped,
+            symbol_col=symbol_col,
+            ts_col=ts_col,
+            price_col=price_col,
+            id_col=id_col,
+            volume_col=volume_col,
+        )
     )
     out = daily.withColumn("year", F.year("date")).withColumn(
         "month", F.month("date")
@@ -86,7 +90,7 @@ def batch_daily_job(
         sinks.merge_upsert_parquet(
             spark, daily, warehouse_path, keys=["symbol", "date"]
         )
-    return spark.read.parquet(output_path).count()
+    return daily.count()
 
 
 def stream_job(

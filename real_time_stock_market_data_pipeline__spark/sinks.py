@@ -57,7 +57,7 @@ def thread_inheriting_wrapper():
     return inheritable_thread_target
 
 
-def run_jobs_concurrently(*thunks) -> list:
+def run_jobs_concurrently(*thunks, max_workers: int | None = None) -> list:
     """Run INDEPENDENT eager Spark actions (table writes to disjoint
     paths, bounded collects, localCheckpoints) as overlapping jobs
     from a thread pool (optimization guide §2.6: actions are only
@@ -80,13 +80,17 @@ def run_jobs_concurrently(*thunks) -> list:
     exit (slow JVM-thread accumulation across a long stream's
     micro-batches). The wrapper propagates the properties captured at
     submit time and cleans up the py4j connection when the thunk
-    returns."""
+    returns.
+
+    ``max_workers`` caps how many jobs are in flight at once (default:
+    all of them); a caller with more legs than the executors can
+    usefully overlap passes a smaller pool."""
     from concurrent.futures import ThreadPoolExecutor
 
     if len(thunks) == 1:
         return [thunks[0]()]
     wrap = thread_inheriting_wrapper()
-    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
+    with ThreadPoolExecutor(max_workers=max_workers or len(thunks)) as pool:
         futures = [pool.submit(wrap(t)) for t in thunks]
         results, errs = [], []
         for f in futures:
@@ -167,12 +171,45 @@ def kafka_writer(
     )
 
 
+def _is_data_name(name: str) -> bool:
+    """Spark's data-path rule for a file or directory name: a leading
+    ``_`` (unless a ``key=value`` partition directory) or ``.`` marks
+    commit markers, staging directories and checksums, not table
+    data."""
+    return not ((name.startswith("_") and "=" not in name) or name.startswith("."))
+
+
+def _data_files(path: str):
+    """The files a Spark scan of ``path`` reads, in a stable order."""
+    if os.path.isfile(path):
+        yield path
+        return
+    for root, dirs, names in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if _is_data_name(d))
+        for name in sorted(names):
+            if _is_data_name(name):
+                yield os.path.join(root, name)
+
+
 def input_ready(spark: SparkSession, path: str) -> bool:
-    """S7: availability gate — does the path exist and contain at least
-    one readable row?"""
+    """S7: availability gate — does the local path exist and hold at
+    least one committed row?
+
+    Answered on the driver from parquet footers, without a Spark job
+    (``spark`` is not used): walk the files a scan of ``path`` would
+    read (``_SUCCESS``, ``_temporary/`` and ``.crc`` are skipped by
+    Spark's rule, empty files hold no rows) and stop at the first
+    footer with rows. A missing path, a zero-row table and an
+    unreadable file met before any row all read as not ready."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     try:
-        return spark.read.parquet(path).limit(1).count() > 0
-    except Exception:
+        return any(
+            os.path.getsize(f) > 0 and pq.read_metadata(f).num_rows > 0
+            for f in _data_files(path)
+        )
+    except (OSError, pa.ArrowException):
         return False
 
 
@@ -202,6 +239,21 @@ def ensure_table(
     )
 
 
+def materialize(df: DataFrame) -> DataFrame:
+    """Compute ``df`` once (``localCheckpoint``) for a caller that reads
+    it more than once, and return the materialized copy.
+
+    ``localCheckpoint`` runs ``df``'s own query execution, which then
+    keeps the executed plan (broadcast relations and their memory
+    pages) for as long as ``df``'s Java handle lives. py4j frees a
+    handle only when Python's cycle collector gets to it, which in a
+    stream can be many micro-batches later, so the handle is released
+    here: the caller must not use ``df`` again."""
+    done = df.localCheckpoint()
+    df._jdf._detach()
+    return done
+
+
 def merge_upsert_parquet(
     spark: SparkSession, batch: DataFrame, path: str, keys: list[str]
 ) -> None:
@@ -213,6 +265,11 @@ def merge_upsert_parquet(
     MERGE; the swap keeps re-runs idempotent the same way the MERGE
     key did. On Delta/Iceberg this whole function is `MERGE INTO` and
     the swap disappears.
+
+    Both merge legs read ``batch`` (its keys for the anti-join, its
+    rows for the union), so a caller whose batch is an expensive plan,
+    or that feeds it to another sink too, passes a materialized frame
+    (:func:`materialize`) to compute it once.
 
     Crash-safety: POSIX cannot atomically swap two directories, so the
     two renames leave a window where ``path`` is absent and the data

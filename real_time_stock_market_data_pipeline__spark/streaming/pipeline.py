@@ -44,6 +44,7 @@ from real_time_stock_market_data_pipeline__spark.sinks import (
     compact_streaming_state,
     id_hash_bucket,
     input_ready,
+    materialize,
     merge_upsert_parquet,
     merge_upsert_parquet_partitioned,
     read_prior_batches,
@@ -271,8 +272,10 @@ def stream_realtime_metrics(
         )
         if stamp_last_updated:
             out = out.withColumn("last_updated", F.current_timestamp())
+        # both merge legs read the batch: compute the metrics once
         merge_upsert_parquet(
-            spark, out, target_path, keys=["symbol", "window_start"]
+            spark, materialize(out), target_path,
+            keys=["symbol", "window_start"],
         )
 
     return _start_foreach_batch(

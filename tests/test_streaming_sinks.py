@@ -288,8 +288,42 @@ def test_bucketed_join_has_no_shuffle(spark, sf_dir):
 
 
 def test_input_ready_gate(spark, sf_dir, tmp_path):
-    assert sinks.input_ready(spark, f"{sf_dir}/events.parquet")
-    assert not sinks.input_ready(spark, str(tmp_path / "nope"))
+    import shutil
+
+    single_file = f"{sf_dir}/events.parquet"
+    missing = str(tmp_path / "nope")
+    empty = str(tmp_path / "empty")
+    spark.range(0).write.parquet(empty)
+    # rows only in places a Spark scan skips: the commit marker and an
+    # uncommitted task attempt
+    staged = tmp_path / "staged"
+    (staged / "_temporary" / "0").mkdir(parents=True)
+    (staged / "_SUCCESS").write_bytes(b"")
+    shutil.copy(single_file, staged / "_temporary" / "0" / "part-0.parquet")
+    nested = str(tmp_path / "nested")
+    spark.range(4).select(
+        F.col("id"), (F.col("id") % 2).alias("year"), F.lit(0).alias("bp")
+    ).write.partitionBy("year", "bp").parquet(nested)
+    broken = tmp_path / "broken"
+    broken.mkdir()
+    (broken / "part-0.parquet").write_bytes(b"not a parquet file")
+
+    sc = spark.sparkContext
+    sc.setJobGroup("input_ready_gate", "footer gate starts no job")
+    try:
+        assert sinks.input_ready(spark, single_file)
+        assert sinks.input_ready(spark, nested)
+        assert not sinks.input_ready(spark, missing)
+        assert not sinks.input_ready(spark, empty)
+        assert not sinks.input_ready(spark, str(staged))
+        assert not sinks.input_ready(spark, str(broken))
+        assert list(sc.statusTracker().getJobIdsForGroup("input_ready_gate")) == []
+        # the probe itself sees a job run under the group
+        spark.range(1).count()
+        assert list(sc.statusTracker().getJobIdsForGroup("input_ready_gate"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
 
 
 def test_rate_source_builds(spark):
