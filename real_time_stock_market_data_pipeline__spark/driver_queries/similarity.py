@@ -712,9 +712,7 @@ def q_ann_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         df = leg(*g)
         return df.schema, df.collect()
 
-    results = run_jobs_concurrently(
-        *[lambda g=g: run_leg(g) for g in grid], max_workers=6
-    )
+    results = run_jobs_concurrently(*[lambda g=g: run_leg(g) for g in grid])
     schema = results[0][0]
     rows = [r for _, leg_rows in results for r in leg_rows]
     return spark.createDataFrame(rows, schema=schema)

@@ -16,6 +16,7 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
+from urllib.parse import urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -57,12 +58,19 @@ def thread_inheriting_wrapper():
     return inheritable_thread_target
 
 
-def run_jobs_concurrently(*thunks, max_workers: int | None = None) -> list:
+#: Most jobs :func:`run_jobs_concurrently` keeps in flight at once. The
+#: 12-leg ANN recall sweep runs 6 legs at a time; every other caller
+#: passes at most 6 thunks.
+MAX_CONCURRENT_JOBS = 6
+
+
+def run_jobs_concurrently(*thunks) -> list:
     """Run INDEPENDENT eager Spark actions (table writes to disjoint
     paths, bounded collects, localCheckpoints) as overlapping jobs
-    from a thread pool (optimization guide §2.6: actions are only
-    sequential because the driver calls them sequentially; concurrent
-    jobs back-fill executors freed by each other's stage tails).
+    from a thread pool of at most ``MAX_CONCURRENT_JOBS`` threads
+    (optimization guide §2.6: actions are only sequential because the
+    driver calls them sequentially; concurrent jobs back-fill
+    executors freed by each other's stage tails).
     Only for thunks with no mutual data dependency and — for writes —
     disjoint target tables, each individually idempotent/atomic, so a
     failure leaving an arbitrary SUBSET written is no worse than the
@@ -80,17 +88,15 @@ def run_jobs_concurrently(*thunks, max_workers: int | None = None) -> list:
     exit (slow JVM-thread accumulation across a long stream's
     micro-batches). The wrapper propagates the properties captured at
     submit time and cleans up the py4j connection when the thunk
-    returns.
-
-    ``max_workers`` caps how many jobs are in flight at once (default:
-    all of them); a caller with more legs than the executors can
-    usefully overlap passes a smaller pool."""
+    returns."""
     from concurrent.futures import ThreadPoolExecutor
 
     if len(thunks) == 1:
         return [thunks[0]()]
     wrap = thread_inheriting_wrapper()
-    with ThreadPoolExecutor(max_workers=max_workers or len(thunks)) as pool:
+    with ThreadPoolExecutor(
+        max_workers=min(len(thunks), MAX_CONCURRENT_JOBS)
+    ) as pool:
         futures = [pool.submit(wrap(t)) for t in thunks]
         results, errs = [], []
         for f in futures:
@@ -200,10 +206,20 @@ def input_ready(spark: SparkSession, path: str) -> bool:
     read (``_SUCCESS``, ``_temporary/`` and ``.crc`` are skipped by
     Spark's rule, empty files hold no rows) and stop at the first
     footer with rows. A missing path, a zero-row table and an
-    unreadable file met before any row all read as not ready."""
+    unreadable file met before any row all read as not ready.
+
+    ``path`` is a local path or a ``file:`` URI. Any other scheme
+    (``s3a://``, ``hdfs://``) raises ``ValueError``: the walk cannot
+    see a remote store, and reading it as empty would misreport why
+    the gate closed."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    url = urlsplit(path)
+    if url.scheme == "file" and url.netloc in ("", "localhost"):
+        path = url.path
+    elif url.scheme:
+        raise ValueError(f"input gate reads local paths only, got {path!r}")
     try:
         return any(
             os.path.getsize(f) > 0 and pq.read_metadata(f).num_rows > 0

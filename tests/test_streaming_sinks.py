@@ -317,6 +317,14 @@ def test_input_ready_gate(spark, sf_dir, tmp_path):
         assert not sinks.input_ready(spark, empty)
         assert not sinks.input_ready(spark, str(staged))
         assert not sinks.input_ready(spark, str(broken))
+        # a file: URI is the same local path; a remote store fails loudly
+        # instead of reading as empty
+        assert sinks.input_ready(spark, f"file://{nested}")
+        assert sinks.input_ready(spark, f"file:{nested}")
+        assert not sinks.input_ready(spark, f"file://{missing}")
+        for remote in ("s3a://bucket/events", "hdfs://nn:8020/events"):
+            with pytest.raises(ValueError, match="local paths only"):
+                sinks.input_ready(spark, remote)
         assert list(sc.statusTracker().getJobIdsForGroup("input_ready_gate")) == []
         # the probe itself sees a job run under the group
         spark.range(1).count()
