@@ -300,7 +300,7 @@ def corpus_pipeline(
         df = docs.join(
             F.broadcast(kept_ids.select("doc_id")), "doc_id", "left_semi"
         )
-        state["docs"] = df.localCheckpoint()
+        state["docs"] = sinks.materialize(df)
         return state["docs"].count()
 
     def _exact_dedup():
@@ -309,13 +309,13 @@ def corpus_pipeline(
             F.col("keep_id").alias("doc_id")
         )
         df = docs.join(F.broadcast(keepers), "doc_id", "left_semi")
-        state["docs"] = df.localCheckpoint()
+        state["docs"] = sinks.materialize(df)
         return state["docs"].count()
 
     def _neardup():
         df = dedup_ops.dedup_corpus(state["docs"], id_col="doc_id",
                                     text_col="text")
-        state["docs"] = df.localCheckpoint()
+        state["docs"] = sinks.materialize(df)
         return state["docs"].count()
 
     def _substring_dedup():
@@ -335,7 +335,7 @@ def corpus_pipeline(
                 "doc_id",
             )
         )
-        state["docs"] = df.localCheckpoint()
+        state["docs"] = sinks.materialize(df)
         return state["docs"].count()
 
     def _sample_split():
@@ -343,7 +343,7 @@ def corpus_pipeline(
         if sample_fraction < 1.0:
             df = sampling_ops.hash_sample(df, "doc_id", sample_fraction)
         df = sampling_ops.hash_split(df, "doc_id")
-        state["docs"] = df.localCheckpoint()
+        state["docs"] = sinks.materialize(df)
         return state["docs"].count()
 
     def _pack():
@@ -360,7 +360,7 @@ def corpus_pipeline(
             token_col="ws_tokens",
             budget=512,
         )
-        state["packs"] = packs.localCheckpoint()
+        state["packs"] = sinks.materialize(packs)
         return state["packs"].count()
 
     def _write():
@@ -419,13 +419,15 @@ def market_pipeline(
         return df.count()
 
     def _daily():
-        daily = ohlcv.daily_metrics(
-            state["ticks"],
-            symbol_col="event_type",
-            ts_col="ts",
-            price_col="value",
-            id_col="event_id",
-        ).localCheckpoint()
+        daily = sinks.materialize(
+            ohlcv.daily_metrics(
+                state["ticks"],
+                symbol_col="event_type",
+                ts_col="ts",
+                price_col="value",
+                id_col="event_id",
+            )
+        )
         state["daily"] = daily
         return daily.count()
 

@@ -1060,10 +1060,10 @@ def ivf_write_index(
     of the data. One full scan + one shuffle-free write (unlike the
     IVF-PQ codes, the payload here is the full float vectors — a
     repartition would shuffle the whole corpus for file aesthetics;
-    run :func:`sinks.compact_partitioned_cells` instead if the task
-    fan-out leaves too many files per cell); re-run to rebuild after
-    drift. A ``_ivf_meta.json`` sidecar stores the centroids so a
-    reader needs only the path (:func:`ivf_topk_indexed` with
+    run :func:`sinks.compact_parquet` on a ``cell=`` directory instead
+    if the task fan-out leaves too many files in it); re-run to
+    rebuild after drift. A ``_ivf_meta.json`` sidecar stores the
+    centroids so a reader needs only the path (:func:`ivf_topk_indexed` with
     ``centroids=None``)."""
     import json
     import os
@@ -1876,12 +1876,11 @@ def ivfpq_merge_index(
     is encoded under the training-time codebooks; retrain+rebuild via
     :func:`ivfpq_write_index` when drift warrants). The new batch is
     encoded map-side and MERGE-upserted on ``id_col`` into only the
-    cell partitions it touches
-    (:func:`sinks.merge_upsert_parquet_partitioned`): ingestion cost
-    tracks batch cell volume, not index size, re-ingesting an id
-    replaces its codes idempotently, and every probe-side property
-    (partition pruning, codes-only scan) is unchanged because the
-    layout is unchanged.
+    cell partitions it touches (:func:`sinks.merge_upsert_parquet`
+    with ``partition_col``): ingestion cost tracks batch cell volume,
+    not index size, re-ingesting an id replaces its codes idempotently,
+    and every probe-side property (partition pruning, codes-only scan)
+    is unchanged because the layout is unchanged.
 
     Exactness law (tested): merging batch B into an index built on
     corpus A, with A's codebooks, yields an index whose
@@ -1890,7 +1889,7 @@ def ivfpq_merge_index(
     under a fixed codebook, so WHERE a row was encoded cannot show in
     WHAT was stored."""
     from real_time_stock_market_data_pipeline__spark.sinks import (
-        merge_upsert_parquet_partitioned,
+        merge_upsert_parquet,
     )
 
     meta = ivfpq_read_meta(path)
@@ -1906,7 +1905,7 @@ def ivfpq_merge_index(
         *[F.element_at("_codes", s + 1).alias(f"c{s}") for s in range(m)],
         F.col("cell"),
     )
-    merge_upsert_parquet_partitioned(
+    merge_upsert_parquet(
         spark, batch, path, keys=[id_col], partition_col="cell"
     )
 

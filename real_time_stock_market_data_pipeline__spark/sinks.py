@@ -5,17 +5,23 @@
 - K1 Kafka keyed-JSON produce: `stream_data_producer.py:126-131`
 - K5/K6 warehouse staged MERGE upsert + DDL-if-absent:
   `load_to_snowflake.py:71-97,193-241` — engine-side equivalent is
-  `merge_upsert_parquet` (read-merge-swap on a parquet directory; on a
-  real deployment the same `relational.merge_upsert` feeds a Delta /
-  Iceberg `MERGE INTO` or a JDBC staging table)
+  `merge_upsert_parquet`, the one keyed-merge sink (read-merge-swap on
+  a flat or partitioned parquet directory; on a real deployment the
+  same `relational.merge_upsert` feeds a Delta / Iceberg `MERGE INTO`
+  or a JDBC staging table)
 - S7 input-availability gate: `check_minio_file.py:47-75`
+
+Every directory this module replaces (a merged table or partition, a
+compacted table or prune directory) goes through one stage → swap →
+heal primitive (`_swap`, `_heal`), so a killed write heals on the
+next call.
 """
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
-import tempfile
 from urllib.parse import urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
@@ -270,56 +276,151 @@ def materialize(df: DataFrame) -> DataFrame:
     return done
 
 
+def _hidden(d: str, role: str) -> str:
+    """The sibling ``.<name>.<role>`` of directory ``d``: the staged
+    (``stage``) or superseded (``old``) copy of ``d`` during a swap.
+    The leading dot keeps it out of every Spark scan, and out of
+    :func:`_data_files`, even when ``d`` is a partition directory
+    inside the table root."""
+    head, name = os.path.split(d.rstrip("/"))
+    return os.path.join(head, f".{name}.{role}")
+
+
+def _swap(new: str, live: str) -> None:
+    """Put directory ``new`` at ``live``. An existing ``live`` moves to
+    its hidden ``old`` sibling first, ``new`` moves in with the live
+    directory's permission bits (a staged directory may have been
+    created with different ones), and the superseded copy is deleted.
+
+    POSIX cannot swap two directories atomically: a kill between the
+    two renames leaves ``live`` absent and its data at ``old``, and
+    one before the delete leaves ``old`` next to the new ``live``.
+    :func:`_heal` undoes both, and every writer here calls it before
+    it reads. A single writer is assumed; a concurrent reader can
+    still see the gap, so use a table format with a transaction log
+    when readers are live during writes."""
+    if os.path.exists(live):
+        os.chmod(new, os.stat(live).st_mode & 0o7777)
+        old = _hidden(live, "old")
+        os.rename(live, old)
+        os.rename(new, live)
+        shutil.rmtree(old)
+    else:
+        os.rename(new, live)
+
+
+def _heal(path: str) -> None:
+    """Undo what killed swaps left at ``path`` and at the directories
+    directly inside it (the partitions a scoped merge or a nested
+    compaction swaps): delete a ``stage`` (the write runs again), move
+    an ``old`` whose directory is gone back into place, and delete an
+    ``old`` whose directory exists, because it is superseded."""
+    inner = os.listdir(path) if os.path.isdir(path) else []
+    dirs = [path] + [
+        os.path.join(path, n[1:].rsplit(".", 1)[0])
+        for n in sorted(inner)
+        if n.startswith(".") and n.endswith((".old", ".stage"))
+    ]
+    for d in dirs:
+        shutil.rmtree(_hidden(d, "stage"), ignore_errors=True)
+        old = _hidden(d, "old")
+        if os.path.isdir(old):
+            if os.path.exists(d):
+                shutil.rmtree(old)
+            else:
+                _swap(old, d)
+
+
 def merge_upsert_parquet(
-    spark: SparkSession, batch: DataFrame, path: str, keys: list[str]
+    spark: SparkSession,
+    batch: DataFrame,
+    path: str,
+    keys: list[str],
+    partition_col: str | None = None,
+    partition_width: int | None = None,
 ) -> None:
-    """K5/T10: idempotent keyed upsert into a parquet directory.
+    """K5/T10: idempotent keyed upsert into a parquet directory, the one
+    MERGE sink of both layers.
 
     Read-merge-swap: merge the batch with the current table state
-    (left-anti + union, `relational.merge_upsert`), write to a fresh
-    directory, swap. Local-FS implementation of the reference's staged
-    MERGE; the swap keeps re-runs idempotent the same way the MERGE
-    key did. On Delta/Iceberg this whole function is `MERGE INTO` and
-    the swap disappears.
+    (left-anti + union, `relational.merge_upsert`), stage the result
+    next to the table, swap it in (:func:`_swap`). Local-FS
+    implementation of the reference's staged MERGE; the swap keeps
+    re-runs idempotent the same way the MERGE key did. On
+    Delta/Iceberg this whole function is `MERGE INTO` and the swap
+    disappears.
 
     Both merge legs read ``batch`` (its keys for the anti-join, its
     rows for the union), so a caller whose batch is an expensive plan,
     or that feeds it to another sink too, passes a materialized frame
     (:func:`materialize`) to compute it once.
 
-    Crash-safety: POSIX cannot atomically swap two directories, so the
-    two renames leave a window where ``path`` is absent and the data
-    lives only at ``path + '.old'``. This function assumes a SINGLE
-    WRITER and self-heals: on entry, if ``path`` is missing but the
-    ``.old`` directory survives, it is renamed back before merging.
-    Concurrent readers can still observe the gap — use a table format
-    with a transaction log when readers are live during writes.
+    A flat table is the one-partition case. With ``partition_col`` the
+    table is laid out ``partitionBy(partition_col)`` and a batch reads
+    and rewrites only the partitions it touches: their values are
+    collected (bounded — for the semantic index, at most the centroid
+    count), the read is pruned to them, and each touched partition
+    directory is swapped on its own. The rest of the table, including
+    files in its root such as an index sidecar, is never read or
+    written, so ingestion cost tracks touched volume, not table size.
+    Only a table that does not exist yet is swapped in whole.
+
+    Crash safety: the staging name is derived from ``path``, and the
+    call first heals whatever a killed earlier call left
+    (:func:`_heal`), so a replay of the same batch after a crash in
+    any swap window leaves every key exactly once.
     """
-    old = path + ".old"
-    if not os.path.exists(path) and os.path.exists(old):
-        os.rename(old, path)  # recover from a crash mid-swap
-    elif os.path.exists(path) and os.path.exists(old):
-        # crash AFTER the new state went live but before cleanup: the
-        # .old dir is superseded garbage, and a non-empty .old would
-        # make the rename below fail with ENOTEMPTY (found by
-        # tests/test_crash_recovery.py failure injection)
-        shutil.rmtree(old)
+    _heal(path)
+    scope = None
+    if partition_col is not None:
+        touched = [
+            r[0] for r in batch.select(partition_col).distinct().collect()
+        ]
+        if not touched:
+            return
+        # NULL partition values land in __HIVE_DEFAULT_PARTITION__, which
+        # a plain isin(touched) would silently EXCLUDE from the merge
+        # read while the swap still replaces that directory with only
+        # the batch's rows — losing every previously stored NULL-key
+        # row (round-10 ADVICE). Make the touched filter null-safe.
+        non_null = [t for t in touched if t is not None]
+        scope = F.col(partition_col).isin(non_null)
+        if len(non_null) < len(touched):
+            scope = scope | F.col(partition_col).isNull()
     if input_ready(spark, path):
         current = spark.read.parquet(path)
+        if scope is not None:
+            current = current.filter(scope)
         merged = merge_upsert(current, batch.select(*current.columns), keys)
     else:
         merged = batch
-    tmp = tempfile.mkdtemp(prefix="merge_upsert_", dir=os.path.dirname(path) or ".")
-    try:
-        merged.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(path):
-            os.rename(path, old)
-            os.rename(tmp, path)
-            shutil.rmtree(old, ignore_errors=True)
-        else:
-            os.rename(tmp, path)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    stage = _hidden(path, "stage")
+    if partition_col is None:
+        merged.write.mode("overwrite").parquet(stage)
+    else:
+        # repartition on the partition key so each touched directory
+        # gets coherent files (without this every shuffle task writes a
+        # sliver into every cell dir — 32x the file count, and the
+        # read-back lists them all). partition_width (round 16): an
+        # explicit width pins one writer task per touched directory — a
+        # keyless repartition(col) gets AQE-coalesced on small batches
+        # to ~1 task that then opens every touched dir's parquet writer
+        # SEQUENTIALLY (measured 2.6x slower on a 256-dir append); the
+        # key's value count caps effective parallelism either way, so
+        # an explicit width loses nothing at crawl scale.
+        (
+            merged.repartition(max(1, int(partition_width)), F.col(partition_col))
+            if partition_width is not None
+            else merged.repartition(F.col(partition_col))
+        ).write.mode("overwrite").partitionBy(partition_col).parquet(stage)
+    if partition_col is None or not os.path.isdir(path):
+        _swap(stage, path)
+        return
+    for name in sorted(os.listdir(stage)):
+        part = os.path.join(stage, name)
+        if _is_data_name(name) and os.path.isdir(part):
+            _swap(part, os.path.join(path, name))
+    shutil.rmtree(stage)
 
 
 #: default bucket count for id-hash-bucketed side tables (doclens,
@@ -349,85 +450,6 @@ def id_hash_bucket(
         10,
     ).cast("long")
     return (h % n_buckets).cast("int")
-
-
-def merge_upsert_parquet_partitioned(
-    spark: SparkSession,
-    batch: DataFrame,
-    path: str,
-    keys: list[str],
-    partition_col: str,
-    partition_width: int | None = None,
-) -> None:
-    """Partition-scoped idempotent upsert: like
-    :func:`merge_upsert_parquet`, but the table is laid out
-    ``partitionBy(partition_col)`` and a batch only reads + rewrites
-    the partitions it actually touches (round-9 ADVICE on
-    ``stream_semantic_screen``: the flat read-merge-swap rewrote the
-    ENTIRE index per micro-batch, O(index) ingestion at odds with the
-    write-once/screen-forever framing).
-
-    Per batch: collect the touched partition values (bounded — for the
-    semantic index this is ≤ the centroid count), read the current
-    table pruned to those partitions (partition pruning, no full
-    scan), key-merge, and write back with **dynamic partition
-    overwrite** — only the touched partition directories are
-    replaced; the rest of the index is never read or written, so
-    ingestion cost tracks touched-cell volume, not index size.
-
-    Crash-safety contract: Spark's dynamic overwrite commits each
-    partition by directory rename, and a checkpoint replay re-merges
-    the same batch idempotently on ``keys`` — but unlike the
-    single-directory swap above there is no whole-table ``.old`` to
-    self-heal from, so a crash INSIDE the commit of one partition can
-    need manual cleanup of that partition's temporary files. On
-    Delta/Iceberg this whole function is a transactional
-    ``MERGE INTO`` and the caveat disappears — that is the 100 TB
-    deployment shape; this is its local-FS stand-in.
-    """
-    touched = [
-        r[0] for r in batch.select(partition_col).distinct().collect()
-    ]
-    if not touched:
-        return
-    # NULL partition values land in __HIVE_DEFAULT_PARTITION__, which a
-    # plain isin(touched) would silently EXCLUDE from the merge read
-    # while dynamic overwrite still rewrites that directory with only
-    # the batch's rows — losing every previously stored NULL-key row
-    # (round-10 ADVICE). Make the touched filter null-safe instead.
-    non_null = [t for t in touched if t is not None]
-    touched_pred = F.col(partition_col).isin(non_null)
-    if len(non_null) < len(touched):
-        touched_pred = touched_pred | F.col(partition_col).isNull()
-    if input_ready(spark, path):
-        current = spark.read.parquet(path).filter(touched_pred)
-        merged = merge_upsert(current, batch.select(*current.columns), keys)
-    else:
-        merged = batch
-    (
-        # repartition on the partition key so each touched directory
-        # gets coherent files (without this every shuffle task writes
-        # a sliver into every cell dir — 32x the file count, and the
-        # read-back lists them all). partition_width (round 16): an
-        # explicit width pins one writer task per touched directory —
-        # a keyless repartition(col) gets AQE-coalesced on small
-        # batches to ~1 task that then opens every touched dir's
-        # parquet writer SEQUENTIALLY (measured 2.6x slower on a
-        # 256-dir append); the key's value count caps effective
-        # parallelism either way, so an explicit width loses nothing
-        # at crawl scale.
-        (
-            merged.repartition(
-                max(1, int(partition_width)), F.col(partition_col)
-            )
-            if partition_width is not None
-            else merged.repartition(F.col(partition_col))
-        )
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partition_col)
-        .parquet(path)
-    )
 
 
 #: ``bp`` of an index builder's base build and of folded history: real
@@ -548,8 +570,10 @@ def committed_batch_watermark(checkpoint_dir: str) -> int | None:
 
 
 def check_bp_checkpoint_coherent(path: str, checkpoint_dir: str) -> None:
-    """Wiring-time refusal of the two table states a streaming ingest
-    service cannot write into (called once per side table):
+    """Wiring-time heal and check of one side table: first undo a
+    directory swap a killed compaction left (:func:`_heal`), so the
+    first batch's prior read lists no superseded partition, then refuse
+    the two table states a streaming ingest service cannot write into:
 
     - a table that holds parquet data but no ``bp=`` partition, flat
       or nested one level (e.g. ``cell=*/bp=*``): the ``bp=<batch_id>``
@@ -566,8 +590,7 @@ def check_bp_checkpoint_coherent(path: str, checkpoint_dir: str) -> None:
       committed_batch_watermark>)`` — after which ``bp=-1`` can never
       collide with a new run's ids.
     """
-    import glob
-
+    _heal(path)
     if not os.path.isdir(path):
         return
     bp_dirs = [
@@ -656,7 +679,6 @@ def compact_batch_partitions(
     path: str,
     upto_bp: int,
     prune_col: str | None = None,
-    target_file_bytes: int = 128 * 1024 * 1024,
 ) -> dict:
     """Fold COMMITTED ``bp=<batch_id>`` partitions into the base
     partition (``bp=-1``) — the compaction leg of the batch-partition
@@ -683,67 +705,24 @@ def compact_batch_partitions(
 
     Crash-safety: per parent directory, the consolidated data (row
     count verified) plus byte-copies of every kept newer partition are
-    staged in a ``_``-prefixed temp dir, then swapped in with the
-    two-rename + ``.old`` discipline of :func:`merge_upsert_parquet`
-    (self-healing on the next call; single writer assumed — stop or
-    pause the ingest around compaction, exactly like the cell
-    compactor). On Delta/Iceberg this whole function is OPTIMIZE /
+    staged and swapped in by :func:`_swap`, which heals on the next
+    call (single writer assumed — stop or pause the ingest around
+    compaction). On Delta/Iceberg this whole function is OPTIMIZE /
     rewrite_data_files; this is its local-FS stand-in.
 
     Returns {parent: {bp_dirs_before, bp_dirs_after, rows}} for the
     parents actually rewritten.
     """
-    import glob
-
-    def _flat_stage_path() -> str:
-        norm = path.rstrip("/")
-        return os.path.join(
-            os.path.dirname(norm) or ".",
-            "_compact_bp_" + os.path.basename(norm),
-        )
-
-    def _heal(candidates: list[str]) -> None:
-        # a crash mid-swap leaves <parent>.old: base dir missing ->
-        # restore it; both present -> the .old is superseded garbage
-        for old in candidates:
-            base = old[: -len(".old")]
-            if not os.path.exists(base):
-                os.rename(old, base)
-            else:
-                shutil.rmtree(old)
-
-    def _parents() -> list[str]:
-        # stale staging dirs from a crash before the swap: nested
-        # layout stages inside the table root we own; a flat table's
-        # staging lives in its enclosing directory under the
-        # DETERMINISTIC name _compact_bp_<table basename> (round-15
-        # ADVICE — a random mkdtemp name there could never be healed,
-        # and the enclosing dir may host other tables so only our own
-        # derived name is safe to remove)
-        if prune_col is not None:
-            for stale in glob.glob(os.path.join(path, "_compact_bp_*")):
-                shutil.rmtree(stale, ignore_errors=True)
-        else:
-            shutil.rmtree(_flat_stage_path(), ignore_errors=True)
-        if prune_col is None:
-            _heal([path + ".old"] if os.path.isdir(path + ".old") else [])
-            return [path] if os.path.isdir(path) else []
-        _heal(
-            sorted(
-                p
-                for p in glob.glob(os.path.join(path, f"{prune_col}=*.old"))
-                if os.path.isdir(p)
-            )
-        )
-        return sorted(
-            p
-            for p in glob.glob(os.path.join(path, f"{prune_col}=*"))
-            if os.path.isdir(p) and not p.endswith(".old")
-        )
-
+    _heal(path)
+    if not os.path.isdir(path):
+        return {}
+    parents = [path] if prune_col is None else [
+        os.path.join(path, e)
+        for e in sorted(os.listdir(path))
+        if e.startswith(f"{prune_col}=") and os.path.isdir(os.path.join(path, e))
+    ]
     reports: dict = {}
-    for parent in _parents():
-        old = parent + ".old"
+    for parent in parents:
         entries = sorted(os.listdir(parent))
         bp_dirs = {}
         for e in entries:
@@ -757,59 +736,27 @@ def compact_batch_partitions(
         if len(folded) <= 1:
             continue
         kept = sorted(b for b in bp_dirs if b > upto_bp)
-        src_dirs = [os.path.join(parent, bp_dirs[b]) for b in folded]
+        src = [os.path.join(parent, bp_dirs[b]) for b in folded]
+        stage = _hidden(parent, "stage")
+        os.makedirs(stage)
         # reading the leaf directories drops the hive bp column — the
         # consolidated files carry no bp, the bp=-1 dir name does
-        df = spark.read.parquet(*src_dirs)
-        n_rows = df.count()
-        total = sum(
-            os.path.getsize(f)
-            for d in src_dirs
-            for f in glob.glob(os.path.join(d, "*.parquet"))
+        n_rows = _write_compacted(
+            spark,
+            spark.read.parquet(*src),
+            sum(os.path.getsize(f) for f in _parquet_files(*src)),
+            os.path.join(stage, f"bp={BASE_BP}"),
         )
-        n_target = max(1, -(-total // target_file_bytes))
-        # staged NEXT TO the parent (not inside — the parent itself is
-        # renamed during the swap); "_"-prefixed so Spark listings of
-        # the table root ignore the in-flight rewrite. Flat tables use
-        # the deterministic sibling name so a crash leak is healed by
-        # the next call (see _parents); nested staging keeps a unique
-        # mkdtemp name (many prune dirs compact in one call) and is
-        # swept by the table-root glob.
-        if prune_col is None:
-            tmp = _flat_stage_path()
-            os.makedirs(tmp)
-        else:
-            tmp = tempfile.mkdtemp(
-                prefix="_compact_bp_", dir=os.path.dirname(parent) or "."
+        for b in kept:
+            shutil.copytree(
+                os.path.join(parent, bp_dirs[b]),
+                os.path.join(stage, bp_dirs[b]),
             )
-        # mkdtemp creates mode-0700 dirs; the swap would silently
-        # TIGHTEN the table dir's permissions vs the Spark-written
-        # original, cutting off group/other readers (round-15 ADVICE)
-        os.chmod(tmp, os.stat(parent).st_mode & 0o7777)
-        try:
-            base = os.path.join(tmp, f"bp={BASE_BP}")
-            df.coalesce(n_target).write.mode("overwrite").parquet(base)
-            check = spark.read.parquet(base).count()
-            if check != n_rows:
-                raise RuntimeError(
-                    f"bp compaction row mismatch in {parent}: "
-                    f"{n_rows} -> {check}; source left intact"
-                )
-            for b in kept:
-                shutil.copytree(
-                    os.path.join(parent, bp_dirs[b]),
-                    os.path.join(tmp, bp_dirs[b]),
-                )
-            for e in entries:
-                full = os.path.join(parent, e)
-                if os.path.isfile(full):  # _SUCCESS and friends
-                    shutil.copy2(full, os.path.join(tmp, e))
-            os.rename(parent, old)
-            os.rename(tmp, parent)
-            shutil.rmtree(old, ignore_errors=True)
-        except Exception:
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
+        for e in entries:
+            full = os.path.join(parent, e)
+            if os.path.isfile(full):  # _SUCCESS and friends
+                shutil.copy2(full, os.path.join(stage, e))
+        _swap(stage, parent)
         reports[os.path.basename(parent)] = {
             "bp_dirs_before": len(bp_dirs),
             "bp_dirs_after": 1 + len(kept),
@@ -846,66 +793,62 @@ def write_bucketed(
     writer.format("parquet").saveAsTable(table)
 
 
-def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> dict:
+#: target file size of the compactors: a compacted directory holds
+#: ⌈input bytes / COMPACT_FILE_BYTES⌉ files
+COMPACT_FILE_BYTES = 128 * 1024 * 1024
+
+
+def _parquet_files(*dirs: str) -> list[str]:
+    return [
+        f
+        for d in dirs
+        for f in glob.glob(os.path.join(d, "**", "*.parquet"), recursive=True)
+        if os.path.isfile(f)
+    ]
+
+
+def _write_compacted(
+    spark: SparkSession, df: DataFrame, n_bytes: int, dest: str
+) -> int:
+    """Write ``df`` (``n_bytes`` of parquet) to ``dest`` in
+    ⌈n_bytes / COMPACT_FILE_BYTES⌉ files and return its row count,
+    checked against the written copy. Coalesce, not repartition:
+    compaction must not pay a shuffle, it only concatenates row groups
+    (losing any within-file ordering is acceptable for parquet scan
+    workloads; re-sort explicitly if a zorder_key layout must be
+    preserved)."""
+    n_rows = df.count()
+    n_files = max(1, -(-n_bytes // COMPACT_FILE_BYTES))
+    df.coalesce(n_files).write.mode("overwrite").parquet(dest)
+    check = spark.read.parquet(dest).count()
+    if check != n_rows:
+        raise RuntimeError(
+            f"compaction row mismatch in {dest}: {n_rows} -> {check}; "
+            "source left intact"
+        )
+    return n_rows
+
+
+def compact_parquet(spark: SparkSession, path: str) -> dict:
     """Small-files compaction: rewrite a parquet directory into
-    ⌈total_bytes / target⌉ files with an atomic directory swap (same
-    crash-recovery discipline as :func:`merge_upsert_parquet`). The
-    operational chore every long-running streaming sink needs — a
-    foreachBatch MERGE that runs every minute leaves thousands of
-    KB-scale files whose open/footer overhead eventually dominates
-    scan time; at 100 TB the NameNode/listing cost alone forces this.
+    ⌈total_bytes / COMPACT_FILE_BYTES⌉ files (:func:`_write_compacted`)
+    and swap it in with :func:`_swap`, so a killed call heals on the
+    next one. The operational chore every long-running streaming sink
+    needs — a foreachBatch MERGE that runs every minute leaves
+    thousands of KB-scale files whose open/footer overhead eventually
+    dominates scan time; at 100 TB the NameNode/listing cost alone
+    forces this.
 
     Returns a report dict (files/bytes before and after, row count —
-    asserted unchanged). Coalesce, not repartition: compaction must
-    not pay a shuffle, it only concatenates row groups (losing any
-    within-file ordering is acceptable for parquet scan workloads;
-    re-sort explicitly if a zorder_key layout must be preserved).
-
-    A crash between the two swap renames leaves only
-    ``path.compact_old``; one after the swap leaves it superseded next
-    to the new ``path``. The next call heals both on entry, by the
-    rule of :func:`merge_upsert_parquet`: restore a lone
-    ``.compact_old``, delete a superseded one.
+    asserted unchanged).
     """
-    import glob
-
-    old = path + ".compact_old"
-    if not os.path.exists(path) and os.path.exists(old):
-        os.rename(old, path)
-    elif os.path.exists(old):
-        shutil.rmtree(old)
-    before = [
-        f
-        for f in glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-        if os.path.isfile(f)
-    ]
+    _heal(path)
+    before = _parquet_files(path)
     total = sum(os.path.getsize(f) for f in before)
-    n_target = max(1, -(-total // target_file_bytes))
-    df = spark.read.parquet(path)
-    n_rows = df.count()
-    tmp = tempfile.mkdtemp(prefix="compact_", dir=os.path.dirname(path) or ".")
-    try:
-        df.coalesce(n_target).write.mode("overwrite").parquet(tmp)
-        check = spark.read.parquet(tmp).count()
-        if check != n_rows:
-            raise RuntimeError(
-                f"compaction row mismatch: {n_rows} -> {check}; source left intact"
-            )
-        os.rename(path, old)
-        os.rename(tmp, path)
-        shutil.rmtree(old, ignore_errors=True)
-    except Exception:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
-    after = [
-        f
-        for f in glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-        if os.path.isfile(f)
-    ]
+    stage = _hidden(path, "stage")
+    n_rows = _write_compacted(spark, spark.read.parquet(path), total, stage)
+    _swap(stage, path)
+    after = _parquet_files(path)
     return {
         "files_before": len(before),
         "files_after": len(after),
@@ -913,111 +856,3 @@ def compact_parquet(
         "bytes_after": sum(os.path.getsize(f) for f in after),
         "rows": n_rows,
     }
-
-
-def compact_partitioned_cells(
-    spark: SparkSession,
-    path: str,
-    partition_col: str = "cell",
-    min_files: int = 8,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> dict:
-    """Cell-scoped small-files compaction for a ``partitionBy`` parquet
-    table (round-11 verdict ask #4). Where accretion actually happens
-    (measured while building this): the APPEND-mode partitioned sinks
-    (K2 — ``stream_realtime_metrics``/``stream_window_append`` write
-    one file set per micro-batch per touched partition, unboundedly),
-    while :func:`merge_upsert_parquet_partitioned` self-bounds per
-    write — dynamic partition overwrite REPLACES each touched
-    directory and the ``repartition(partition_col)`` leaves ~1 file
-    per cell per write — so for the MERGE-maintained semantic index
-    compaction only matters when a multi-task write (AQE skew split,
-    higher parallelism at real scale) leaves several files per cell.
-    Both shapes are covered: hot cells over the threshold are
-    rewritten, bounded cells are untouched.
-
-    Compacts ONLY the partition directories whose parquet file count
-    exceeds ``min_files`` — cold cells are never read or written, so
-    maintenance cost tracks hot-cell volume, not index size (the same
-    touched-scope discipline as the MERGE itself). Each hot directory
-    is rewritten with the :func:`compact_parquet` atomic-swap + row
-    -count-verified discipline, one directory at a time; a crash
-    between the two renames is self-healed on the next call (the
-    ``.compact_old`` directory is renamed back), and rows are never
-    changed, so a checkpoint replay over a compacted index re-merges
-    idempotently. On Delta/Iceberg this whole function is OPTIMIZE /
-    rewrite_data_files; this is its local-FS stand-in.
-
-    Returns {partition_value: per-dir report} for the rewritten cells.
-    """
-    import glob
-
-    reports: dict = {}
-    prefix = f"{partition_col}="
-    suffix = ".compact_old"
-    if not os.path.isdir(path):
-        return reports
-    entries = set(os.listdir(path))
-    # heal first: an orphaned <cell>.compact_old whose base directory
-    # is gone means a crash landed between the two swap renames —
-    # rename it back; one whose base EXISTS is superseded garbage from
-    # a crash after the swap went live
-    for entry in sorted(entries):
-        if not (entry.startswith(prefix) and entry.endswith(suffix)):
-            continue
-        base = entry[: -len(suffix)]
-        if base in entries:
-            shutil.rmtree(os.path.join(path, entry))
-        else:
-            os.rename(os.path.join(path, entry), os.path.join(path, base))
-            entries.add(base)
-        entries.discard(entry)
-    for entry in sorted(entries):
-        if not entry.startswith(prefix) or entry.endswith(suffix):
-            continue
-        full = os.path.join(path, entry)
-        old = full + suffix
-        if not os.path.isdir(full):
-            continue
-        files = [
-            f
-            for f in glob.glob(os.path.join(full, "*.parquet"))
-            if os.path.isfile(f)
-        ]
-        if len(files) <= min_files:
-            continue
-        total = sum(os.path.getsize(f) for f in files)
-        n_target = max(1, -(-total // target_file_bytes))
-        # reading the partition DIRECTORY drops the hive column — the
-        # value lives in the directory name, which the swap preserves
-        df = spark.read.parquet(full)
-        n_rows = df.count()
-        # "_"-prefixed so a concurrent table-root listing ignores the
-        # in-flight rewrite (same convention as _SUCCESS markers)
-        tmp = tempfile.mkdtemp(prefix="_compact_cell_", dir=path)
-        try:
-            df.coalesce(n_target).write.mode("overwrite").parquet(tmp)
-            check = spark.read.parquet(tmp).count()
-            if check != n_rows:
-                raise RuntimeError(
-                    f"compaction row mismatch in {entry}: "
-                    f"{n_rows} -> {check}; source left intact"
-                )
-            os.rename(full, old)
-            os.rename(tmp, full)
-            shutil.rmtree(old, ignore_errors=True)
-        except Exception:
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
-        reports[entry[len(prefix):]] = {
-            "files_before": len(files),
-            "files_after": len(
-                [
-                    f
-                    for f in glob.glob(os.path.join(full, "*.parquet"))
-                    if os.path.isfile(f)
-                ]
-            ),
-            "rows": n_rows,
-        }
-    return reports

@@ -46,7 +46,6 @@ from real_time_stock_market_data_pipeline__spark.sinks import (
     input_ready,
     materialize,
     merge_upsert_parquet,
-    merge_upsert_parquet_partitioned,
     read_prior_batches,
     run_jobs_concurrently,
 )
@@ -137,7 +136,9 @@ def _check_bp_tables(
     table and the stream's checkpoint are a unit — a FRESH checkpoint
     restarts batch ids at 0 and dynamic overwrite would clobber an
     existing table's ``bp=0..N`` partitions. Both checks live in
-    :func:`sinks.check_bp_checkpoint_coherent`."""
+    :func:`sinks.check_bp_checkpoint_coherent`, which first heals a
+    directory swap a killed compaction left, so the first batch never
+    reads a superseded partition."""
     for path, _ in tables:
         check_bp_checkpoint_coherent(path, checkpoint_path)
 
@@ -912,7 +913,7 @@ def stream_bm25_ingest(
         # three independent tables, idempotent sinks (keyed postings
         # MERGE / bp self-overwrite): overlap the write jobs
         run_jobs_concurrently(
-            lambda: merge_upsert_parquet_partitioned(
+            lambda: merge_upsert_parquet(
                 batch.sparkSession, postings,
                 os.path.join(index_path, "postings"),
                 keys=["term", id_col], partition_col="term_bucket",

@@ -135,7 +135,7 @@ def run_cell(
             sinks.merge_upsert_parquet(spark, batch, flat, keys=[id_col])
             out[f"flat_sink_sec_{rnd}"] = round(time.time() - t0, 3)
             t0 = time.time()
-            sinks.merge_upsert_parquet_partitioned(
+            sinks.merge_upsert_parquet(
                 spark,
                 bucketed_batch,
                 part,

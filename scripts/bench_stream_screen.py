@@ -153,7 +153,7 @@ def experiment_b(spark, embs, index_rows: int) -> dict:
             )
             out[f"flat_sink_sec_{rnd}"] = round(time.time() - t0, 3)
             t0 = time.time()
-            sinks.merge_upsert_parquet_partitioned(
+            sinks.merge_upsert_parquet(
                 spark, batch, part, keys=["vec_id"], partition_col="cell"
             )
             out[f"partitioned_sink_sec_{rnd}"] = round(

@@ -37,3 +37,40 @@ def duck():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+class InjectedCrash(Exception):
+    """A kill injected into a directory swap of the `sinks` module."""
+
+
+@pytest.fixture()
+def crash_at(monkeypatch):
+    """Arm one injected kill in the next `sinks` directory swap and
+    return its exception type, for ``pytest.raises``:
+
+    - ``crash_at("rename", n)``: the n-th ``os.rename`` raises before
+      it moves anything;
+    - ``crash_at("cleanup")``: the first delete of a superseded
+      ``.old`` directory raises before it deletes.
+
+    Every later call runs normally, so the test's replay starts from
+    exactly the on-disk state a kill at that point leaves."""
+    import os
+    import shutil
+
+    def arm(op: str, n: int = 1) -> type[InjectedCrash]:
+        mod, name = (os, "rename") if op == "rename" else (shutil, "rmtree")
+        real = getattr(mod, name)
+        left = [n]
+
+        def fake(path, *args, **kwargs):
+            if op == "rename" or str(path).endswith(".old"):
+                left[0] -= 1
+                if left[0] == 0:
+                    raise InjectedCrash(f"killed at {op} #{n}")
+            return real(path, *args, **kwargs)
+
+        monkeypatch.setattr(mod, name, fake)
+        return InjectedCrash
+
+    return arm

@@ -191,7 +191,7 @@ def test_check_bp_checkpoint_coherent(spark, tmp_path):
 
 
 def test_compact_preserves_dir_mode_and_heals_flat_stage_leak(
-    spark, tmp_path
+    spark, tmp_path, crash_at
 ):
     path = str(tmp_path / "tbl")
     df = spark.createDataFrame([(1, 1)], "id: long, v: long")
@@ -202,17 +202,14 @@ def test_compact_preserves_dir_mode_and_heals_flat_stage_leak(
     os.chmod(path, 0o775)
     want_mode = os.stat(path).st_mode & 0o7777
 
-    # plant a stale staging dir from a "crashed" prior compaction —
-    # the deterministic sibling name the healer must clean
-    stale = os.path.join(
-        os.path.dirname(path), "_compact_bp_" + os.path.basename(path)
-    )
-    os.makedirs(os.path.join(stale, "bp=-1"))
-    with open(os.path.join(stale, "bp=-1", "junk"), "w") as f:
-        f.write("leftover")
+    # a prior compaction killed before its swap leaves its staged copy
+    # under the deterministic sibling name the healer must clean
+    with pytest.raises(crash_at("rename", 1)):
+        sinks.compact_batch_partitions(spark, path, upto_bp=1)
+    assert len(os.listdir(tmp_path)) == 2
 
     rep = sinks.compact_batch_partitions(spark, path, upto_bp=1)
-    assert rep and not os.path.exists(stale)
+    assert rep and os.listdir(tmp_path) == ["tbl"]
     # table dir mode survived the swap (mkdtemp would leave 0700)
     assert os.stat(path).st_mode & 0o7777 == want_mode
     assert spark.read.parquet(path).count() == 3

@@ -1,21 +1,24 @@
-"""Failure injection for `sinks.merge_upsert_parquet`'s read-merge-swap.
+"""Failure injection for the directory swap behind
+`sinks.merge_upsert_parquet` (flat and partition-scoped) and
+`sinks.compact_parquet` / `sinks.compact_batch_partitions`.
 
 The reference's warehouse load guarantees exactly-once via an
 idempotent keyed MERGE (`realtime_load_to_snowflake.py:225-251` —
 re-running a batch cannot double-apply it). The parquet sink makes the
 same promise under a single writer; these tests prove it holds not
 just under re-run but under a CRASH at every window of the swap
-protocol:
+protocol, run once per swapped directory (the table, or each touched
+partition):
 
-  stage:   write merged -> tmp dir
-  swap A:  rename(path, path.old)        <- crash here: path absent
-  swap B:  rename(tmp, path)             <- crash here: stale .old
-  cleanup: rmtree(path.old)
+  stage:   write the replacement -> hidden sibling .<name>.stage
+  swap A:  rename(live, .<name>.old)   <- crash here: nothing moved
+  swap B:  rename(stage, live)         <- crash here: live absent
+  cleanup: rmtree(.<name>.old)         <- crash here: stale .old
 
-Each test reconstructs the exact on-disk state a kill at that point
-leaves behind, then calls merge_upsert_parquet again (the restart
-re-delivering the SAME batch, which is what a checkpointed stream
-does) and asserts the final table equals the exactly-once result.
+Each test kills the call at one of these points (the ``crash_at``
+fixture, `conftest.py`), then calls again — the restart re-delivering
+the SAME batch, which is what a checkpointed stream does — and
+asserts the final table equals the exactly-once result.
 """
 
 from __future__ import annotations
@@ -70,6 +73,20 @@ def _seed(spark, workdir):
     return path
 
 
+def _merge(spark, batch, path):
+    sinks.merge_upsert_parquet(spark, batch, path, keys=["symbol", "date"])
+
+
+def _no_swap_debris(workdir):
+    # every staged or superseded directory is a hidden .<name>.<role>
+    return not [
+        os.path.join(d, n)
+        for d, dirs, _ in os.walk(workdir)
+        for n in dirs
+        if n.startswith(".")
+    ]
+
+
 def test_rerun_same_batch_is_exactly_once(spark, workdir):
     path = _seed(spark, workdir)
     for _ in range(3):  # checkpoint re-delivery: N replays, one effect
@@ -79,55 +96,51 @@ def test_rerun_same_batch_is_exactly_once(spark, workdir):
         assert _rows(spark, path) == EXPECTED
 
 
-def test_crash_after_stage_before_swap(spark, workdir):
-    # kill between the staging write and swap A: target untouched, an
-    # orphaned merge_upsert_* staging dir survives next to it
+def test_crash_after_stage_before_swap(spark, workdir, crash_at):
+    # kill between the staging write and swap A: target untouched, the
+    # staged merge survives next to it
     path = _seed(spark, workdir)
-    stray = tempfile.mkdtemp(prefix="merge_upsert_", dir=workdir)
-    _batch(spark).write.mode("overwrite").parquet(stray)
+    with pytest.raises(crash_at("rename", 1)):
+        _merge(spark, _batch(spark), path)
+    assert _rows(spark, path) == {tuple(r) for r in _initial(spark).collect()}
 
-    sinks.merge_upsert_parquet(
-        spark, _batch(spark), path, keys=["symbol", "date"]
-    )
+    _merge(spark, _batch(spark), path)
     assert _rows(spark, path) == EXPECTED
+    assert _no_swap_debris(workdir)
 
 
-def test_crash_mid_swap_recovers_old_state(spark, workdir):
+def test_crash_mid_swap_recovers_old_state(spark, workdir, crash_at):
     # kill between swap A and swap B: `path` is ABSENT, the pre-batch
-    # state lives only at path.old (the documented worst window)
+    # state lives only at its hidden .old (the documented worst window)
     path = _seed(spark, workdir)
-    os.rename(path, path + ".old")
+    with pytest.raises(crash_at("rename", 2)):
+        _merge(spark, _batch(spark), path)
     assert not os.path.exists(path)
 
-    sinks.merge_upsert_parquet(
-        spark, _batch(spark), path, keys=["symbol", "date"]
-    )
+    _merge(spark, _batch(spark), path)
     assert _rows(spark, path) == EXPECTED
-    assert not os.path.exists(path + ".old")
+    assert _no_swap_debris(workdir)
 
 
-def test_crash_after_swap_before_cleanup(spark, workdir):
+def test_crash_after_swap_before_cleanup(spark, workdir, crash_at):
     # kill between swap B and cleanup: new state is live at `path`,
     # a stale .old lingers; the restart re-delivers the same batch
     path = _seed(spark, workdir)
-    sinks.merge_upsert_parquet(
-        spark, _batch(spark), path, keys=["symbol", "date"]
-    )
-    # manufacture the stale .old a crash would have left
-    shutil.copytree(path, path + ".old")
+    with pytest.raises(crash_at("cleanup")):
+        _merge(spark, _batch(spark), path)
 
-    sinks.merge_upsert_parquet(
-        spark, _batch(spark), path, keys=["symbol", "date"]
-    )
+    _merge(spark, _batch(spark), path)
     assert _rows(spark, path) == EXPECTED
+    assert _no_swap_debris(workdir)
 
 
-def test_crash_mid_swap_then_different_later_batch(spark, workdir):
+def test_crash_mid_swap_then_different_later_batch(spark, workdir, crash_at):
     # recovery must not resurrect rows a LATER batch supersedes: crash
     # mid-swap, then the restarted job applies batch1 (replay) and a
     # new batch2
     path = _seed(spark, workdir)
-    os.rename(path, path + ".old")
+    with pytest.raises(crash_at("rename", 2)):
+        _merge(spark, _batch(spark), path)
 
     sinks.merge_upsert_parquet(
         spark, _batch(spark), path, keys=["symbol", "date"]
@@ -144,35 +157,41 @@ def test_crash_mid_swap_then_different_later_batch(spark, workdir):
     }
 
 
-# `sinks.compact_parquet` swaps with the same two renames
-# (path -> path.compact_old, staged -> path); a crash in either window
-# must heal on the next call.
+# `sinks.compact_parquet` swaps through the same primitive; a crash in
+# either rename window must heal on the next call.
 
 _INITIAL = {("AAA", "2024-01-01", 10.0), ("BBB", "2024-01-01", 20.0)}
 
 
-def test_compact_parquet_crash_mid_swap_restores_table(spark, workdir):
+def test_compact_parquet_crash_mid_swap_restores_table(
+    spark, workdir, crash_at
+):
     # kill between the two renames: `path` is ABSENT, the table lives
-    # only at path.compact_old
+    # only at its hidden .old
     path = _seed(spark, workdir)
-    os.rename(path, path + ".compact_old")
+    with pytest.raises(crash_at("rename", 2)):
+        sinks.compact_parquet(spark, path)
+    assert not os.path.exists(path)
 
     report = sinks.compact_parquet(spark, path)
     assert report["rows"] == 2
     assert _rows(spark, path) == _INITIAL
-    assert not os.path.exists(path + ".compact_old")
+    assert _no_swap_debris(workdir)
 
 
-def test_compact_parquet_crash_after_swap_drops_stale_old(spark, workdir):
+def test_compact_parquet_crash_after_swap_drops_stale_old(
+    spark, workdir, crash_at
+):
     # kill between the swap and cleanup: the compacted table is live,
-    # a superseded path.compact_old lingers next to it
+    # a superseded .old lingers next to it
     path = _seed(spark, workdir)
-    shutil.copytree(path, path + ".compact_old")
+    with pytest.raises(crash_at("cleanup")):
+        sinks.compact_parquet(spark, path)
 
     report = sinks.compact_parquet(spark, path)
     assert report["rows"] == 2
     assert _rows(spark, path) == _INITIAL
-    assert not os.path.exists(path + ".compact_old")
+    assert _no_swap_debris(workdir)
 
 
 # --------------------------------------------------------------------------
@@ -291,7 +310,7 @@ def test_checkpoint_rollback_replays_batch_idempotently(spark, workdir):
 
 
 # ---------------------------------------------------------------------------
-# merge_upsert_parquet_partitioned (the cell-partitioned index sink)
+# merge_upsert_parquet with partition_col (the cell-partitioned index sink)
 # ---------------------------------------------------------------------------
 
 
@@ -313,7 +332,7 @@ def test_partitioned_merge_batch0_replay_exactly_once(spark, workdir):
         "id long, payload string, cell int",
     )
     for _ in range(3):  # batch 0, then two crash replays of batch 0
-        sinks.merge_upsert_parquet_partitioned(
+        sinks.merge_upsert_parquet(
             spark, batch0, path, keys=["id"], partition_col="cell"
         )
         assert _pidx_rows(spark, path) == [
@@ -328,7 +347,7 @@ def test_partitioned_merge_later_batch_touches_only_its_cells(
     must leave cell 1 byte-untouched (its directory is never read or
     rewritten) and merge cell 0; replaying that batch is idempotent."""
     path = os.path.join(workdir, "pidx")
-    sinks.merge_upsert_parquet_partitioned(
+    sinks.merge_upsert_parquet(
         spark,
         spark.createDataFrame(
             [(1, "x", 0), (2, "y", 0), (3, "z", 1)],
@@ -342,7 +361,7 @@ def test_partitioned_merge_later_batch_touches_only_its_cells(
     )
     expected = [(1, "X", 0), (2, "y", 0), (3, "z", 1), (4, "w", 0)]
     for _ in range(2):  # apply + crash replay
-        sinks.merge_upsert_parquet_partitioned(
+        sinks.merge_upsert_parquet(
             spark, batch1, path, keys=["id"], partition_col="cell"
         )
         assert _pidx_rows(spark, path) == expected
@@ -357,7 +376,7 @@ def test_partitioned_merge_preserves_null_partition_rows(spark, workdir):
     still rewrites that directory — previously stored NULL-key rows
     were lost. The null-safe filter must merge them instead."""
     path = os.path.join(workdir, "pidx")
-    sinks.merge_upsert_parquet_partitioned(
+    sinks.merge_upsert_parquet(
         spark,
         spark.createDataFrame(
             [(1, "a", None), (2, "b", 0)],
@@ -365,7 +384,7 @@ def test_partitioned_merge_preserves_null_partition_rows(spark, workdir):
         ),
         path, keys=["id"], partition_col="cell",
     )
-    sinks.merge_upsert_parquet_partitioned(
+    sinks.merge_upsert_parquet(
         spark,
         spark.createDataFrame(
             [(3, "c", None)], "id long, payload string, cell int"
@@ -375,6 +394,100 @@ def test_partitioned_merge_preserves_null_partition_rows(spark, workdir):
     assert _pidx_rows(spark, path) == [
         (1, "a", None), (2, "b", 0), (3, "c", None),
     ]
+
+
+def _snapshot(d):
+    """{file name: bytes} of a partition directory."""
+    out = {}
+    for name in sorted(os.listdir(d)):
+        with open(os.path.join(d, name), "rb") as f:
+            out[name] = f.read()
+    return out
+
+
+#: crash point -> the injected kill; the partitioned batch below swaps
+#: cell=0 (renames 1-2) and then cell=2 (renames 3-4)
+_PARTITIONED_CRASHES = {
+    "after_stage_before_swap": ("rename", 1),
+    "between_a_partitions_renames": ("rename", 4),
+    "after_swap_before_cleanup": ("cleanup", 1),
+}
+
+
+@pytest.mark.parametrize("point", sorted(_PARTITIONED_CRASHES))
+def test_partitioned_merge_heals_each_crash_window(
+    spark, workdir, crash_at, point
+):
+    """A kill at each window of the per-partition swap, then a replay
+    of the same batch: every key lands exactly once, the partition the
+    batch does not touch stays byte-identical, and a file in the table
+    root (an index sidecar lives there) survives. In the middle window
+    cell=0 is already swapped and cell=2 is half-swapped."""
+    path = os.path.join(workdir, "pidx")
+    schema = "id long, payload string, cell int"
+    sinks.merge_upsert_parquet(
+        spark,
+        spark.createDataFrame([(1, "x", 0), (2, "y", 1), (3, "z", 2)], schema),
+        path, keys=["id"], partition_col="cell",
+    )
+    sidecar = os.path.join(path, "_meta.json")
+    with open(sidecar, "w") as f:
+        f.write("{}")
+    untouched = _snapshot(os.path.join(path, "cell=1"))
+    batch = spark.createDataFrame([(1, "X", 0), (4, "w", 2)], schema)
+
+    with pytest.raises(crash_at(*_PARTITIONED_CRASHES[point])):
+        sinks.merge_upsert_parquet(
+            spark, batch, path, keys=["id"], partition_col="cell"
+        )
+    sinks.merge_upsert_parquet(
+        spark, batch, path, keys=["id"], partition_col="cell"
+    )
+    assert _pidx_rows(spark, path) == [
+        (1, "X", 0), (2, "y", 1), (3, "z", 2), (4, "w", 2),
+    ]
+    assert _snapshot(os.path.join(path, "cell=1")) == untouched
+    assert os.path.isfile(sidecar)
+    assert _no_swap_debris(workdir)
+
+
+def test_nested_compaction_crash_mid_swap_heals_at_wiring(
+    spark, workdir, crash_at
+):
+    """A kill between the two renames of a nested compaction's swap
+    leaves the compacted cell's data only in its superseded copy. The
+    next service wiring must heal it before the first batch reads the
+    prior rows: a superseded directory listed as a partition turns the
+    cell column into a string, and the batch's cell filter then fails
+    under ANSI casts on every replay."""
+    from pyspark.sql import functions as F
+
+    from real_time_stock_market_data_pipeline__spark.streaming import pipeline
+
+    path = os.path.join(workdir, "kept")
+    rows = spark.range(8).select(
+        F.col("id"), (F.col("id") % 4).cast("int").alias("cell")
+    )
+    sinks.append_batch_partition(rows, path, sinks.BASE_BP, "cell")
+    # only cell 2 accretes batch partitions, so only its swap runs
+    for b in (0, 1):
+        sinks.append_batch_partition(
+            spark.createDataFrame([(100 + b, 2)], "id long, cell int"),
+            path, b, "cell",
+        )
+    ckpt = os.path.join(workdir, "ckpt")
+    os.makedirs(os.path.join(ckpt, "commits"))
+    for b in (0, 1):
+        open(os.path.join(ckpt, "commits", str(b)), "w").close()
+
+    with pytest.raises(crash_at("rename", 2)):
+        sinks.compact_batch_partitions(spark, path, upto_bp=1, prune_col="cell")
+    pipeline._check_bp_tables(ckpt, [(path, "cell")])
+
+    prior = sinks.read_prior_batches(spark, path, 2)
+    got = sorted(r["id"] for r in prior.filter(F.col("cell").isin([2])).collect())
+    assert got == [2, 6, 100, 101]
+    assert _no_swap_debris(workdir)
 
 
 # ---------------------------------------------------------------------------

@@ -2086,57 +2086,6 @@ def test_stream_semantic_screen_compaction_bounds_files(spark):
 
 
 @pytest.mark.slow
-def test_compact_partitioned_cells_scopes_and_heals(spark, tmp_path):
-    """Unit contract of sinks.compact_partitioned_cells on the shape
-    that really accretes — an APPEND-mode partitioned sink writing one
-    file set per batch (K2): only directories over min_files are
-    rewritten (cold cells untouched — same file set), rows are
-    unchanged, and a crash mid-swap (cell dir renamed away,
-    .compact_old left) self-heals on the next call."""
-    import glob
-    import os
-
-    from real_time_stock_market_data_pipeline__spark import sinks
-
-    path = str(tmp_path / "tbl")
-    # hot cell: 12 appended file sets (one per "micro-batch"); cold: 1
-    for i in range(12):
-        spark.createDataFrame(
-            [(i, 0)], "k long, cell int"
-        ).coalesce(1).write.mode("append").partitionBy("cell").parquet(path)
-    spark.createDataFrame(
-        [(99, 1)], "k long, cell int"
-    ).coalesce(1).write.mode("append").partitionBy("cell").parquet(path)
-    assert len(glob.glob(os.path.join(path, "cell=0", "*.parquet"))) == 12
-
-    cold_before = sorted(glob.glob(os.path.join(path, "cell=1", "*.parquet")))
-    rep = sinks.compact_partitioned_cells(
-        spark, path, partition_col="cell", min_files=2
-    )
-    assert list(rep) == ["0"] and rep["0"]["rows"] == 12
-    assert rep["0"]["files_after"] < rep["0"]["files_before"]
-    assert rep["0"]["files_after"] == 1  # tiny bytes -> single file
-    assert sorted(
-        glob.glob(os.path.join(path, "cell=1", "*.parquet"))
-    ) == cold_before
-    got = sorted(r["k"] for r in spark.read.parquet(path).collect())
-    assert got == list(range(12)) + [99]
-
-    # simulate a crash between the two swap renames
-    os.rename(
-        os.path.join(path, "cell=0"),
-        os.path.join(path, "cell=0.compact_old"),
-    )
-    sinks.compact_partitioned_cells(
-        spark, path, partition_col="cell", min_files=2
-    )
-    assert os.path.isdir(os.path.join(path, "cell=0"))
-    assert not os.path.isdir(os.path.join(path, "cell=0.compact_old"))
-    got = sorted(r["k"] for r in spark.read.parquet(path).collect())
-    assert got == list(range(12)) + [99]
-
-
-@pytest.mark.slow
 def test_stream_semantic_screen_rebuilds_stale_corpus_assignment(spark):
     """Fingerprint sidecar (round-11 ADVICE): a pre-existing
     ``corpus_assigned_path`` built from a DIFFERENT corpus must be

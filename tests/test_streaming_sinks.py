@@ -200,10 +200,12 @@ def test_kafka_codec_roundtrip_is_lossless(spark, sf_dir):
     assert got == orig
 
 
-def test_merge_upsert_parquet_recovers_from_crashed_swap(spark, sf_dir):
-    """A crash between the two swap renames leaves data only at
-    path + '.old'; the next merge_upsert_parquet call must recover it
-    before merging (single-writer self-healing)."""
+def test_merge_upsert_parquet_recovers_from_crashed_swap(
+    spark, sf_dir, crash_at
+):
+    """A crash between the two swap renames leaves data only at the
+    table's hidden .old sibling; the next merge_upsert_parquet call
+    must recover it before merging (single-writer self-healing)."""
     import os
 
     tmp = tempfile.mkdtemp(prefix="rtsmdp_t_")
@@ -211,14 +213,16 @@ def test_merge_upsert_parquet_recovers_from_crashed_swap(spark, sf_dir):
     ev = load_table(spark, sf_dir, "events").limit(100)
     first = ev.filter(F.col("event_id") < 50)
     sinks.merge_upsert_parquet(spark, first, path, keys=["event_id"])
-    # simulate the crash window: table dir gone, data stranded at .old
-    os.rename(path, path + ".old")
     updated = ev.filter(F.col("event_id") < 20).withColumn("value", F.lit(-1.0))
+    # the crash window: table dir gone, data stranded at .old
+    with pytest.raises(crash_at("rename", 2)):
+        sinks.merge_upsert_parquet(spark, updated, path, keys=["event_id"])
+    assert not os.path.exists(path)
     sinks.merge_upsert_parquet(spark, updated, path, keys=["event_id"])
     out = spark.read.parquet(path)
     assert out.count() == first.count()  # recovered rows survived
     assert out.filter(F.col("value") == -1.0).count() == updated.count()
-    assert not os.path.exists(path + ".old")
+    assert os.listdir(tmp) == ["tbl"]
 
 
 def test_stream_sessionize_matches_batch(spark, sf_dir, tmp_path):
@@ -393,7 +397,7 @@ def test_compact_parquet_preserves_rows_and_shrinks_files(spark, tmp_path):
     spark.range(0, 2400).repartition(24).write.parquet(dest)
     before = len(glob.glob(f"{dest}/*.parquet"))
     assert before >= 24
-    report = sinks.compact_parquet(spark, dest, target_file_bytes=10**9)
+    report = sinks.compact_parquet(spark, dest)
     assert report["files_before"] == before
     assert report["files_after"] == 1
     assert report["rows"] == 2400
@@ -416,7 +420,7 @@ def test_stream_rate_alert_only_breaches(spark, sf_dir):
         assert (r.window_end - r.window_start).total_seconds() == 6 * 3600
 
 
-def test_merge_upsert_parquet_partitioned_touches_only_batch_cells(
+def test_partitioned_merge_upsert_parquet_touches_only_batch_cells(
     spark, tmp_path
 ):
     """Partition-scoped upsert (round-9 ADVICE): merging a batch that
@@ -433,7 +437,7 @@ def test_merge_upsert_parquet_partitioned_touches_only_batch_cells(
         [(1, 0, 0.9), (2, 0, 0.8), (3, 1, 0.7), (4, 2, 0.6)],
         "vec_id: long, cell: int, centroid_sim: double",
     )
-    sinks.merge_upsert_parquet_partitioned(
+    sinks.merge_upsert_parquet(
         spark, first, path, keys=["vec_id"], partition_col="cell"
     )
     assert sorted(
@@ -453,7 +457,7 @@ def test_merge_upsert_parquet_partitioned_touches_only_batch_cells(
         [(2, 0, 0.85), (5, 0, 0.5)],
         "vec_id: long, cell: int, centroid_sim: double",
     )
-    sinks.merge_upsert_parquet_partitioned(
+    sinks.merge_upsert_parquet(
         spark, second, path, keys=["vec_id"], partition_col="cell"
     )
     got = sorted(
@@ -468,7 +472,7 @@ def test_merge_upsert_parquet_partitioned_touches_only_batch_cells(
         assert os.path.exists(f) and os.path.getmtime(f) == mtime
 
     # replay (crash-restart): same batch again -> identical state
-    sinks.merge_upsert_parquet_partitioned(
+    sinks.merge_upsert_parquet(
         spark, second, path, keys=["vec_id"], partition_col="cell"
     )
     again = sorted(
@@ -478,7 +482,7 @@ def test_merge_upsert_parquet_partitioned_touches_only_batch_cells(
     assert again == got
 
     # empty batch: no-op, files untouched
-    sinks.merge_upsert_parquet_partitioned(
+    sinks.merge_upsert_parquet(
         spark, first.limit(0), path, keys=["vec_id"], partition_col="cell"
     )
     assert spark.read.parquet(path).count() == 5
@@ -564,9 +568,10 @@ def test_compact_batch_partitions_nested_and_heal(spark, tmp_path):
     )
     # heal: orphan one cell directory as .old (crash between renames)
     victim = os.path.join(path, "cell=2")
-    os.rename(victim, victim + ".old")
+    os.rename(victim, sinks._hidden(victim, "old"))
     sinks.compact_batch_partitions(spark, path, upto_bp=1, prune_col="cell")
-    assert os.path.isdir(victim) and not os.path.isdir(victim + ".old")
+    assert os.path.isdir(victim)
+    assert not os.path.isdir(sinks._hidden(victim, "old"))
     assert sorted(
         tuple(r) for r in spark.read.parquet(path).drop("bp").collect()
     ) == before
