@@ -13,6 +13,7 @@ from real_time_stock_market_data_pipeline__spark.driver_queries.dedup import (  
 from real_time_stock_market_data_pipeline__spark.driver_queries.text import (  # noqa: F401
     _TEXT_STATS_ORACLE,
 )
+from real_time_stock_market_data_pipeline__spark.session import materialize
 
 
 # --------------------------------------------------------------------------
@@ -589,7 +590,7 @@ def q_corpus_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "source", dedup.normalized_text("text").alias("nrm")
     )
     nc = norm.groupBy("nrm").agg(F.count(F.lit(1)).alias("c"))
-    cand = dedup.dedup_minhash_pairs(docs).localCheckpoint(eager=True)
+    cand = materialize(dedup.dedup_minhash_pairs(docs))
     nd_ids = (
         cand.select(F.col("id_a").alias("doc_id"))
         .unionByName(cand.select(F.col("id_b").alias("doc_id")))

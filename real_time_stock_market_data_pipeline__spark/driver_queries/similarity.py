@@ -1067,23 +1067,18 @@ def q_semantic_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays corpus-seeded cells, the any-stored-duplicate screen, and
     the intra-batch dominance rule over the survivors.
 
-    Runs the operator's at-rest form (round 17, fresh per-run temp
-    dir — nothing reused across runs): the lazy plan instantiated the
-    new-batch assign subtree 8× and the corpus assign 4× (12 parquet
-    scans / 22 exchanges, the registry's heaviest static plan); the
-    at-rest form computes each assignment once, prunes the corpus
-    read to the batch's touched cells (PartitionFilters), and
-    dominance-prunes over the materialized survivors. Same rows —
-    the oracle replays the unmaterialized definition."""
-    import tempfile
-
+    The operator computes the batch assignment and the corpus-screen
+    survivors once each (materialized in memory; no temp directory)
+    and reads the corpus side only in the batch's touched cells, so
+    the returned plan is the intra-batch dominance prune over the
+    materialized survivors. Same rows — the oracle replays the
+    unmaterialized definition."""
     ensure_engine_conf(spark)
     embs = load_table(spark, sf_dir, "embeddings")
     return similarity.semantic_dedup_incremental(
         embs.filter(F.col("vec_id") % 4 == 0),
         embs.filter(F.col("vec_id") % 4 != 0),
         threshold=0.3,
-        work_dir=tempfile.mkdtemp(prefix="semdd_inc_"),
     )
 
 

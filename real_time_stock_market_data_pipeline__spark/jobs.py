@@ -28,7 +28,10 @@ from pyspark.sql import functions as F
 
 from real_time_stock_market_data_pipeline__spark import sinks
 from real_time_stock_market_data_pipeline__spark.operators import dedup, ohlcv
-from real_time_stock_market_data_pipeline__spark.session import get_spark
+from real_time_stock_market_data_pipeline__spark.session import (
+    get_spark,
+    materialize,
+)
 from real_time_stock_market_data_pipeline__spark.sources.registry import (
     read_partitioned,
 )
@@ -70,7 +73,7 @@ def batch_daily_job(
         keys=[symbol_col, "__day", ts_col],
         order_by=[id_col] if id_col else [ts_col],
     ).drop("__day")
-    daily = sinks.materialize(
+    daily = materialize(
         ohlcv.daily_metrics(
             deduped,
             symbol_col=symbol_col,
@@ -300,7 +303,7 @@ def corpus_pipeline(
         df = docs.join(
             F.broadcast(kept_ids.select("doc_id")), "doc_id", "left_semi"
         )
-        state["docs"] = sinks.materialize(df)
+        state["docs"] = materialize(df)
         return state["docs"].count()
 
     def _exact_dedup():
@@ -309,13 +312,13 @@ def corpus_pipeline(
             F.col("keep_id").alias("doc_id")
         )
         df = docs.join(F.broadcast(keepers), "doc_id", "left_semi")
-        state["docs"] = sinks.materialize(df)
+        state["docs"] = materialize(df)
         return state["docs"].count()
 
     def _neardup():
         df = dedup_ops.dedup_corpus(state["docs"], id_col="doc_id",
                                     text_col="text")
-        state["docs"] = sinks.materialize(df)
+        state["docs"] = materialize(df)
         return state["docs"].count()
 
     def _substring_dedup():
@@ -335,7 +338,7 @@ def corpus_pipeline(
                 "doc_id",
             )
         )
-        state["docs"] = sinks.materialize(df)
+        state["docs"] = materialize(df)
         return state["docs"].count()
 
     def _sample_split():
@@ -343,7 +346,7 @@ def corpus_pipeline(
         if sample_fraction < 1.0:
             df = sampling_ops.hash_sample(df, "doc_id", sample_fraction)
         df = sampling_ops.hash_split(df, "doc_id")
-        state["docs"] = sinks.materialize(df)
+        state["docs"] = materialize(df)
         return state["docs"].count()
 
     def _pack():
@@ -360,7 +363,7 @@ def corpus_pipeline(
             token_col="ws_tokens",
             budget=512,
         )
-        state["packs"] = sinks.materialize(packs)
+        state["packs"] = materialize(packs)
         return state["packs"].count()
 
     def _write():
@@ -419,7 +422,7 @@ def market_pipeline(
         return df.count()
 
     def _daily():
-        daily = sinks.materialize(
+        daily = materialize(
             ohlcv.daily_metrics(
                 state["ticks"],
                 symbol_col="event_type",

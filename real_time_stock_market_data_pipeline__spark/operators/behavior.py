@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from real_time_stock_market_data_pipeline__spark.session import materialize
+
 
 def funnel_conversion(
     events: DataFrame,
@@ -281,10 +283,10 @@ def event_lift(
     """
     # One distinct pass, materialized once: three consumers (counts,
     # pair join, total) would otherwise re-scan the fact table.
-    pres = (
-        events.select(F.col(user_col).alias("u"), F.col(type_col).alias("t"))
-        .distinct()
-        .localCheckpoint()
+    pres = materialize(
+        events.select(
+            F.col(user_col).alias("u"), F.col(type_col).alias("t")
+        ).distinct()
     )
     counts = pres.groupBy("t").agg(F.count(F.lit(1)).alias("n"))
     # the universe size is a single scalar parameter — materialized on
@@ -617,36 +619,29 @@ def event_pagerank(
         F.col(type_col).alias("src"),
         F.lead(type_col).over(w).alias("dst"),
     ).where(F.col("dst").isNotNull())
-    edges_w = (
+    edges_w = materialize(
         pairs.groupBy("src", "dst").agg(F.count(F.lit(1)).alias("w"))
-    ).localCheckpoint()
+    )
 
-    nodes = (
+    nodes = materialize(
         edges_w.select(F.col("src").alias("node"))
         .union(edges_w.select(F.col("dst").alias("node")))
         .distinct()
-        .localCheckpoint()
     )
     n = nodes.count()
     wsrc = Window.partitionBy("src")
-    edges = edges_w.select(
-        "src",
-        "dst",
-        (F.col("w").cast("double") / F.sum("w").over(wsrc)).alias("p"),
-    ).localCheckpoint()
-    dang = nodes.join(
-        edges_w.select(F.col("src").alias("node")).distinct(),
-        "node",
-        "left_anti",
-    ).localCheckpoint()
+    p = (F.col("w").cast("double") / F.sum("w").over(wsrc)).alias("p")
+    edges = materialize(edges_w.select("src", "dst", p))
+    srcs = edges_w.select(F.col("src").alias("node")).distinct()
+    dang = materialize(nodes.join(srcs, "node", "left_anti"))
     has_dangling = dang.count() > 0
 
     def q(col: F.Column) -> F.Column:
         return F.floor(col * F.lit(1e12) + F.lit(0.5)) / F.lit(1e12)
 
-    r = nodes.select(
-        "node", q(F.lit(1.0) / F.lit(float(n))).alias("r")
-    ).localCheckpoint()
+    r = materialize(
+        nodes.select("node", q(F.lit(1.0) / F.lit(float(n))).alias("r"))
+    )
     base = (1.0 - damping) / n
     for _ in range(n_iter):
         contrib = (
@@ -676,9 +671,8 @@ def event_pagerank(
             )
         else:
             dmass = 0.0
-        r = (
-            nodes.join(contrib, "node", "left")
-            .select(
+        r = materialize(
+            nodes.join(contrib, "node", "left").select(
                 "node",
                 q(
                     F.lit(base)
@@ -689,7 +683,6 @@ def event_pagerank(
                     )
                 ).alias("r"),
             )
-            .localCheckpoint()
         )
     return r.select("node", F.col("r").alias("pagerank"))
 
@@ -900,7 +893,7 @@ def session_copresence_pmi(
     new_s = F.when(
         prev_us.isNull() | ((us - prev_us) > gap_seconds * 1_000_000), 1
     ).otherwise(0)
-    pres = (
+    pres = materialize(
         events.select(
             F.col(user_col).alias("user_id"),
             F.col(type_col).alias("etype"),
@@ -908,7 +901,6 @@ def session_copresence_pmi(
         )
         .select("user_id", "session_id", "etype")
         .distinct()
-        .localCheckpoint()
     )
     pres.createOrReplaceTempView("__pmi_pres")
     return events.sparkSession.sql(copresence_pmi_sql("__pmi_pres"))
@@ -1074,27 +1066,19 @@ def absorption_prob(
     ).where(F.col("dst").isNotNull())
     counts = pairs.groupBy("src", "dst").agg(F.count(F.lit(1)).alias("n"))
     wsrc = Window.partitionBy("src")
-    edges = counts.select(
-        "src",
-        "dst",
-        (F.col("n").cast("double") / F.sum("n").over(wsrc)).alias("p"),
-    ).localCheckpoint()
-    nodes = (
+    p = (F.col("n").cast("double") / F.sum("n").over(wsrc)).alias("p")
+    edges = materialize(counts.select("src", "dst", p))
+    nodes = materialize(
         edges.select(F.col("src").alias("node"))
         .union(edges.select(F.col("dst").alias("node")))
         .distinct()
-        .localCheckpoint()
     )
 
     def q12(col: F.Column) -> F.Column:
         return F.floor(col * F.lit(1e12) + F.lit(0.5)) / F.lit(1e12)
 
-    prob = nodes.select(
-        "node",
-        F.when(F.col("node") == target, F.lit(1.0))
-        .otherwise(F.lit(0.0))
-        .alias("p_abs"),
-    ).localCheckpoint()
+    start = F.when(F.col("node") == target, F.lit(1.0)).otherwise(F.lit(0.0))
+    prob = materialize(nodes.select("node", start.alias("p_abs")))
     for _ in range(k):
         stepped = (
             edges.join(
@@ -1108,7 +1092,7 @@ def absorption_prob(
                 .alias("step")
             )
         )
-        prob = (
+        prob = materialize(
             nodes.join(stepped.select(F.col("src").alias("node"), "step"), "node", "left")
             .select(
                 "node",
@@ -1116,7 +1100,6 @@ def absorption_prob(
                 .otherwise(q12(F.coalesce(F.col("step"), F.lit(0.0))))
                 .alias("p_abs"),
             )
-            .localCheckpoint()
         )
     return prob.select("node", F.round("p_abs", 6).alias(f"absorb_prob"))
 

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from real_time_stock_market_data_pipeline__spark.session import (
     ensure_min_parallelism,
+    materialize,
 )
 
 #: MinHash configuration: 16 permutations → 8 bands × 2 rows.
@@ -445,13 +446,50 @@ def dedup_minhash_pairs(
     return cross.unionByName(intra)
 
 
+def _candidate_intersections(
+    docs: DataFrame, id_col: str, text_col: str, k: int
+) -> DataFrame:
+    """The candidate-verify stage shared by :func:`ngram_jaccard_pairs`
+    and :func:`ngram_containment_pairs`: every LSH candidate pair
+    ``(id_a, id_b)`` with both documents' distinct k-shingle arrays
+    ``sh_a``/``sh_b`` and their intersection size ``inter``.
+
+    The candidates (read by the id union twice and the verify join)
+    and the shingle arrays (one read per join side) are materialized
+    once, so the corpus is scanned for the LSH pipeline and the
+    shingle build only."""
+    cand = materialize(
+        dedup_minhash_pairs(docs, id_col, text_col, shingle_k=k)
+    )
+    # shingle arrays only for documents that appear in a candidate pair
+    # (a left-semi prefilter): exact verification cost scales with the
+    # collision volume, not the corpus — and the interpreted
+    # array-building expressions run on that small set only
+    cand_ids = (
+        cand.select(F.col("id_a").alias(id_col))
+        .unionByName(cand.select(F.col("id_b").alias(id_col)))
+        .distinct()
+    )
+    sh = materialize(
+        docs.join(cand_ids, id_col, "left_semi").select(
+            F.col(id_col), shingles(text_col, k).alias("sh")
+        )
+    )
+    return (
+        cand.join(sh.withColumnsRenamed({id_col: "id_a", "sh": "sh_a"}), "id_a")
+        .join(sh.withColumnsRenamed({id_col: "id_b", "sh": "sh_b"}), "id_b")
+        .withColumn(
+            "inter", F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
+        )
+    )
+
+
 def ngram_jaccard_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 3,
     threshold: float = 0.5,
-    materialize: bool = True,
 ) -> DataFrame:
     """Exact k-gram Jaccard over LSH candidate pairs only.
 
@@ -461,18 +499,14 @@ def ngram_jaccard_pairs(
     O(candidates × shingles), independent of corpus size. The same
     ``k`` is used for candidate generation and verification.
 
-    ``materialize=True`` (default) eagerly ``localCheckpoint``s the two
-    small intermediates that downstream references would otherwise
-    re-derive from scratch — the candidate pairs (referenced 3×: the id
-    union twice, the verify join once) and the per-candidate shingle
-    arrays (referenced 2×: once per join side). Without it the lazy
-    plan re-reads the corpus 12× / shuffles 31× (PLANS.md r4); with it
-    the corpus is scanned twice (LSH pipeline + shingle build) and the
+    The candidates and their shingle arrays are materialized once
+    (:func:`_candidate_intersections`): lazily the plan re-reads the
+    corpus 12× / shuffles 31× (PLANS.md r4); materialized, the corpus
+    is scanned twice (LSH pipeline + shingle build) and the
     re-referenced frames are collision-sized. At 100 TB re-scanning the
     corpus per reference is the dominant cost, so materializing the
     KB–MB-scale candidate set is the scale-safe shape (same pattern as
-    ``neardup_clusters``'s edge frame). Set ``materialize=False`` for a
-    fully-lazy single-action plan.
+    ``neardup_clusters``'s edge frame).
 
     Tuning history (sf0.1, local[32], best-of-3 warm): (1) persisting
     the *bands* frame broke ReuseExchange and ran 2–4× slower — the
@@ -489,29 +523,8 @@ def ngram_jaccard_pairs(
     self-join plateau is evidence-backed; don't revisit without new
     measurements.
     """
-    cand = dedup_minhash_pairs(docs, id_col, text_col, shingle_k=k)
-    if materialize:
-        cand = cand.localCheckpoint(eager=True)
-    # shingle arrays only for documents that appear in a candidate pair
-    # (a left-semi prefilter): exact verification cost scales with the
-    # collision volume, not the corpus — and the interpreted
-    # array-building expressions run on that small set only
-    cand_ids = (
-        cand.select(F.col("id_a").alias(id_col))
-        .unionByName(cand.select(F.col("id_b").alias(id_col)))
-        .distinct()
-    )
-    sh = docs.join(cand_ids, id_col, "left_semi").select(
-        F.col(id_col), shingles(text_col, k).alias("sh")
-    )
-    if materialize:
-        sh = sh.localCheckpoint(eager=True)
     j = (
-        cand.join(sh.withColumnsRenamed({id_col: "id_a", "sh": "sh_a"}), "id_a")
-        .join(sh.withColumnsRenamed({id_col: "id_b", "sh": "sh_b"}), "id_b")
-        .withColumn(
-            "inter", F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-        )
+        _candidate_intersections(docs, id_col, text_col, k)
         .withColumn("uni", F.size(F.array_union(F.col("sh_a"), F.col("sh_b"))))
         .withColumn(
             "jaccard",
@@ -649,17 +662,16 @@ def neardup_clusters(
         F.col("id_a").alias("u"), F.col("id_b").alias("v")
     ).unionByName(pairs.select(F.col("id_b").alias("u"), F.col("id_a").alias("v")))
     # edges are reused every round: materialize once, free the lineage
-    edges = edges.localCheckpoint(eager=True)
+    edges = materialize(edges)
     labels = docs.select(F.col(id_col).alias("u"), F.col(id_col).alias("label"))
     for _ in range(max_iters):
         nbr_labels = edges.join(
             labels.select(F.col("u").alias("v"), F.col("label")), "v"
         ).select("u", "label")
-        new_labels = (
+        new_labels = materialize(
             labels.unionByName(nbr_labels)
             .groupBy("u")
             .agg(F.min("label").alias("label"))
-            .localCheckpoint(eager=True)
         )
         changed = (
             new_labels.join(labels.withColumnRenamed("label", "old"), "u")
@@ -921,18 +933,18 @@ def minhash_accuracy(
     Cost ∝ collision volume, never corpus²: candidates come from the
     banded self-join, signatures and shingle arrays are built only
     for candidate ids (left-semi prefilter), and the candidate set is
-    eagerly localCheckpointed (three consumers — same rationale as
+    materialized once (three consumers — same rationale as
     :func:`ngram_jaccard_pairs`).
     """
-    cand = dedup_minhash_pairs(
-        docs, id_col, text_col, shingle_k=shingle_k
-    ).localCheckpoint(eager=True)
+    cand = materialize(
+        dedup_minhash_pairs(docs, id_col, text_col, shingle_k=shingle_k)
+    )
     cand_ids = (
         cand.select(F.col("id_a").alias(id_col))
         .unionByName(cand.select(F.col("id_b").alias(id_col)))
         .distinct()
     )
-    hit = docs.join(cand_ids, id_col, "left_semi").localCheckpoint(eager=True)
+    hit = materialize(docs.join(cand_ids, id_col, "left_semi"))
     sig = minhash_signature_frame(hit, id_col, text_col, perms, shingle_k)
     sh = hit.select(F.col(id_col), shingles(text_col, shingle_k).alias("sh"))
     sig_a = sig.select(
@@ -1043,7 +1055,6 @@ def ngram_containment_pairs(
     text_col: str = "text",
     k: int = 3,
     threshold: float = 0.8,
-    materialize: bool = True,
 ) -> DataFrame:
     """Asymmetric shingle CONTAINMENT over LSH candidate pairs:
     |A∩B|/|A| and |A∩B|/|B| — the quote-inclusion detector. A short
@@ -1053,31 +1064,12 @@ def ngram_containment_pairs(
     reports. Pairs are kept when EITHER side's containment clears the
     threshold.
 
-    Same scale shape as the Jaccard verify: candidates from the
-    banded self-join, shingle arrays built only for candidate ids,
-    both intermediates eagerly localCheckpointed. Cost ∝ collision
-    volume.
+    Same scale shape as the Jaccard verify, through the same
+    candidate-verify stage (:func:`_candidate_intersections`). Cost ∝
+    collision volume.
     """
-    cand = dedup_minhash_pairs(docs, id_col, text_col, shingle_k=k)
-    if materialize:
-        cand = cand.localCheckpoint(eager=True)
-    cand_ids = (
-        cand.select(F.col("id_a").alias(id_col))
-        .unionByName(cand.select(F.col("id_b").alias(id_col)))
-        .distinct()
-    )
-    sh = docs.join(cand_ids, id_col, "left_semi").select(
-        F.col(id_col), shingles(text_col, k).alias("sh")
-    )
-    if materialize:
-        sh = sh.localCheckpoint(eager=True)
     j = (
-        cand.join(sh.withColumnsRenamed({id_col: "id_a", "sh": "sh_a"}), "id_a")
-        .join(sh.withColumnsRenamed({id_col: "id_b", "sh": "sh_b"}), "id_b")
-        .withColumn(
-            "inter",
-            F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b"))),
-        )
+        _candidate_intersections(docs, id_col, text_col, k)
         .withColumn("n_a", F.size(F.array_distinct(F.col("sh_a"))))
         .withColumn("n_b", F.size(F.array_distinct(F.col("sh_b"))))
     )

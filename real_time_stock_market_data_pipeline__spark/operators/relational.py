@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from real_time_stock_market_data_pipeline__spark.session import materialize
+
 
 def merge_upsert(target: DataFrame, source: DataFrame, keys: list[str]) -> DataFrame:
     """Keyed upsert: source rows replace key-matching target rows;
@@ -341,7 +343,6 @@ def scd2_apply(
     from_col: str = "valid_from",
     to_col: str = "valid_to",
     current_col: str = "is_current",
-    materialize: bool = True,
 ) -> DataFrame:
     """Slowly-Changing-Dimension Type 2 maintenance: apply a batch of
     keyed attribute updates to a versioned dimension, closing the
@@ -365,10 +366,10 @@ def scd2_apply(
     update batches are usually tiny vs the dimension) on the key only,
     and history rows pass through untouched.
 
-    ``materialize=True`` (default) eagerly ``localCheckpoint``s the
-    classified change set, which three downstream legs reference (new
-    versions, the closing join, the untouched anti join) — lazily it
-    would re-run the updates⋈dimension classification join per leg.
+    The classified change set is materialized once: three downstream
+    legs reference it (new versions, the closing join, the untouched
+    anti join), and lazily each would re-run the updates⋈dimension
+    classification join.
     The change set is update-batch-sized, the cheapest thing in the
     plan to pin (same rationale as the dedup pipeline's candidate
     materialization).
@@ -383,14 +384,14 @@ def scd2_apply(
         differs = differs | ~F.col(f"u.{a}").eqNullSafe(F.col(f"c.{a}"))
     joined = u.join(c, key_cols, "left")
     # new key (no open version) or attribute change → takes effect
-    changed = joined.filter(F.col(f"c.{from_col}").isNull() | differs).select(
-        *key_cols,
-        *[F.col(f"u.{a}").alias(a) for a in attr_cols],
-        F.col(f"u.{effective_col}").alias("__eff"),
-        F.col(f"c.{from_col}").isNull().alias("__new_key"),
+    changed = materialize(
+        joined.filter(F.col(f"c.{from_col}").isNull() | differs).select(
+            *key_cols,
+            *[F.col(f"u.{a}").alias(a) for a in attr_cols],
+            F.col(f"u.{effective_col}").alias("__eff"),
+            F.col(f"c.{from_col}").isNull().alias("__new_key"),
+        )
     )
-    if materialize:
-        changed = changed.localCheckpoint(eager=True)
 
     new_versions = changed.select(
         *key_cols,
@@ -772,25 +773,25 @@ def resolve_hierarchy(
     # state: (id, ptr, dist) — ptr = current jump target (NULL once
     # rooted is encoded as ptr == id for join simplicity), dist =
     # accumulated hops to ptr
-    state = nodes.select(
-        F.col(id_col).alias("id"),
-        F.coalesce(F.col(parent_col), F.col(id_col)).alias("ptr"),
-        F.when(F.col(parent_col).isNull(), 0).otherwise(1).alias("dist"),
-    ).localCheckpoint()
+    state = materialize(
+        nodes.select(
+            F.col(id_col).alias("id"),
+            F.coalesce(F.col(parent_col), F.col(id_col)).alias("ptr"),
+            F.when(F.col(parent_col).isNull(), 0).otherwise(1).alias("dist"),
+        )
+    )
     for _ in range(max_rounds):
         jump = state.select(
             F.col("id").alias("ptr"),
             F.col("ptr").alias("ptr2"),
             F.col("dist").alias("dist2"),
         )
-        nxt = (
-            state.join(jump, "ptr")
-            .select(
+        nxt = materialize(
+            state.join(jump, "ptr").select(
                 "id",
                 F.col("ptr2").alias("ptr"),
                 (F.col("dist") + F.col("dist2")).alias("dist"),
             )
-            .localCheckpoint()
         )
         # converged when no pointer moved this round (every chain has
         # reached a self-pointing root)

@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from real_time_stock_market_data_pipeline__spark.session import materialize
+
 #: Random hyperplanes for LSH bucketing: PLANES[p][d] in {-1.0, +1.0}
 #: (Rademacher vectors — exact in float/decimal arithmetic, so both
 #: engines compute identical signs). Seeded → oracle replayable.
@@ -670,7 +672,6 @@ def semantic_dedup_incremental(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     centroids: list[list[float]] | str | None = None,
-    work_dir: str | None = None,
 ) -> DataFrame:
     """Per-batch :func:`semantic_dedup` against an existing corpus —
     the write-once/screen-forever shape (cf.
@@ -695,69 +696,44 @@ def semantic_dedup_incremental(
     Centroids default to the CORPUS's deterministic seeds — both
     sides must quantize against the same codebook or cell scoping is
     meaningless. The kept output ``(id, cell, centroid_sim)`` is
-    exactly one append to the corpus assignment table.
-
-    ``work_dir`` (round 17, guide §1.2/§6 — the at-rest subtree-dedup
-    pattern the sweep's shared indexes use): when set, the two
-    assignment frames are written ONCE to ``work_dir/{an,ac}``
-    (``partitionBy("cell")`` — two overlapped jobs), the corpus side
-    is re-read pruned to the batch's touched cells (a bounded
-    ≤ n_centroids collect that lands in the scan's PartitionFilters,
-    exactly the streaming screen's probe shape), and the corpus-screen
-    survivors are materialized once at ``work_dir/surv`` before the
-    intra-batch dominance prune. The lazy form instantiates the
-    new-batch assign subtree 8× and the corpus assign 4× in one plan
-    (each a full scan + |cents|-way fold at corpus scale); the at-rest
-    form computes each exactly once. Results are bit-identical:
-    parquet round-trips doubles and arrays losslessly and the
-    dominance/screen logic is unchanged (oracle- and law-checked).
-    The caller owns the directory's lifecycle (pass a fresh temp dir;
-    nothing is reused across runs).
+    exactly one append to the corpus assignment table. Both stages
+    run through :func:`_semantic_screen`, the body the streaming
+    screen shares, so the batch assignment and the stage-1 survivors
+    are each computed once and the corpus side is read only in the
+    batch's touched cells.
     """
-    cents = _resolve_centroids(
-        centroids, corpus, n_centroids, id_col, vec_col
+    cents = _resolve_centroids(centroids, corpus, n_centroids, id_col, vec_col)
+    _, _, kept = _semantic_screen(
+        _semantic_assign(new_batch, cents, vec_col, id_col),
+        _semantic_assign(corpus, cents, vec_col, id_col),
+        threshold,
+        id_col,
     )
-    an = _semantic_assign(new_batch, cents, vec_col, id_col)
-    ac = _semantic_assign(corpus, cents, vec_col, id_col)
-    if work_dir is None:
-        return _semantic_screen_assigned(an, ac, threshold, id_col)
-    import os
+    return kept
 
-    from real_time_stock_market_data_pipeline__spark.sinks import (
-        run_jobs_concurrently,
-    )
 
-    spark = new_batch.sparkSession
-    an_path = os.path.join(work_dir, "an")
-    ac_path = os.path.join(work_dir, "ac")
-    sv_path = os.path.join(work_dir, "surv")
-    cols = an.columns
-    schema = an.schema
-    run_jobs_concurrently(
-        lambda: an.write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(an_path),
-        lambda: ac.write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(ac_path),
-    )
-    # explicit schema on every read-back: an empty side (empty batch /
-    # all-zero-norm corpus) writes no part files and schema inference
-    # would fail; the given schema also pins the partition column's
-    # type so cell stays an int
-    an_r = spark.read.schema(schema).parquet(an_path).select(*cols)
-    touched = [r[0] for r in an_r.select("cell").distinct().collect()]
-    ac_r = (
-        spark.read.schema(schema)
-        .parquet(ac_path)
-        .filter(F.col("cell").isin(touched))
-        .select(*cols)
-    )
-    _corpus_screen_survivors(an_r, ac_r, threshold, id_col).write.mode(
-        "overwrite"
-    ).partitionBy("cell").parquet(sv_path)
-    sv_r = spark.read.schema(schema).parquet(sv_path).select(*cols)
-    return _dominance_prune(sv_r, threshold, id_col)
+def _semantic_screen(
+    assigned: DataFrame, corpus: DataFrame, threshold: float, id_col: str
+) -> tuple[DataFrame, list, DataFrame]:
+    """Corpus screen + intra-batch dominance of one batch, both frames
+    in :func:`_semantic_assign` shape — the one body behind
+    :func:`semantic_dedup_incremental` and the streaming screen.
+
+    The batch assignment is materialized once (it feeds the touched-cell
+    collect, the screen and every dominance instance) and the caller
+    must not use ``assigned`` again. ``corpus`` is read only in the
+    touched cells (≤ the centroid count, a bounded collect); on a
+    table laid out ``partitionBy("cell")`` the filter is partition
+    pruning. The stage-1 survivors are materialized before
+    :func:`_dominance_prune`, which reads its input four times, so the
+    corpus side is read once. Returns the materialized batch
+    assignment, its touched cells and the kept ``(id, cell,
+    centroid_sim)`` rows."""
+    an = materialize(assigned)
+    touched = [r[0] for r in an.select("cell").distinct().collect()]
+    ac = corpus.filter(F.col("cell").isin(touched))
+    surv = materialize(_corpus_screen_survivors(an, ac, threshold, id_col))
+    return an, touched, _dominance_prune(surv, threshold, id_col)
 
 
 def _corpus_screen_survivors(
@@ -785,17 +761,6 @@ def _corpus_screen_survivors(
         .distinct()
     )
     return an.join(screened_out, id_col, "left_anti")
-
-
-def _semantic_screen_assigned(
-    an: DataFrame, ac: DataFrame, threshold: float, id_col: str
-) -> DataFrame:
-    """Corpus screen + intra-batch dominance over two pre-assigned
-    frames (:func:`_semantic_assign` shape) — the core both
-    :func:`semantic_dedup_incremental` and the streaming screen share;
-    ``ac`` may equally be the at-rest assignment table read back."""
-    survivors = _corpus_screen_survivors(an, ac, threshold, id_col)
-    return _dominance_prune(survivors, threshold, id_col)
 
 
 def ivf_topk(
@@ -2139,10 +2104,10 @@ def pca_power_iteration(
             6,
         ).alias("m")
     )
-    centered = (
-        x.join(F.broadcast(m), "dim")
-        .select("vid", "dim", q(F.col("x6") - F.col("m"), 6).alias("xc"))
-        .localCheckpoint()
+    centered = materialize(
+        x.join(F.broadcast(m), "dim").select(
+            "vid", "dim", q(F.col("x6") - F.col("m"), 6).alias("xc")
+        )
     )
 
     import math

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from real_time_stock_market_data_pipeline__spark.session import materialize
+
 #: 2^60 — hashes are the first 15 hex chars of md5 (60 bits), so
 #: ``h / 2^60`` is uniform in [0,1). Exactly representable as a double.
 _HASH_SPACE = float(1 << 60)
@@ -102,7 +104,7 @@ def kmv_set_ops(
     # fact table is scanned a single time — without it the plan
     # re-reads the source five times (measured in PLANS.md; same
     # rationale as the ngram_jaccard candidate checkpoint).
-    hashes = df.select(F.col(group_col).alias("grp"), h).distinct().localCheckpoint()
+    hashes = materialize(df.select(F.col(group_col).alias("grp"), h).distinct())
     w = Window.partitionBy("grp").orderBy("h")
     kmins = (
         hashes.select("grp", "h", F.row_number().over(w).alias("rn"))
@@ -343,7 +345,7 @@ def cms_heavy_hitters(
     )
     # Consumed by three stages (sketch build, top-n rank, estimate
     # join); localCheckpoint scans the fact table once.
-    counts = counts.localCheckpoint()
+    counts = materialize(counts)
 
     def bucket(d: int) -> F.Column:
         h = F.conv(

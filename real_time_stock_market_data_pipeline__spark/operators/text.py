@@ -17,6 +17,7 @@ from real_time_stock_market_data_pipeline__spark.operators.dedup import (
 )
 from real_time_stock_market_data_pipeline__spark.session import (
     ensure_min_parallelism,
+    materialize,
 )
 
 #: Tiny per-language stopword profiles for the n-gram/stopword
@@ -813,13 +814,13 @@ def bigram_lm_scores(
     # localCheckpoint materializes the exploded grams once instead of
     # re-exploding the corpus per consumer (same rationale as the
     # kmv_set_ops / ngram_jaccard checkpoints, measured there)
-    grams = norm_df.select(
-        F.col(id_col), F.col("__norm"), pos.alias("i")
-    ).select(
-        F.col(id_col),
-        F.substring(F.col("__norm"), F.col("i"), 2).alias("bg"),
-        F.substring(F.col("__norm"), F.col("i"), 1).alias("pf"),
-    ).localCheckpoint()
+    grams = materialize(
+        norm_df.select(F.col(id_col), F.col("__norm"), pos.alias("i")).select(
+            F.col(id_col),
+            F.substring(F.col("__norm"), F.col("i"), 2).alias("bg"),
+            F.substring(F.col("__norm"), F.col("i"), 1).alias("pf"),
+        )
+    )
     bg_counts = grams.groupBy("bg").agg(F.count(F.lit(1)).alias("n_bg"))
     pf_counts = grams.groupBy("pf").agg(F.count(F.lit(1)).alias("n_pf"))
     nlp = F.round(
@@ -1952,9 +1953,9 @@ def bpe_train(
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("freq"))
     )
-    cur = words.select(
-        _bpe_encode_word(F.col("w")).alias("r"), F.col("freq")
-    ).localCheckpoint(eager=True)
+    cur = materialize(
+        words.select(_bpe_encode_word(F.col("w")).alias("r"), F.col("freq"))
+    )
     merges: list[tuple[int, str, str, str, int]] = []
     for rank in range(1, n_merges + 1):
         best = (
@@ -1967,10 +1968,8 @@ def bpe_train(
             break
         l, rt, c = best[0]["l"], best[0]["rt"], int(best[0]["c"])
         merges.append((rank, l, rt, l + rt, c))
-        cur = cur.select(
-            F.regexp_replace("r", f" {l}  {rt} ", f" {l}{rt} ").alias("r"),
-            "freq",
-        ).localCheckpoint(eager=True)
+        merged = F.regexp_replace("r", f" {l}  {rt} ", f" {l}{rt} ")
+        cur = materialize(cur.select(merged.alias("r"), "freq"))
     return spark.createDataFrame(
         merges,
         "merge_rank: int, left_sym: string, right_sym: string,"

@@ -19,7 +19,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def default_parallelism() -> int:
@@ -138,6 +138,22 @@ def ensure_min_parallelism(df, target: int | None = None):
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
+
+
+def materialize(df: DataFrame) -> DataFrame:
+    """Compute ``df`` once (``localCheckpoint``) for a caller that reads
+    it more than once, and return the materialized copy — the
+    package's one way to pin a frame.
+
+    ``localCheckpoint`` runs ``df``'s own query execution, which then
+    keeps the executed plan (broadcast relations and their memory
+    pages) for as long as ``df``'s Java handle lives. py4j frees a
+    handle only when Python's cycle collector gets to it, which in a
+    stream can be many micro-batches later, so the handle is released
+    here: the caller must not use ``df`` again."""
+    done = df.localCheckpoint()
+    df._jdf._detach()
+    return done
 
 
 def prestart_callback_server(spark: SparkSession, attempts: int = 3) -> bool:

@@ -261,21 +261,6 @@ def ensure_table(
     )
 
 
-def materialize(df: DataFrame) -> DataFrame:
-    """Compute ``df`` once (``localCheckpoint``) for a caller that reads
-    it more than once, and return the materialized copy.
-
-    ``localCheckpoint`` runs ``df``'s own query execution, which then
-    keeps the executed plan (broadcast relations and their memory
-    pages) for as long as ``df``'s Java handle lives. py4j frees a
-    handle only when Python's cycle collector gets to it, which in a
-    stream can be many micro-batches later, so the handle is released
-    here: the caller must not use ``df`` again."""
-    done = df.localCheckpoint()
-    df._jdf._detach()
-    return done
-
-
 def _hidden(d: str, role: str) -> str:
     """The sibling ``.<name>.<role>`` of directory ``d``: the staged
     (``stage``) or superseded (``old``) copy of ``d`` during a swap.
@@ -337,7 +322,6 @@ def merge_upsert_parquet(
     path: str,
     keys: list[str],
     partition_col: str | None = None,
-    partition_width: int | None = None,
 ) -> None:
     """K5/T10: idempotent keyed upsert into a parquet directory, the one
     MERGE sink of both layers.
@@ -353,7 +337,7 @@ def merge_upsert_parquet(
     Both merge legs read ``batch`` (its keys for the anti-join, its
     rows for the union), so a caller whose batch is an expensive plan,
     or that feeds it to another sink too, passes a materialized frame
-    (:func:`materialize`) to compute it once.
+    (``session.materialize``) to compute it once.
 
     A flat table is the one-partition case. With ``partition_col`` the
     table is laid out ``partitionBy(partition_col)`` and a batch reads
@@ -401,18 +385,14 @@ def merge_upsert_parquet(
         # repartition on the partition key so each touched directory
         # gets coherent files (without this every shuffle task writes a
         # sliver into every cell dir — 32x the file count, and the
-        # read-back lists them all). partition_width (round 16): an
-        # explicit width pins one writer task per touched directory — a
+        # read-back lists them all). The width is the touched count: a
         # keyless repartition(col) gets AQE-coalesced on small batches
         # to ~1 task that then opens every touched dir's parquet writer
-        # SEQUENTIALLY (measured 2.6x slower on a 256-dir append); the
-        # key's value count caps effective parallelism either way, so
-        # an explicit width loses nothing at crawl scale.
-        (
-            merged.repartition(max(1, int(partition_width)), F.col(partition_col))
-            if partition_width is not None
-            else merged.repartition(F.col(partition_col))
-        ).write.mode("overwrite").partitionBy(partition_col).parquet(stage)
+        # SEQUENTIALLY (measured 2.6x slower on a 256-dir append), and
+        # the key's value count caps effective parallelism anyway.
+        merged.repartition(len(touched), F.col(partition_col)).write.mode(
+            "overwrite"
+        ).partitionBy(partition_col).parquet(stage)
     if partition_col is None or not os.path.isdir(path):
         _swap(stage, path)
         return

@@ -38,13 +38,13 @@ from real_time_stock_market_data_pipeline__spark.functions.cleaning import (
 from real_time_stock_market_data_pipeline__spark.operators.metrics import (
     realtime_metrics,
 )
+from real_time_stock_market_data_pipeline__spark.session import materialize
 from real_time_stock_market_data_pipeline__spark.sinks import (
     append_batch_partition,
     check_bp_checkpoint_coherent,
     compact_streaming_state,
     id_hash_bucket,
     input_ready,
-    materialize,
     merge_upsert_parquet,
     read_prior_batches,
     run_jobs_concurrently,
@@ -532,34 +532,14 @@ def stream_semantic_screen(
     )
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
-        # materialize the batch's assignment ONCE (round 17, guide
-        # §1.2): the lazy form re-embedded this subtree (a batch scan
-        # + |cents|-way fold) into the touched-cell collect, all four
-        # dominance-prune instantiations of the survivors, and the
-        # kept_full semi-join — ~10 recomputes per micro-batch. The
-        # batch-scoped localCheckpoint is the same device the neardup/
-        # curation services use for their band frames; the registered
-        # query's plan evidence is the index read-back, unaffected.
-        an = similarity._semantic_assign(
-            batch, cents, vec_col, id_col
-        ).localCheckpoint(eager=True)
-        # The screen is cell-scoped (a new row can only die to a
-        # same-cell neighbour), so restrict BOTH screen inputs to the
-        # cells this batch actually probes: with the corpus assignment
-        # and the index laid out partitionBy(cell) the isin filter
-        # becomes partition pruning — per-batch read cost is
-        # touched-cell volume, not corpus/index size. |touched| ≤ the
-        # centroid count, so the collect is bounded like the codebook
-        # itself.
-        touched = [
-            r[0] for r in an.select("cell").distinct().collect()
-        ]
+        # The screen is cell-scoped, so _semantic_screen reads the
+        # corpus side only in the cells this batch probes: with the
+        # corpus assignment and the index laid out partitionBy(cell)
+        # the filter becomes partition pruning — per-batch read cost is
+        # touched-cell volume, not corpus/index size.
+        base = corpus_assigned
         if corpus_assigned_path is not None:
-            base = spark.read.parquet(corpus_assigned_path).filter(
-                F.col("cell").isin(touched)
-            )
-        else:
-            base = corpus_assigned.filter(F.col("cell").isin(touched))
+            base = spark.read.parquet(corpus_assigned_path)
         # only batches before this one: the screen has no owner-id
         # guard, so on a checkpoint replay the first attempt's kept
         # rows (already at bp=batch_id) would self-kill their
@@ -568,22 +548,13 @@ def stream_semantic_screen(
         # saw and rewrite its partition bit-identically.
         idx = read_prior_batches(spark, index_path, batch_id)
         if idx is not None:
-            idx = idx.filter(F.col("cell").isin(touched))
-            base = base.unionByName(idx.select(*an.columns))
-        # materialize the stage-1 corpus-screen survivors before the
-        # intra-batch dominance prune (round 17): _dominance_prune
-        # instantiates its input four times, and each instance
-        # previously re-ran the whole touched-cell corpus/index read
-        # plus the screen join — 4× the per-batch corpus read (and,
-        # on the lazy corpus side, 4 full corpus re-scores per batch).
-        # Survivors are ≤ |batch| assigned rows; one bounded
-        # checkpoint makes corpus/index bytes flow exactly once per
-        # batch. Results unchanged (the screen/prune logic is
-        # untouched; test- and oracle-pinned).
-        surv = similarity._corpus_screen_survivors(
-            an, base, threshold, id_col
-        ).localCheckpoint(eager=True)
-        kept = similarity._dominance_prune(surv, threshold, id_col)
+            base = base.unionByName(idx.select(*base.columns))
+        an, touched, kept = similarity._semantic_screen(
+            similarity._semantic_assign(batch, cents, vec_col, id_col),
+            base,
+            threshold,
+            id_col,
+        )
         kept_full = an.join(kept.select(id_col), id_col, "left_semi")
         # batch-partition append nested under the prune key: only
         # this batch's rows are written, nothing stored is read back —
@@ -691,9 +662,9 @@ def stream_substring_ingest(
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
         idx = batch.sparkSession.read.parquet(index_path)
-        flagged = dedup_ops._substring_screen(
-            batch, idx, id_col, text_col, n_words
-        ).localCheckpoint(eager=True)  # two consumers below
+        flagged = materialize(  # two consumers below
+            dedup_ops._substring_screen(batch, idx, id_col, text_col, n_words)
+        )
         rebuilt = dedup_ops._rebuild_docs(flagged, id_col, emit_text=True)
         append_batch_partition(rebuilt, out_path, batch_id)
         # kept rows are unique per digest (rn=1), so this carries each
@@ -821,9 +792,9 @@ def stream_neardup_ingest(
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
         cb = batch.sparkSession.read.parquet(corpus_bands_path)
-        new_bands = dedup_ops.minhash_bands(
-            batch, id_col, text_col
-        ).localCheckpoint(eager=True)
+        new_bands = materialize(
+            dedup_ops.minhash_bands(batch, id_col, text_col)
+        )
         verdict, append_bands = _neardup_lane(
             batch, batch_id, cb, new_bands, stream_bands_path, id_col,
             text_col,
@@ -917,7 +888,6 @@ def stream_bm25_ingest(
                 batch.sparkSession, postings,
                 os.path.join(index_path, "postings"),
                 keys=["term", id_col], partition_col="term_bucket",
-                partition_width=n_buckets,
             ),
             *text_ops._bm25_side_writes(
                 batch, index_path, batch_id, id_col, text_col
@@ -1131,9 +1101,9 @@ def stream_curation_ingest(
         # overlap as concurrent jobs (round 16, guide §2.6)
         bks_rows, new_bands = run_jobs_concurrently(
             lambda: bh.select("hb").distinct().collect(),
-            lambda: dedup_ops.minhash_bands(
-                batch, id_col, text_col
-            ).localCheckpoint(eager=True),
+            lambda: materialize(
+                dedup_ops.minhash_bands(batch, id_col, text_col)
+            ),
         )
         bks = sorted(r["hb"] for r in bks_rows)
         # only batches before this one on both prior reads (round-16

@@ -291,3 +291,34 @@ def test_sq8_topk_broadcasts_candidates_no_global_sort(spark, sf_dir):
 
     exchanges = re.findall(r"(?m)^.*Exchange.*$", plan)
     assert all("BroadcastExchange" in e for e in exchanges), exchanges
+
+
+def test_corpus_screen_joins_on_cell_without_cartesian(spark, sf_dir):
+    """The semantic screen's corpus join runs on materialized frames,
+    outside every plan a registered query returns, so the blanket
+    no-cartesian sweep cannot see it: pin here that it is an equi-join
+    on ``cell`` and never a nested loop."""
+    import re
+
+    from real_time_stock_market_data_pipeline__spark.operators import (
+        similarity,
+    )
+
+    embs = load_table(spark, sf_dir, "embeddings")
+    cents = similarity.ivf_centroids(embs, 4)
+    new = similarity._semantic_assign(
+        embs.filter(F.col("vec_id") % 4 == 0), cents, "embedding", "vec_id"
+    )
+    corpus = similarity._semantic_assign(
+        embs.filter(F.col("vec_id") % 4 != 0), cents, "embedding", "vec_id"
+    )
+    plan = _plan(
+        similarity._corpus_screen_survivors(new, corpus, 0.3, "vec_id")
+    )
+    assert re.search(
+        r"(SortMergeJoin|BroadcastHashJoin|ShuffledHashJoin) "
+        r"\[cell#\d+\], \[cell#\d+\], Inner",
+        plan,
+    ), plan
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
