@@ -6,21 +6,30 @@
 - K5/K6 warehouse staged MERGE upsert + DDL-if-absent:
   `load_to_snowflake.py:71-97,193-241` — engine-side equivalent is
   `merge_upsert_parquet`, the one keyed-merge sink (read-merge-swap on
-  a flat or partitioned parquet directory; on a real deployment the
-  same `relational.merge_upsert` feeds a Delta / Iceberg `MERGE INTO`
-  or a JDBC staging table)
+  a parquet directory laid out flat, as flat slices, or as hive
+  partitions; on a real deployment the same `relational.merge_upsert`
+  feeds a Delta / Iceberg `MERGE INTO` or a JDBC staging table)
 - S7 input-availability gate: `check_minio_file.py:47-75`
 
 Every directory this module replaces (a merged table or partition, a
 compacted table or prune directory) goes through one stage → swap →
 heal primitive (`_swap`, `_heal`), so a killed write heals on the
 next call.
+
+A keyed merge rewrites only what its batch touches when the table is
+cut into slices. A flat table is the one-slice case: every merge
+rewrites all of it. Flat slices (``slice_by``) keep every file in the
+table root, named ``<token>~<file>`` after the slice it holds, so any
+reader of ``<table>/*.parquet`` sees the table unchanged; hive
+partitions (``partition_col``) put each slice in a ``<col>=<value>``
+directory, for tables whose readers prune on that column.
 """
 
 from __future__ import annotations
 
 import glob
 import os
+import re
 import shutil
 from urllib.parse import urlsplit
 
@@ -316,12 +325,65 @@ def _heal(path: str) -> None:
                 _swap(old, d)
 
 
+#: a slice token leads a data file's name in the table root, so it may
+#: not start with ``_`` or ``.`` (Spark would skip the file), hold the
+#: ``~`` separator, or hold a character Spark escapes in a partition
+#: directory name
+_SLICE_TOKEN = re.compile(r"[0-9A-Za-z][0-9A-Za-z_-]*")
+
+#: the hidden column a sliced merge partitions its staged write by
+_SLICE_COL = "__slice"
+
+
+def _distinct_values(batch: DataFrame, col: str | F.Column) -> set:
+    """The distinct values of ``col`` over ``batch``, by one
+    single-stage job: ``select(col).collect()``, de-duplicated on the
+    driver. A ``distinct()`` would add a shuffle, and with adaptive
+    execution a second job, to save sending one value per row to the
+    driver."""
+    return {r[0] for r in batch.select(col).collect()}
+
+
+def _slice_of(name: str) -> str | None:
+    """The slice token of data file ``<token>~<file>``, or ``None`` for
+    a file written without one."""
+    token, sep, _ = name.partition("~")
+    return token if sep else None
+
+
+def _flatten_slices(stage: str) -> None:
+    """Move each data file of a sliced write, ``<_SLICE_COL>=<token>/
+    <file>``, to ``<token>~<file>`` in ``stage`` itself and delete the
+    slice directories with their checksum files. A token that cannot
+    lead a data file name raises before anything is swapped in."""
+    prefix = f"{_SLICE_COL}="
+    for d in sorted(os.listdir(stage)):
+        if not d.startswith(prefix):
+            continue
+        token = d[len(prefix):]
+        if not _SLICE_TOKEN.fullmatch(token):
+            raise ValueError(
+                f"slice token {token!r} of {stage} is not "
+                f"{_SLICE_TOKEN.pattern} (a NULL token reads as "
+                "__HIVE_DEFAULT_PARTITION__)"
+            )
+        src = os.path.join(stage, d)
+        for name in sorted(os.listdir(src)):
+            if _is_data_name(name):
+                os.rename(
+                    os.path.join(src, name),
+                    os.path.join(stage, f"{token}~{name}"),
+                )
+        shutil.rmtree(src)
+
+
 def merge_upsert_parquet(
     spark: SparkSession,
     batch: DataFrame,
     path: str,
     keys: list[str],
     partition_col: str | None = None,
+    slice_by: F.Column | None = None,
 ) -> None:
     """K5/T10: idempotent keyed upsert into a parquet directory, the one
     MERGE sink of both layers.
@@ -339,27 +401,67 @@ def merge_upsert_parquet(
     or that feeds it to another sink too, passes a materialized frame
     (``session.materialize``) to compute it once.
 
-    A flat table is the one-partition case. With ``partition_col`` the
-    table is laid out ``partitionBy(partition_col)`` and a batch reads
-    and rewrites only the partitions it touches: their values are
-    collected (bounded — for the semantic index, at most the centroid
-    count), the read is pruned to them, and each touched partition
-    directory is swapped on its own. The rest of the table, including
-    files in its root such as an index sidecar, is never read or
-    written, so ingestion cost tracks touched volume, not table size.
-    Only a table that does not exist yet is swapped in whole.
+    A flat table is the one-slice case: nothing is collected, the
+    whole table is read, merged and rewritten. The two other layouts
+    cut the table into slices and a batch reads and rewrites only the
+    slices it touches, so ingestion cost tracks touched volume, not
+    table size. The batch's slice values are collected first by one
+    single-stage job (:func:`_distinct_values`), so a batch should
+    hold at most a micro-batch's rows. The slice of a row must follow
+    from its ``keys``, so that a key never has rows in two slices.
+
+    - ``slice_by``, a Column giving a short string token per row
+      (``_SLICE_TOKEN``; e.g. ``F.date_format("window_start",
+      "yyyyMMddHH")`` for event-time hours): the table stays flat and
+      each data file is named ``<token>~<file>`` after its slice. The
+      merge reads the files of the touched slices and every file
+      without a token (a table written flat converges on its first
+      sliced merge), writes the result ``partitionBy`` a hidden column
+      into the stage, flattens it (:func:`_flatten_slices`),
+      hard-links every untouched file into the stage and swaps the
+      table whole. The files hold no slice column, so readers of the
+      table do not change; an untouched file keeps its inode and
+      mtime. Hard links need the stage and the table on one
+      filesystem, which their sibling paths give on a local disk.
+    - ``partition_col``: the table is laid out
+      ``partitionBy(partition_col)``, the read is pruned to the
+      touched values, and each touched partition directory is swapped
+      on its own. The rest of the table, including files in its root
+      such as an index sidecar, is never read or written. Only a table
+      that does not exist yet is swapped in whole.
 
     Crash safety: the staging name is derived from ``path``, and the
     call first heals whatever a killed earlier call left
     (:func:`_heal`), so a replay of the same batch after a crash in
     any swap window leaves every key exactly once.
     """
+    if partition_col is not None and slice_by is not None:
+        raise ValueError("pass partition_col or slice_by, not both")
     _heal(path)
-    scope = None
-    if partition_col is not None:
-        touched = [
-            r[0] for r in batch.select(partition_col).distinct().collect()
-        ]
+    stage = _hidden(path, "stage")
+    current, keep = None, []
+    if slice_by is not None:
+        touched = _distinct_values(batch, slice_by)
+        if not touched:
+            return
+        files = sorted(
+            n for n in (os.listdir(path) if os.path.isdir(path) else [])
+            if _is_data_name(n) and os.path.isfile(os.path.join(path, n))
+        )
+        if files:
+            # the batch's columns in the table's order, from a footer: the
+            # read below takes the batch's types and needs no Spark job
+            # to infer a schema
+            import pyarrow.parquet as pq
+
+            names = pq.read_schema(os.path.join(path, files[0])).names
+            batch = batch.select(*names)
+        keep = [n for n in files if _slice_of(n) not in touched | {None}]
+        read = [os.path.join(path, n) for n in files if n not in keep]
+        if read:
+            current = spark.read.schema(batch.schema).parquet(*read)
+    elif partition_col is not None:
+        touched = _distinct_values(batch, partition_col)
         if not touched:
             return
         # NULL partition values land in __HIVE_DEFAULT_PARTITION__, which
@@ -371,15 +473,22 @@ def merge_upsert_parquet(
         scope = F.col(partition_col).isin(non_null)
         if len(non_null) < len(touched):
             scope = scope | F.col(partition_col).isNull()
-    if input_ready(spark, path):
+        if input_ready(spark, path):
+            current = spark.read.parquet(path).filter(scope)
+    elif input_ready(spark, path):
         current = spark.read.parquet(path)
-        if scope is not None:
-            current = current.filter(scope)
+    if current is not None:
         merged = merge_upsert(current, batch.select(*current.columns), keys)
     else:
         merged = batch
-    stage = _hidden(path, "stage")
-    if partition_col is None:
+    if slice_by is not None:
+        merged.withColumn(_SLICE_COL, slice_by).write.mode(
+            "overwrite"
+        ).partitionBy(_SLICE_COL).parquet(stage)
+        _flatten_slices(stage)
+        for name in keep:
+            os.link(os.path.join(path, name), os.path.join(stage, name))
+    elif partition_col is None:
         merged.write.mode("overwrite").parquet(stage)
     else:
         # repartition on the partition key so each touched directory

@@ -259,6 +259,10 @@ def stream_realtime_metrics(
     ``stamp_last_updated`` adds the reference's P14 audit column
     (`realtime_load_to_snowflake.py:143`); off by default because a
     now() stamp is inherently unreproducible.
+    The target is a flat parquet table cut into event-time hour slices
+    (``merge_upsert_parquet``'s ``slice_by``): files are named
+    ``<yyyyMMddHH>~<file>`` and a micro-batch rewrites only the hours
+    its windows start in.
     """
     watermarked = source.withWatermark(ts_col, watermark)
     spark = source.sparkSession
@@ -273,10 +277,13 @@ def stream_realtime_metrics(
         )
         if stamp_last_updated:
             out = out.withColumn("last_updated", F.current_timestamp())
-        # both merge legs read the batch: compute the metrics once
+        # both merge legs read the batch: compute the metrics once. A
+        # live feed's micro-batch touches the hour or two its ticks fall
+        # in, so hour slices leave older hours' files as they are
         merge_upsert_parquet(
             spark, materialize(out), target_path,
             keys=["symbol", "window_start"],
+            slice_by=F.date_format("window_start", "yyyyMMddHH"),
         )
 
     return _start_foreach_batch(

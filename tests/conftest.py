@@ -50,6 +50,10 @@ def crash_at(monkeypatch):
 
     - ``crash_at("rename", n)``: the n-th ``os.rename`` raises before
       it moves anything;
+    - ``crash_at("swap", n)``: the n-th ``os.rename`` of a staged
+      ``.<name>.stage`` directory into place raises, so the live
+      directory is already at its ``.old`` sibling (the window
+      between a swap's two renames, whatever renames came before);
     - ``crash_at("cleanup")``: the first delete of a superseded
       ``.old`` directory raises before it deletes.
 
@@ -59,12 +63,13 @@ def crash_at(monkeypatch):
     import shutil
 
     def arm(op: str, n: int = 1) -> type[InjectedCrash]:
-        mod, name = (os, "rename") if op == "rename" else (shutil, "rmtree")
+        mod, name = (shutil, "rmtree") if op == "cleanup" else (os, "rename")
         real = getattr(mod, name)
         left = [n]
+        suffix = {"rename": "", "swap": ".stage", "cleanup": ".old"}[op]
 
         def fake(path, *args, **kwargs):
-            if op == "rename" or str(path).endswith(".old"):
+            if str(path).endswith(suffix):
                 left[0] -= 1
                 if left[0] == 0:
                     raise InjectedCrash(f"killed at {op} #{n}")

@@ -451,6 +451,90 @@ def test_partitioned_merge_heals_each_crash_window(
     assert _no_swap_debris(workdir)
 
 
+# ---------------------------------------------------------------------------
+# merge_upsert_parquet with slice_by (the speed layer's hour-sliced target)
+# ---------------------------------------------------------------------------
+
+_SLICED_SCHEMA = "symbol string, window_start timestamp, v double"
+
+
+def _sliced_merge(spark, rows, path):
+    from pyspark.sql import functions as F
+
+    sinks.merge_upsert_parquet(
+        spark, spark.createDataFrame(rows, _SLICED_SCHEMA), path,
+        keys=["symbol", "window_start"],
+        slice_by=F.date_format("window_start", "yyyyMMddHH"),
+    )
+
+
+def _sliced_rows(spark, path):
+    return sorted(tuple(r) for r in spark.read.parquet(path).collect())
+
+
+def _slice_inodes(path, token):
+    return {
+        n: os.stat(os.path.join(path, n)).st_ino
+        for n in os.listdir(path)
+        if n.startswith(f"{token}~")
+    }
+
+
+#: the seed fills hours 10, 11 and 12; the batch updates a key of hour
+#: 10, inserts into hour 12 and leaves hour 11 alone
+_SLICED_SEED = [
+    ("AAA", _dt(2024, 1, 2, 10, 10), 1.0),
+    ("BBB", _dt(2024, 1, 2, 10, 20), 2.0),
+    ("AAA", _dt(2024, 1, 2, 11, 30), 3.0),
+    ("AAA", _dt(2024, 1, 2, 12, 0), 4.0),
+]
+_SLICED_BATCH = [
+    ("AAA", _dt(2024, 1, 2, 10, 10), 10.0),
+    ("CCC", _dt(2024, 1, 2, 12, 40), 5.0),
+]
+
+#: crash point -> the injected kill and the hidden sibling it leaves.
+#: The batch rewrites two slices, so its stage flatten moves at least
+#: two files: rename 2 is still inside the flatten, with one file moved
+_SLICED_CRASHES = {
+    "during_stage_flatten": (("rename", 2), ".sliced.stage"),
+    "between_swap_renames": (("swap", 1), ".sliced.old"),
+    "after_swap_before_cleanup": (("cleanup", 1), ".sliced.old"),
+}
+
+
+@pytest.mark.parametrize("point", sorted(_SLICED_CRASHES))
+def test_sliced_merge_heals_each_crash_window(
+    spark, workdir, crash_at, point
+):
+    """A kill at each window of the sliced merge (inside the stage
+    flatten, between the swap's two renames, before the superseded
+    table is deleted), then a replay of the same batch: every key
+    lands once, the rows equal a run with no crash, no hidden sibling
+    is left, and the untouched hour's files keep their inodes."""
+    clean = os.path.join(workdir, "clean")
+    _sliced_merge(spark, _SLICED_SEED, clean)
+    _sliced_merge(spark, _SLICED_BATCH, clean)
+    want = _sliced_rows(spark, clean)
+    assert len(want) == 5
+
+    path = os.path.join(workdir, "sliced")
+    _sliced_merge(spark, _SLICED_SEED, path)
+    untouched = _slice_inodes(path, "2024010211")
+    assert untouched
+
+    kill, left = _SLICED_CRASHES[point]
+    with pytest.raises(crash_at(*kill)):
+        _sliced_merge(spark, _SLICED_BATCH, path)
+    assert os.path.isdir(os.path.join(workdir, left))
+    _sliced_merge(spark, _SLICED_BATCH, path)
+    got = _sliced_rows(spark, path)
+    assert got == want
+    assert len({(r[0], r[1]) for r in got}) == len(got)
+    assert _no_swap_debris(workdir)
+    assert _slice_inodes(path, "2024010211") == untouched
+
+
 def test_nested_compaction_crash_mid_swap_heals_at_wiring(
     spark, workdir, crash_at
 ):

@@ -488,6 +488,126 @@ def test_partitioned_merge_upsert_parquet_touches_only_batch_cells(
     assert spark.read.parquet(path).count() == 5
 
 
+def test_touched_values_collect_in_one_job(spark):
+    """The touched slice or partition values of a batch come from one
+    single-stage job, de-duplicated on the driver: no distinct()
+    shuffle, which adaptive execution would run as a second job."""
+    batch = spark.range(100).select(
+        F.when(F.col("id") % 4 == 3, None)
+        .otherwise(F.col("id") % 4)
+        .alias("cell")
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("touched_values", "touched-value collect")
+    try:
+        assert sinks._distinct_values(batch, "cell") == {0, 1, 2, None}
+        assert len(sc.statusTracker().getJobIdsForGroup("touched_values")) == 1
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+_SLICED_SCHEMA = "symbol string, window_start timestamp, v double"
+
+
+def _sliced(spark, rows, path, hourly=True):
+    sinks.merge_upsert_parquet(
+        spark, spark.createDataFrame(rows, _SLICED_SCHEMA), path,
+        keys=["symbol", "window_start"],
+        slice_by=F.date_format("window_start", "yyyyMMddHH") if hourly else None,
+    )
+
+
+def _file_ids(path, prefix=""):
+    """{data file name: (inode, mtime)} of a flat table's root."""
+    return {
+        n: (st.st_ino, st.st_mtime_ns)
+        for n in os.listdir(path)
+        if n.startswith(prefix) and n.endswith(".parquet")
+        for st in [os.stat(os.path.join(path, n))]
+    }
+
+
+def _sorted_rows(spark, path):
+    return sorted(tuple(r) for r in spark.read.parquet(path).collect())
+
+
+def test_sliced_merge_rewrites_only_touched_slices(spark, tmp_path):
+    """A batch that touches hour slice A leaves every file of slice B
+    with its inode and mtime, merges A on the key, and a replay of the
+    same batch changes neither the rows nor slice B."""
+    from datetime import datetime
+
+    path = str(tmp_path / "t")
+    a, b = datetime(2024, 1, 2, 10, 10), datetime(2024, 1, 2, 11, 10)
+    _sliced(spark, [("X", a, 1.0), ("Y", a, 2.0), ("X", b, 3.0)], path)
+    assert {n.split("~")[0] for n in _file_ids(path)} == {
+        "2024010210", "2024010211"
+    }
+    slice_b = _file_ids(path, "2024010211~")
+    batch = [("X", a, 5.0), ("Z", datetime(2024, 1, 2, 10, 50), 6.0)]
+    want = [("X", a, 5.0), ("X", b, 3.0), ("Y", a, 2.0),
+            ("Z", datetime(2024, 1, 2, 10, 50), 6.0)]
+    for _ in range(2):  # apply + replay
+        _sliced(spark, batch, path)
+        assert _sorted_rows(spark, path) == want
+        assert _file_ids(path, "2024010211~") == slice_b
+
+
+def test_sliced_merge_converges_a_flat_table(spark, tmp_path):
+    """A table written by the unsliced merge (``part-*`` names) is
+    rewritten into slice files by the first sliced merge, with the
+    rows and the columns the unsliced merge gives: no hidden slice
+    column reaches the files."""
+    from datetime import datetime
+
+    seed = [("X", datetime(2024, 1, 2, 9, 50), 1.0),
+            ("Y", datetime(2024, 1, 2, 11, 0), 2.0)]
+    batch = [("X", datetime(2024, 1, 2, 9, 50), 3.0),
+             ("Z", datetime(2024, 1, 2, 11, 20), 4.0)]
+    flat, sliced = str(tmp_path / "flat"), str(tmp_path / "sliced")
+    for path in (flat, sliced):
+        _sliced(spark, seed, path, hourly=False)
+    assert all(n.startswith("part-") for n in _file_ids(sliced))
+    _sliced(spark, batch, flat, hourly=False)
+    _sliced(spark, batch, sliced)
+    names = _file_ids(sliced)
+    assert {n.split("~")[0] for n in names} == {"2024010209", "2024010211"}
+    assert _sorted_rows(spark, sliced) == _sorted_rows(spark, flat)
+    assert spark.read.parquet(sliced).columns == spark.read.parquet(flat).columns
+
+
+def test_stream_drains_in_later_hour_leave_earlier_hours(spark, tmp_path):
+    """Two ``stream_realtime_metrics`` drains whose ticks fall in
+    different hours: the second writes its hour's slice and leaves
+    every file of the first drain's hours untouched."""
+    from datetime import datetime
+
+    src, target = str(tmp_path / "src"), str(tmp_path / "m")
+
+    def drain(rows):
+        spark.createDataFrame(
+            rows, "symbol string, ts timestamp, price double"
+        ).coalesce(1).write.mode("append").parquet(src)
+        pipeline.stream_realtime_metrics(
+            pipeline.read_file_stream(spark, src),
+            target_path=target,
+            checkpoint_path=str(tmp_path / "c"),
+            available_now=True,
+        ).awaitTermination()
+
+    drain([("AAA", datetime(2024, 1, 2, 10, 2), 10.0),
+           ("AAA", datetime(2024, 1, 2, 10, 12), 11.0)])
+    first = _file_ids(target)
+    assert {n.split("~")[0] for n in first} == {"2024010209", "2024010210"}
+    drain([("AAA", datetime(2024, 1, 2, 12, 31), 12.0)])
+    after = _file_ids(target)
+    assert {n: after.get(n) for n in first} == first
+    assert {n.split("~")[0] for n in after} == {
+        "2024010209", "2024010210", "2024010212"
+    }
+
+
 def test_compact_batch_partitions_flat_and_replay_safety(spark, tmp_path):
     """Flat bp table: folding the committed prefix consolidates into
     bp=-1, keeps newer partitions byte-identical, preserves rows, and
