@@ -9,7 +9,7 @@ approximate:
 - **Column names match by construction** — every computed column is
   aliased identically in the Spark plan and the SQL text.
 - **Float aggregates are decimal-exact**: sums/averages go through a
-  DECIMAL view and back to DOUBLE (see `operators.metrics._exact_avg`),
+  DECIMAL view and back to DOUBLE (see `operators.metrics._window_stats`),
   so both engines produce bit-identical doubles regardless of
   partitioning or evaluation order.
 - **All hashes are engine-portable** (md5/sha256 of explicit strings).
@@ -58,10 +58,10 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 #: normalized text (operators.dedup.normalized_text) in DuckDB SQL
 _NORM = r"regexp_replace(lower(trim({col})), '\s+', ' ', 'g')"
 
-#: exact average: decimal-sum / count, identical to metrics._exact_avg
+#: exact average: decimal-sum / count, identical to metrics._window_stats
 _EXAVG = "CAST(sum(CAST({col} AS DECIMAL(18,6))) AS DOUBLE) / count(*)"
 
-#: exact sample stddev, identical to metrics._exact_stddev_samp
+#: exact sample stddev, identical to metrics._window_stats
 _EXSTD = (
     "CASE WHEN count(*) >= 2 THEN sqrt(greatest(("
     "CAST(sum(CAST({col} AS DECIMAL(18,6)) * CAST({col} AS DECIMAL(18,6))) AS DOUBLE)"

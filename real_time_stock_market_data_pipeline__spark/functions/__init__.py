@@ -10,7 +10,6 @@ from real_time_stock_market_data_pipeline__spark.functions.cleaning import (  # 
     cast_tick_types,
     date_parts,
     event_time_from_nanos,
-    flatten_window,
     json_int_field,
     normalize_symbol,
     pct_change,

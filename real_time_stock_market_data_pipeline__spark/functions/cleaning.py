@@ -5,7 +5,6 @@ Reference semantics being re-expressed (all from `/root/reference`):
 - P1–P3 casts: `src/spark/jobs/spark_stream_processor.py:130-137`
 - P4 `%`-strip: `spark_stream_processor.py:133`
 - P5 daily change arithmetic: `spark_batch_processor.py:101`
-- P6/P7 window-struct flatten + drop: `spark_stream_processor.py:177-179`
 - P11/P12 symbol null/empty filter + trim:
   `src/snowflake/realtime_load_to_snowflake.py:130,145,177-178`
 - P13 date normalization: `src/snowflake/load_to_snowflake.py:156`
@@ -80,16 +79,6 @@ def pct_change(open_col: str | Column, close_col: str | Column, scale: int = 4) 
     o = F.col(open_col) if isinstance(open_col, str) else open_col
     c = F.col(close_col) if isinstance(close_col, str) else close_col
     return F.round(F.when(o != 0, (c - o) / o * 100), scale)
-
-
-def flatten_window(df: DataFrame, prefix: str = "window") -> DataFrame:
-    """P6/P7: extract ``window.start``/``window.end`` and drop the struct
-    (`spark_stream_processor.py:177-179`)."""
-    return (
-        df.withColumn(f"{prefix}_start", F.col(f"{prefix}.start"))
-        .withColumn(f"{prefix}_end", F.col(f"{prefix}.end"))
-        .drop(prefix)
-    )
 
 
 def normalize_symbol(df: DataFrame, col: str = "symbol") -> DataFrame:

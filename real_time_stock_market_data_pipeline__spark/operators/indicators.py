@@ -50,7 +50,7 @@ def _roll_avg(col: F.Column, w) -> F.Column:
 
 def _roll_std(col: F.Column, w) -> F.Column:
     """Exact rolling sample stddev from DECIMAL sums of x and x²
-    (same derivation as ``metrics._exact_stddev_samp``, windowed)."""
+    (same derivation as ``metrics._window_stats``, windowed)."""
     d = _dec(col)
     n = F.count(F.lit(1)).over(w)
     sx = F.sum(d).over(w).cast("double")

@@ -15,10 +15,21 @@ checks it directly against a DuckDB oracle. Window starts are aligned to
 the Unix epoch in UTC, exactly like ``F.window``'s own alignment, which
 makes the oracle expressible as epoch-bucket arithmetic.
 
-Scale note: both aggregations shuffle on (symbol, window) and the join
-re-shuffles on (symbol, window_start) — at 1000 executors the 15m/1h agg
-outputs are tiny relative to input (state ≈ symbols × windows), so the
-join is cheap; AQE picks broadcast when one side fits.
+J1 needs no join here. Only window starts aligned to both slides
+survive the reference's inner join, and a 15m window lies inside the 1h
+window with the same start, so both windows are sub-aggregates of one
+group per (symbol, 1h window start) — the shared sub-aggregates of Li
+et al., "No Pane, No Gain" (SIGMOD Record 2005). ``realtime_metrics``
+computes them in one aggregate, and a non-empty 15m window stands for
+the join's match. That also makes the window struct's flatten (P6/P7)
+unnecessary: the window bounds are computed from the start.
+
+Scale note: one scan of the ticks and one shuffle on (symbol, window
+start). Each tick expands into the 6 1h windows that hold it before the
+partial aggregate, so the shuffle carries at most one partial row per
+(symbol, window) per task — at 1000 executors that is tiny relative to
+the input (state ≈ symbols × windows). Two aggregates and their join
+cost two scans, two shuffles and a broadcast.
 """
 
 from __future__ import annotations
@@ -26,80 +37,43 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from real_time_stock_market_data_pipeline__spark.functions.cleaning import (
-    flatten_window,
-)
+#: the window specs in microseconds: a 15m/5m and a 1h/10m window
+_US_15M = 15 * 60_000_000
+_US_1H = 60 * 60_000_000
+_US_10M = 10 * 60_000_000
 
 
-def _exact_avg(price_col: str) -> F.Column:
-    """Mean via an exact DECIMAL sum divided by the count.
+def _ident(name: str) -> str:
+    """Backtick-quoted SQL identifier for column ``name``."""
+    return "`" + name.replace("`", "``") + "`"
 
-    A native ``avg(double)`` is order-dependent (float addition is not
-    associative), so its last ulp changes with partitioning — bad for a
-    100 TB re-plan and unmatchable by an external oracle. Summing a
-    DECIMAL(18,6) view is exact/associative; the single double division
-    at the end is IEEE-deterministic.
+
+def _window_stats(suffix: str, where: str, volume: bool) -> list[str]:
+    """The SQL of one window's three columns, over the group's rows
+    that pass ``where`` (a ``FILTER`` clause, or ``""`` for all), from
+    ``d``, the price as DECIMAL(18,6), ``dd`` = d·d and ``v``, the
+    volume as DECIMAL(18,4):
+
+    - the mean, Σd / n. A native ``avg(double)`` is order-dependent
+      (float addition is not associative), so its last ulp changes
+      with partitioning — bad for a 100 TB re-plan and unmatchable by
+      an external oracle. The DECIMAL sum is exact and associative;
+      the single double division at the end is IEEE-deterministic.
+    - the sample stddev, sqrt((Σdd − (Σd)²/n) / (n−1)) from the same
+      exact sums, clamped at 0 against cancellation and NULL for n<2
+      like ``stddev_samp``.
+    - the volume, Σv as BIGINT, or the row count n without a volume.
     """
-    total = F.sum(F.col(price_col).cast("decimal(18,6)")).cast("double")
-    return total / F.count(F.lit(1))
-
-
-def _exact_stddev_samp(price_col: str) -> F.Column:
-    """Sample stddev from exact DECIMAL sums of x and x².
-
-    sqrt((Σx² − (Σx)²/n) / (n−1)) with both sums exact, so the result is
-    partition-order-independent and replayable by any SQL engine. NULL
-    for n<2, matching ``stddev_samp``.
-    """
-    d = F.col(price_col).cast("decimal(18,6)")
-    n = F.count(F.lit(1))
-    sx = F.sum(d).cast("double")
-    sxx = F.sum(d * d).cast("double")
-    var = (sxx - sx * sx / n) / (n - F.lit(1))
-    # guard tiny negative from cancellation; NULL when n < 2
-    return F.when(n >= 2, F.sqrt(F.greatest(var, F.lit(0.0))))
-
-
-def windowed_metrics(
-    ticks: DataFrame,
-    duration: str,
-    slide: str,
-    suffix: str,
-    symbol_col: str = "symbol",
-    ts_col: str = "ts",
-    price_col: str = "price",
-    volume_col: str | None = None,
-) -> DataFrame:
-    """One sliding-window aggregate: avg price, sample-stddev volatility,
-    traded volume (A1/A2 + the re-enabled min/max of A3).
-
-    Volume is ``sum(volume)`` per the reference
-    (`spark_stream_processor.py:172`); ``volume_col=None`` falls back to
-    a row count for sources without a volume column (driver ``events``).
-    """
-    if volume_col is None:
-        vol = F.count(F.lit(1))
-    else:
-        vol = F.sum(F.col(volume_col).cast("decimal(18,4)")).cast("bigint")
-    agg = (
-        ticks.groupBy(
-            F.col(symbol_col).alias("symbol"),
-            F.window(F.col(ts_col), duration, slide).alias("window"),
-        )
-        .agg(
-            F.round(_exact_avg(price_col), 4).alias(f"moving_avg_price_{suffix}"),
-            F.round(_exact_stddev_samp(price_col), 4).alias(
-                f"price_volatility_{suffix}"
-            ),
-            vol.alias(f"total_volume_{suffix}"),
-            F.round(F.min(price_col), 4).alias(f"min_price_{suffix}"),
-            F.round(F.max(price_col), 4).alias(f"max_price_{suffix}"),
-        )
-    )
-    out = flatten_window(agg)
-    return out.withColumnsRenamed(
-        {"window_start": "window_start", "window_end": f"window_{suffix}_end"}
-    )
+    n = f"count(1){where}"
+    sx = f"CAST(sum(d){where} AS DOUBLE)"
+    sxx = f"CAST(sum(dd){where} AS DOUBLE)"
+    vol = f"CAST(sum(v){where} AS BIGINT)" if volume else n
+    return [
+        f"round({sx} / {n}, 4) AS moving_avg_price_{suffix}",
+        f"round(CASE WHEN {n} >= 2 THEN sqrt(greatest(({sxx} - {sx} * {sx}"
+        f" / {n}) / ({n} - 1), 0.0D)) END, 4) AS price_volatility_{suffix}",
+        f"{vol} AS total_volume_{suffix}",
+    ]
 
 
 def realtime_metrics(
@@ -115,29 +89,67 @@ def realtime_metrics(
     ``last_updated`` stamp (the streaming sink adds it, P14).
 
     Only window starts aligned to both slides (multiples of 10 min)
-    survive the inner join, mirroring the reference's emitted rows.
+    survive the reference's inner join, and a 15m window lies inside
+    the 1h window with the same start. So one pass computes both: each
+    tick goes to the 6 starts ``us - pmod(us, 10 min) - i·10 min``
+    (i in 0..5) of the 1h windows that hold it, one ``GROUP BY
+    (symbol, start)`` computes the 1h columns over all of a group's
+    rows and the 15m columns over those with ``us < start + 15 min``,
+    and ``HAVING`` a non-empty 15m window does the join's work. Window
+    starts follow ``F.window``'s epoch alignment in UTC; a NULL ``ts``
+    (which ``F.window`` drops) or a NULL symbol (which the join drops)
+    never reaches a group. ``ts`` is a TIMESTAMP, as every reader here
+    gives it.
+
+    Volume is ``sum(volume)`` per the reference
+    (`spark_stream_processor.py:172`); ``volume_col=None`` falls back to
+    a row count for sources without a volume column (driver ``events``).
+
+    The whole transform is one SQL text, analysed in one py4j round
+    trip: the streaming layer builds it once per micro-batch, where
+    building Column trees cost more driver time than Spark spent on
+    the batch.
     """
-    kwargs = dict(
-        symbol_col=symbol_col,
-        ts_col=ts_col,
-        price_col=price_col,
-        volume_col=volume_col,
+    dec = f"CAST({_ident(price_col)} AS DECIMAL(18,6))"
+    vol = (
+        "NULL"
+        if volume_col is None
+        else f"CAST({_ident(volume_col)} AS DECIMAL(18,4))"
     )
-    m15 = windowed_metrics(ticks, "15 minutes", "5 minutes", "15m", **kwargs)
-    m1h = windowed_metrics(ticks, "1 hour", "10 minutes", "1h", **kwargs)
-    joined = m15.join(m1h, ["symbol", "window_start"], "inner")
-    return joined.select(
-        "symbol",
-        "window_start",
-        "window_15m_end",
-        "window_1h_end",
-        "moving_avg_price_15m",
-        "moving_avg_price_1h",
-        "price_volatility_15m",
-        "price_volatility_1h",
-        "total_volume_15m",
-        "total_volume_1h",
+    w15 = " FILTER (WHERE in15)"
+    cols = [
+        c
+        for pair in zip(
+            _window_stats("15m", w15, volume_col is not None),
+            _window_stats("1h", "", volume_col is not None),
+        )
+        for c in pair
+    ]
+    sym, ts = _ident(symbol_col), _ident(ts_col)
+    last = f"us - pmod(us, {_US_10M})"
+    text = f"""
+SELECT symbol,
+  timestamp_micros(start) AS window_start,
+  timestamp_micros(start + {_US_15M}) AS window_15m_end,
+  timestamp_micros(start + {_US_1H}) AS window_1h_end,
+  {", ".join(cols)}
+FROM (
+  SELECT symbol, d, dd, v, start, us < start + {_US_15M} AS in15
+  FROM (
+    SELECT symbol, us, d, dd, v,
+      explode(sequence({last} - {_US_1H - _US_10M}, {last}, {_US_10M})) AS start
+    FROM (
+      SELECT {sym} AS symbol, unix_micros({ts}) AS us,
+        {dec} AS d, {dec} * {dec} AS dd, {vol} AS v
+      FROM {{ticks}}
+      WHERE {sym} IS NOT NULL AND {ts} IS NOT NULL
     )
+  )
+)
+GROUP BY symbol, start
+HAVING count(1){w15} > 0
+"""
+    return ticks.sparkSession.sql(text, ticks=ticks)
 
 
 def quantile_summary(

@@ -35,14 +35,17 @@ def merge_upsert(target: DataFrame, source: DataFrame, keys: list[str]) -> DataF
 
     Scale: the anti join shuffles on ``keys`` (or broadcasts when the
     source fits, the common incremental-batch case — AQE decides);
-    the union is free.
+    the union is free. The source's keys go to the anti join as they
+    are: a left-anti result does not depend on duplicate keys on the
+    right, so a ``distinct()`` there would only add a shuffle and a
+    job.
     """
     if set(target.columns) != set(source.columns):
         raise ValueError(
             f"merge_upsert: column sets differ: {sorted(target.columns)} vs "
             f"{sorted(source.columns)}"
         )
-    keep = target.join(source.select(*keys).distinct(), keys, "left_anti")
+    keep = target.join(source.select(*keys), keys, "left_anti")
     return keep.unionByName(source)
 
 

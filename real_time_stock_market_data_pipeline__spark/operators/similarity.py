@@ -2555,8 +2555,8 @@ def bq_dim_means(
 ) -> list[float]:
     """Per-dimension corpus means — the sign-quantization thresholds.
 
-    Decimal-exact (Σ DECIMAL(18,6) / count, the repo-wide `_exact_avg`
-    recipe), so the 64 doubles are identical no matter how the scan is
+    Decimal-exact (Σ DECIMAL(18,6) / count, the repo-wide
+    `metrics._window_stats` recipe), so the 64 doubles are identical no matter how the scan is
     partitioned and a SQL engine re-derives the same thresholds.
     One aggregation pass, 64-value driver fetch (bounded: dim scalars,
     like the k-centroid collects)."""

@@ -351,10 +351,17 @@ def _slice_of(name: str) -> str | None:
     return token if sep else None
 
 
+def _crc(d: str, name: str) -> str:
+    """The path of the Hadoop checksum file of data file ``d/name``."""
+    return os.path.join(d, f".{name}.crc")
+
+
 def _flatten_slices(stage: str) -> None:
     """Move each data file of a sliced write, ``<_SLICE_COL>=<token>/
-    <file>``, to ``<token>~<file>`` in ``stage`` itself and delete the
-    slice directories with their checksum files. A token that cannot
+    <file>``, to ``<token>~<file>`` in ``stage`` itself, with its
+    checksum file ``.<file>.crc`` as ``.<token>~<file>.crc`` (Spark's
+    local reader verifies a file against its checksum when one sits
+    next to it), and delete the slice directories. A token that cannot
     lead a data file name raises before anything is swapped in."""
     prefix = f"{_SLICE_COL}="
     for d in sorted(os.listdir(stage)):
@@ -374,6 +381,8 @@ def _flatten_slices(stage: str) -> None:
                     os.path.join(src, name),
                     os.path.join(stage, f"{token}~{name}"),
                 )
+                if os.path.exists(_crc(src, name)):
+                    os.rename(_crc(src, name), _crc(stage, f"{token}~{name}"))
         shutil.rmtree(src)
 
 
@@ -417,12 +426,13 @@ def merge_upsert_parquet(
       merge reads the files of the touched slices and every file
       without a token (a table written flat converges on its first
       sliced merge), writes the result ``partitionBy`` a hidden column
-      into the stage, flattens it (:func:`_flatten_slices`),
-      hard-links every untouched file into the stage and swaps the
-      table whole. The files hold no slice column, so readers of the
-      table do not change; an untouched file keeps its inode and
-      mtime. Hard links need the stage and the table on one
-      filesystem, which their sibling paths give on a local disk.
+      into the stage with one file per touched slice, flattens it
+      (:func:`_flatten_slices`), hard-links every untouched file and
+      its checksum into the stage and swaps the table whole. The files
+      hold no slice column, so readers of the table do not change; an
+      untouched file keeps its inode and mtime. Hard links need the
+      stage and the table on one filesystem, which their sibling paths
+      give on a local disk.
     - ``partition_col``: the table is laid out
       ``partitionBy(partition_col)``, the read is pruned to the
       touched values, and each touched partition directory is swapped
@@ -482,12 +492,21 @@ def merge_upsert_parquet(
     else:
         merged = batch
     if slice_by is not None:
-        merged.withColumn(_SLICE_COL, slice_by).write.mode(
-            "overwrite"
-        ).partitionBy(_SLICE_COL).parquet(stage)
+        # all rows of a slice go to one writer task, so each slice is
+        # one file whatever plan the anti-join gets (a broadcast
+        # anti-join keeps one read partition per file read, and the
+        # count would grow). A task per slice, up to one per core: a
+        # drain that touches hundreds of slices pays per-task overhead
+        # for each of them otherwise
+        writers = min(len(touched), spark.sparkContext.defaultParallelism)
+        merged.withColumn(_SLICE_COL, slice_by).repartition(
+            writers, F.col(_SLICE_COL)
+        ).write.mode("overwrite").partitionBy(_SLICE_COL).parquet(stage)
         _flatten_slices(stage)
         for name in keep:
             os.link(os.path.join(path, name), os.path.join(stage, name))
+            if os.path.exists(_crc(path, name)):
+                os.link(_crc(path, name), _crc(stage, name))
     elif partition_col is None:
         merged.write.mode("overwrite").parquet(stage)
     else:

@@ -9,9 +9,10 @@ foreachBatch parquet sink with checkpoint + 1-minute trigger (T3/T4/T7,
 (symbol, window_start) (T10).
 
 Spark restricts joining two *streaming* aggregations under append mode
-(SURVEY.md §2.3 J1), so the dual-window join runs **inside
-foreachBatch**: each micro-batch computes both windows batch-side
-(`operators.metrics.realtime_metrics`) and MERGEs the result by
+(SURVEY.md §2.3 J1), so the dual-window metrics run **inside
+foreachBatch**: each micro-batch computes both windows batch-side, in
+one aggregate built from one SQL text
+(`operators.metrics.realtime_metrics`), and MERGEs the result by
 (symbol, window_start) — which is exactly the reference's de-facto
 update semantics (its append stream re-emits windows and the MERGE
 deduplicates them). With an `availableNow` trigger and a single batch,
@@ -20,10 +21,11 @@ equivalence is oracle-checked by the driver (`stream_realtime_metrics`
 query) and asserted in tests.
 
 Scale: state is bounded by the watermark (T1); the per-batch windowed
-aggregation shuffles on (symbol, window) exactly like the batch plan;
-the upsert's anti-join runs on (symbol, window_start) — tiny relative
-to input. Checkpointing (T4) makes restarts exactly-once into the
-idempotent sink.
+aggregation scans the batch once and shuffles once on (symbol, window
+start), exactly like the batch plan; the upsert's anti-join runs on
+(symbol, window_start) — tiny relative to input — and writes one file
+per touched event-time hour. Checkpointing (T4) makes restarts
+exactly-once into the idempotent sink.
 """
 
 from __future__ import annotations
@@ -317,7 +319,7 @@ def stream_window_metrics_append(
         )
         .agg(
             # exact average (decimal sum / count, the package-wide rule
-            # from metrics._exact_avg): float avg state would make the
+            # from metrics._window_stats): float avg state would make the
             # result depend on arrival order, which no oracle — and no
             # restarted stream — could reproduce
             F.sum(F.round(F.col(price_col), 6).cast("decimal(18,6)")).alias(

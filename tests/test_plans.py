@@ -322,3 +322,13 @@ def test_corpus_screen_joins_on_cell_without_cartesian(spark, sf_dir):
     ), plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+
+
+def test_realtime_metrics_one_scan_one_shuffle_no_join(spark, sf_dir):
+    """Both window specs come from one aggregate over one scan of the
+    ticks: one file scan, one shuffle, and no join between the 15m and
+    the 1h windows."""
+    plan = _plan(driver_queries.q_realtime_metrics(spark, sf_dir))
+    assert plan.count("Scan parquet") == 1, plan
+    assert plan.count("Exchange") == 1, plan
+    assert "Join" not in plan, plan

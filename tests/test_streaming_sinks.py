@@ -577,6 +577,74 @@ def test_sliced_merge_converges_a_flat_table(spark, tmp_path):
     assert spark.read.parquet(sliced).columns == spark.read.parquet(flat).columns
 
 
+@pytest.mark.parametrize("broadcast_threshold", ["-1", None])
+def test_sliced_merge_writes_one_file_per_touched_slice(
+    spark, tmp_path, broadcast_threshold
+):
+    """Three merges that touch the same nine slices (more than the
+    writer tasks, which stop at one per core) leave each slice one data
+    file, whether the anti-join is a shuffle (threshold -1) or the
+    broadcast the default gives, which keeps one read partition per
+    file read."""
+    from collections import Counter
+    from datetime import datetime
+
+    conf = "spark.sql.autoBroadcastJoinThreshold"
+    before = spark.conf.get(conf)
+    if broadcast_threshold is not None:
+        spark.conf.set(conf, broadcast_threshold)
+    try:
+        path = str(tmp_path / "t")
+        for i in range(3):
+            _sliced(spark, [
+                (f"S{k}", datetime(2024, 1, 2, 10 + k % 9, 10 * i), float(i))
+                for k in range(18)
+            ], path)
+        files = Counter(n.split("~")[0] for n in _file_ids(path))
+        assert files == {f"20240102{h}": 1 for h in range(10, 19)}
+        assert len(_sorted_rows(spark, path)) == 54
+    finally:
+        spark.conf.set(conf, before)
+
+
+def test_sliced_merge_keeps_checksums(spark, tmp_path):
+    """Every slice file keeps its Hadoop checksum through the flatten
+    (slice 10, rewritten) and the hard link (slice 11, untouched by
+    the second merge), so a flipped byte in either file fails the read
+    instead of returning a changed value."""
+    import random
+    import struct
+    from datetime import datetime
+
+    path = str(tmp_path / "t")
+    # random mantissas: snappy finds no repeats, so each price is
+    # stored verbatim in its data page
+    rng = random.Random(7)
+    rows = [
+        (f"S{k}", datetime(2024, 1, 2, 10 + k % 2, k), rng.uniform(1, 1e3))
+        for k in range(40)
+    ]
+    _sliced(spark, rows, path)
+    _sliced(spark, rows[:1], path)  # touches slice 10 only
+    for name in _file_ids(path):
+        assert os.path.exists(os.path.join(path, f".{name}.crc")), name
+    for token, k in (("2024010210", 20), ("2024010211", 21)):
+        [name] = _file_ids(path, f"{token}~")
+        data = os.path.join(path, name)
+        blob = bytearray(open(data, "rb").read())
+        # flip the low mantissa byte of one stored price: a silent
+        # value change for a reader that does not check the checksum
+        at = blob.find(struct.pack("<d", rows[k][2]))
+        assert at > 0
+        blob[at] ^= 0x01
+        open(data, "wb").write(bytes(blob))
+        with pytest.raises(Exception, match="ChecksumException"):
+            spark.read.parquet(path).collect()
+        blob[at] ^= 0x01
+        open(data, "wb").write(bytes(blob))
+    assert len(_sorted_rows(spark, path)) == 40
+
+
 def test_stream_drains_in_later_hour_leave_earlier_hours(spark, tmp_path):
     """Two ``stream_realtime_metrics`` drains whose ticks fall in
     different hours: the second writes its hour's slice and leaves
